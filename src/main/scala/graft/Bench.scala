@@ -488,9 +488,10 @@ object Bench {
   /** Scale legs whose wall clocks have been the round-over-round
     * casualties of host contention windows: both r11 anchors measured
     * q_triangles at canary 0.49–0.55 under ambient load ~30 while
-    * direct counts ([[RunGraphCount]]) prove the workload exactly
-    * linear, and r10 did the same to q_label_prop. Rather than measure
-    * a number the canary will only flag post-hoc, a fragile leg whose
+    * direct counts ([[ScaleCounts]], pinned in ScaleLinearitySpec)
+    * prove the workload exactly linear, and r10 did the same to
+    * q_label_prop. Rather than measure a number the canary will only
+    * flag post-hoc, a fragile leg whose
     * START sees a depressed IDLE canary rate (sampled between legs,
     * while our own executors are quiescent — mid-bench loadavg is
     * useless here, it is dominated by our own just-finished 32
@@ -757,7 +758,7 @@ object Bench {
     CpuClock.register(spark.sparkContext)
     // instruments this call STARTED it must also stop (Bench.main owns
     // its own pair for the whole bench): otherwise a standalone caller
-    // (RunScale) leaves the canary spin thread burning a full core from
+    // (`Dev scale`) leaves the canary spin thread burning a full core from
     // measurement end until JVM exit and biases its later CPU reads
     val ownCanary = !Canary.isRunning
     val ownShm = !ShmWatch.isRunning
@@ -771,7 +772,7 @@ object Bench {
       Tables.embeddings(spark, d), "vec_id", "embedding",
       threshold = 0.9, dim = 64, bits = 64, bands = 4, numSigs = 32)
     // dev filter: SPARK_GRAFT_SCALE_ONLY=q_a,q_b measures only those
-    // points (RunScale); unset in driver runs
+    // points (`Dev scale`); unset in driver runs
     val only = sys.env.get("SPARK_GRAFT_SCALE_ONLY")
       .map(_.split(",").map(_.trim).toSet)
     val entries: Seq[(String, String => DataFrame)] =
@@ -1375,6 +1376,34 @@ object Bench {
     }
   }
 
+  /** Rather than bank a poisoned anchor, wait for the ambient load to
+    * clear the flag threshold: samples at most 20 s apart, at most
+    * min(240 s, 10% of the wall budget) in total (the last sleep is cut
+    * to the time left). The wait is charged against the same global
+    * budget, so a persistently-loaded host degrades to exactly the
+    * no-wait behavior plus one stderr warning. Returns the last load
+    * read. `load` and `sleepMs` are parameters so a spec can drive the
+    * loop on a fake clock. */
+  private[graft] def awaitQuietLoad(budgetSec: Long, load: () => Double,
+                                    sleepMs: Long => Unit): Double = {
+    var l = load()
+    if (l > LoadFlagThreshold) {
+      val waitMs = math.min(240L, budgetSec / 10L) * 1000L
+      System.err.println(f"[bench] ambient load $l%.1f > " +
+        f"$LoadFlagThreshold%.0f at start - waiting up to " +
+        s"${waitMs / 1000}s for a quieter window")
+      var waited = 0L
+      while (l > LoadFlagThreshold && waited < waitMs) {
+        val step = math.min(20000L, waitMs - waited)
+        sleepMs(step)
+        waited += step
+        l = load()
+      }
+      System.err.println(f"[bench] proceeding at ambient load $l%.1f")
+    }
+    l
+  }
+
   def main(args: Array[String]): Unit = {
     val benchStart = System.nanoTime()
     // GLOBAL wall-clock budget: r8's clean driver run took 2,100 s and
@@ -1386,52 +1415,13 @@ object Bench {
       sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_SEC", "2100").toInt
     val deadlineNanos = benchStart + budgetSec * 1000000000L
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
     // ambient load BEFORE any Spark work: the only load reading that
     // distinguishes external contention from our own worker threads.
     // r16 (VERDICT r15 item 3): a degraded START window inflates every
     // suite number at once — the r15 round compared a load-18 window
     // against a load-12.6 one and every untouched query read -18%.
-    // Rather than bank a poisoned anchor, wait (bounded: 20 s samples,
-    // at most min(240 s, 10% of the wall budget)) for the ambient load
-    // to clear the flag threshold; the wait is charged against the
-    // same global budget, so a persistently-loaded host degrades to
-    // exactly the old behavior plus one stderr warning.
-    val ambientLoad = {
-      var load = loadAvg1m
-      if (load > LoadFlagThreshold) {
-        val waitBudgetSec = math.min(240L, budgetSec / 10L)
-        val waitDeadline = System.nanoTime() + waitBudgetSec * 1000000000L
-        System.err.println(f"[bench] ambient load $load%.1f > " +
-          f"$LoadFlagThreshold%.0f at start - waiting up to " +
-          s"${waitBudgetSec}s for a quieter window")
-        while (load > LoadFlagThreshold && System.nanoTime() < waitDeadline) {
-          Thread.sleep(20000)
-          load = loadAvg1m
-        }
-        System.err.println(f"[bench] proceeding at ambient load $load%.1f")
-      }
-      load
-    }
-    val spark = SparkSession.builder()
-      .config("spark.local.dir", LocalDirs.dir)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
-      // bench numbers are measured THROUGH the occupied transport seam
-      // (delegating manager), same as Verify — recorded in the artifact
-      .config("spark.shuffle.manager",
-        "org.apache.spark.shuffle.graft.GraftShuffleManager")
-      // measured default from the codec/block-size matrix
-      // (SHUFFLE_TUNING.md): snappy/128k won the heavy-shuffle family
-      .config("spark.io.compression.codec", "snappy")
-      .config("spark.io.compression.snappy.blockSize", "128k")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val ambientLoad = awaitQuietLoad(budgetSec, () => loadAvg1m, Thread.sleep)
+    val spark = Sessions.bench()
     // three runs per query, min reported: the first run absorbs plan
     // compilation; min-of-3 defends against transient host stalls that a
     // min-of-2 inside one contended window cannot (round 3's 268 s

@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Direct-count workload models for the scale-leg adjudicators
-  * ([[RunGraphCount]], [[RunFuzzyCount]]) and `ScaleLinearitySpec`.
+/** Direct-count workload models for the scale-leg adjudication pinned
+  * in `ScaleLinearitySpec` (the r11-r12 graph and fuzzy-join counts).
   * Wall clocks on this host lie under hypervisor stalls; each heavy
   * leg's WORKLOAD, by contrast, is a deterministic function of the
   * fixture, countable in a few cheap aggregates. The ScaleFixture is

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,22 +9,8 @@ object Verify {
     // optional trailing query names: dump/check only those (dev loop);
     // the driver passes none and gets the full surface
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .config("spark.local.dir", LocalDirs.dir)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // every query's exchanges run through the occupied transport seam
-      // (the reference's plug point), not just ShuffleSeamSpec
-      .config("spark.shuffle.manager",
-        "org.apache.spark.shuffle.graft.GraftShuffleManager")
-      // measured default from the codec matrix (SHUFFLE_TUNING.md)
-      .config("spark.io.compression.codec", "snappy")
-      .config("spark.io.compression.snappy.blockSize", "128k")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the bench session: the oracle checks the plans Bench times
+    val spark = Sessions.bench()
     new java.io.File(outDir).mkdirs()
     val sel = if (only.isEmpty) SparkEntry.queries
               else SparkEntry.queries.view.filterKeys(only).toMap

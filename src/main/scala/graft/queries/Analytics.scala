@@ -34,6 +34,22 @@ object Analytics {
     * (ns input): both floor to the millisecond. */
   private def tsm: Column = date_trunc("millisecond", col("ts"))
 
+  /** Label-prop argmax as ONE scalar max over a packed BIGINT (r16,
+    * guide §4): (n desc, label asc) is the lexicographic order of
+    * n·2^32 + (Int.MaxValue − label). Any int label packs into the low
+    * 32 bits, so the max is bit-equivalent to a struct max_by without
+    * allocating/comparing a struct per row. n ≥ 2^31 overflows the
+    * long (a silent wrap with ANSI mode off, a bare ARITHMETIC_OVERFLOW
+    * with it on), so it raises a named error instead (the
+    * copurchaseEdges guard). An aggregate: the winning label, as int. */
+  private[graft] def argmaxLabel(n: Column, label: Column): Column = {
+    val low = lit(Int.MaxValue.toLong) - label
+    val packed = when(n < lit(1L << 31), n * lit(1L << 32) + low)
+      .otherwise(raise_error(lit(
+        "label-prop argmax: neighbor count exceeds 2^31 - 1")).cast("long"))
+    (lit(Int.MaxValue.toLong) - max(packed) % lit(1L << 32)).cast("int")
+  }
+
   /** Edit-distance (<=2) self-match on `p_name`, blocked on the composite
     * (p_size, length-band) key — see the `q_fuzzy_join` entry for the
     * recall proof. Exposed for the bounded-block-size spec.
@@ -737,18 +753,9 @@ object Analytics {
           // 2|E|-row pass per iteration.
           .repartition(col("src"))
           .groupBy(col("src"), col("label")).agg(count(lit(1)).as("n"))
-          // argmax as ONE scalar max over a packed BIGINT (r16, guide
-          // §4): (n desc, label asc) is the lexicographic order of
-          // n·2^32 + (Int.MaxValue − label) — labels are ints ≥ 0 and
-          // n ≤ 2^31, so the pack cannot overflow a long and the max
-          // is bit-equivalent to the old struct max_by, without
-          // allocating/comparing a struct per row.
           .groupBy(col("src"))
-          .agg(max(col("n") * lit(4294967296L) +
-            (lit(Int.MaxValue.toLong) - col("label"))).as("packed"))
-          .select(col("src").as("node"),
-            (lit(Int.MaxValue.toLong) - col("packed") % lit(4294967296L))
-              .cast("int").as("label"))
+          .agg(argmaxLabel(col("n"), col("label")).as("label"))
+          .select(col("src").as("node"), col("label"))
           .localCheckpoint()
       }
       labels.groupBy(col("label")).agg(count(lit(1)).as("n_members"))

@@ -11,6 +11,21 @@ class AnalyticsSpec extends SparkSuite {
 
   private def q(name: String) = SparkEntry.queries(name)(spark, sfDir)
 
+  test("label-prop packed argmax: n = 2^31 - 1 decodes, n = 2^31 raises") {
+    import spark.implicits._
+    def argmax(rows: Seq[(Int, Int, Long)]) =
+      rows.toDF("src", "label", "n").groupBy("src")
+        .agg(Analytics.argmaxLabel(col("n"), col("label")).as("label"))
+        .orderBy("src").collect().map(r => (r.getInt(0), r.getInt(1))).toSeq
+    val top = (1L << 31) - 1
+    // n desc first, then label asc; the boundary n must not wrap
+    assert(argmax(Seq((1, 7, top), (1, 3, top - 1), (2, 9, 2L), (2, 4, 2L),
+      (2, 0, 1L), (3, Int.MaxValue, top), (3, 0, 5L))) ==
+      Seq((1, 7), (2, 4), (3, Int.MaxValue)))
+    val e = intercept[Exception](argmax(Seq((1, 7, 1L << 31))))
+    assert(e.getMessage.contains("exceeds 2^31 - 1"), e.getMessage)
+  }
+
   test("funnel stages are monotonically non-increasing") {
     val r = q("q_funnel").collect().head
     val (s, sv, f) = (r.getLong(0), r.getLong(1), r.getLong(2))

@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 
 /** Promotes the bench's direct-count linearity adjudication
-  * (RunGraphCount / RunFuzzyCount, r11-r12) from a manual re-run into
+  * ([[ScaleCounts]], r11-r12) from a manual re-run into
   * a test: the ScaleFixture is disjoint-replica by construction —
   * replica r shifts every key space by r·span, so each replica's
   * co-purchase graph and (p_size, length-band) block structure is
