@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Observation, SparkSession}
 import org.apache.spark.sql.functions.{count, lit}
+import scala.util.control.NonFatal
 
 /** Benchmark main: runs every registered query against
   * `SPARK_GRAFT_SF_DIR` and prints ONE JSON line of per-query seconds.
@@ -73,7 +74,7 @@ object Bench {
           .write.format("noop").mode("overwrite").save()
       }).min
       Map("skew_minhash_hotkey" -> tDedup, "skew_join_salted" -> tJoin)
-    } catch { case e: Throwable =>
+    } catch { case NonFatal(e) =>
       System.err.println(s"[bench] skew fixture failed: $e")
       Map.empty
     }
@@ -175,7 +176,7 @@ object Bench {
     ndQ.awaitTermination()
     val nd = finishMeasure("neardup_index_serve", ndT0, ndQ)
     Some(s"$sess, $dedup, $upsert, $nd")
-  } catch { case scala.util.control.NonFatal(e) =>
+  } catch { case NonFatal(e) =>
     // NonFatal only: an OOM here must kill the bench, not bank an
     // artifact whose remaining numbers were measured on a dying JVM
     System.err.println(s"[bench] streaming metrics failed ($tag): $e")
@@ -190,12 +191,10 @@ object Bench {
     *
     * ORDERED BY JUDGING PRIORITY, not alphabetically: the global bench
     * budget truncates from the TAIL, so the points under active
-    * dispute (q_ann_lsh_big's host-window-sensitive sf3,
-    * q_triangles — whose committed anchors have never caught a
-    * canary-clean leg, r11 VERDICT item 2 — the last ≥1.0 exponent
-    * q_fuzzy_join, and the new composed q_pipeline_full) are measured
-    * first and a budget kill costs only the long-stable relational
-    * tail. */
+    * dispute (q_ann_lsh_big's host-window-sensitive sf3, q_triangles,
+    * the last ≥1.0 exponent q_fuzzy_join, and the new composed
+    * q_pipeline_full) are measured first and a budget kill costs only
+    * the long-stable relational tail. */
   val ScaleFamily = Seq(
     "q_ann_lsh_big", "q_triangles", "q_label_prop", "q_fuzzy_join",
     "q_dedup_semantic", "q_dup_clusters", "q_dedup_keep_best",
@@ -226,150 +225,13 @@ object Bench {
     * process CPU (getProcessCpuTime) covers task work + GC + codegen
     * with zero listener lag; `taskCpu` is Spark's own per-task
     * executorCpuTime from a listener, recorded alongside as the
-    * scheduler-eye view. CAUTION (round-9 finding): these CPU numbers
-    * distinguish idle-wait starvation (wall grows, CPU does not —
-    * activeCores collapses) but NOT hypervisor oversubscription, where
-    * descheduled vCPU time is billed to the running thread and wall,
-    * process-CPU and task-CPU inflate together. The [[Canary]] rate is
-    * the only stall signal that survives both failure modes; the CPU
-    * fields remain in the artifact as the work-accounting record. */
-  case class RunMeasure(wall: Double, cpu: Double, taskCpu: Double,
-                        canaryMops: Double = -1.0,
-                        frozenFrac: Double = -1.0,
-                        healedFromWall: Double = -1.0,
-                        healedFromFrac: Double = -1.0) {
-    /** Canary rate relative to the session's best-observed rate —
-      * the stall discriminator that survives hypervisor-level CPU
-      * accounting lies (see [[Canary]]). ~1.0 on a healthy host.
-      * `frozenFrac` carries a fraction computed at measurement time
-      * (the suite's per-query record) so a point built FROM the suite
-      * keeps the frac its run actually had instead of recomputing
-      * against a bestMops that moved. */
-    def canaryFrac: Double =
-      if (frozenFrac >= 0) frozenFrac
-      else if (canaryMops < 0 || Canary.bestMops <= 0) -1.0
-      else canaryMops / Canary.bestMops
+    * scheduler-eye view. Both are recorded, never used to filter runs:
+    * a stalled host inflates wall and CPU together, and a speed claim
+    * is settled by an adjacent A/B, not by this record. */
+  case class RunMeasure(wall: Double, cpu: Double, taskCpu: Double) {
     def util: Double =
       if (wall <= 0) 1.0
       else cpu / (wall * Runtime.getRuntime.availableProcessors())
-    /** Average concurrently-busy cores over the run — the stall
-      * discriminator that does NOT depend on how parallel the query
-      * is: a driver-bound phase keeps ~1 core busy, a parallel phase
-      * 10-30, but a host-starved process keeps ~0. */
-    def activeCores: Double = if (wall <= 0) 1.0 else cpu / wall
-  }
-
-  /** Host-stall speedometer. Round 9 established (jstack + /proc
-    * sampling during a "3 100 CPU-s" stage) that this sandbox is a VM
-    * whose hypervisor periodically oversubscribes the host: during
-    * those windows guest-side CPU accounting LIES — descheduled vCPU
-    * time is billed to whatever thread was running, so wall, process
-    * CPU and task CPU all inflate together (identical code measured an
-    * adjacency build at 2 s and 98 s with "busy" CPU both times),
-    * defeating the r8 wall-vs-cpu stall detector. The one observable a
-    * hypervisor cannot fake is forward progress: a calibrated spin
-    * thread counts xorshift iterations against wall time, and its rate
-    * collapses in exact proportion to how little real CPU the guest got.
-    * Each scale run records the canary's M ops/s during it; the session
-    * maximum is the hardware's true rate, and `rate/best <
-    * [[CanaryStallFrac]]` marks a stalled window (healthy runs sit at
-    * 0.52+ even when the suite saturates all 32 cores — the canary
-    * loses only its fair-share of the scheduler — while documented
-    * stalls are 5-30× slowdowns). */
-  private[graft] object Canary {
-    private val ops = new java.util.concurrent.atomic.AtomicLong(0L)
-    @volatile private var running = false
-    @volatile private var thread: Thread = null
-    @volatile private var cpuAccumSec: Double = 0.0
-    @volatile var bestMops: Double = 0.0
-    private def tmx = java.lang.management.ManagementFactory.getThreadMXBean
-
-    /** CPU seconds the canary spin thread itself has burned — subtracted
-      * from every process-CPU delta ([[CpuClock.benchCpuSec]]) so the
-      * instrument does not inflate the very exponent_cpu metric it
-      * exists to adjudicate (the canary burns ~1 core for the whole
-      * phase; uncorrected, that adds ~wall×1 core to each run's CPU and
-      * masks the activeCores starvation detector). */
-    def cpuSec: Double = {
-      val t = thread
-      val live =
-        if (t != null && t.isAlive)
-          try { val ns = tmx.getThreadCpuTime(t.getId)
-            if (ns > 0) ns / 1e9 else 0.0 }
-          catch { case _: Throwable => 0.0 }
-        else 0.0
-      cpuAccumSec + live
-    }
-    def isRunning: Boolean = running
-    def start(): Unit = synchronized {
-      if (running) return
-      running = true
-      val t = new Thread(() => {
-        var x = 0x9E3779B97F4A7C15L
-        while (running) {
-          var i = 0
-          while (i < 65536) { x ^= x << 13; x ^= x >>> 7; x ^= x << 17; i += 1 }
-          // the xor with a data-dependent value keeps the loop live
-          ops.addAndGet(65536 | (x & 1L))
-        }
-      }, "graft-canary")
-      t.setDaemon(true)
-      t.setPriority(Thread.NORM_PRIORITY)
-      thread = t
-      t.start()
-      // solo calibration: ~0.6 s with Spark idle seeds bestMops so even
-      // the first heavy run has a baseline (later runs raise it if the
-      // calibration itself landed in a stall window)
-      val c0 = ops.get; val t0 = System.nanoTime()
-      Thread.sleep(600)
-      observe(ops.get - c0, (System.nanoTime() - t0) / 1e9)
-    }
-    def stop(): Unit = synchronized {
-      val t = thread
-      if (t != null && t.isAlive)
-        try { val ns = tmx.getThreadCpuTime(t.getId)
-          if (ns > 0) cpuAccumSec += ns / 1e9 }
-        catch { case _: Throwable => () }
-      thread = null
-      running = false
-    }
-    def count: Long = ops.get
-    /** Rate for a completed interval, also folded into the baseline. */
-    def observe(delta: Long, wallSec: Double): Double = {
-      if (wallSec <= 0 || delta <= 0) return -1.0
-      val m = delta / wallSec / 1e6
-      if (m > bestMops) bestMops = m
-      m
-    }
-  }
-
-  /** tmpfs-shuffle pressure recorder: `/dev/shm` pages and the executor
-    * heap share the same 128 GiB, so a large scale-point shuffle can
-    * evict/thrash invisibly. A sampler thread tracks the high-water
-    * mark of shm usage per scale point; the number lands in the
-    * artifact so "the sf3 leg ran against N GiB of tmpfs shuffle" is a
-    * recorded fact, not a guess. */
-  private[graft] object ShmWatch {
-    private val maxUsed = new java.util.concurrent.atomic.AtomicLong(-1L)
-    @volatile private var running = false
-    def isRunning: Boolean = running
-    def start(): Unit = synchronized {
-      if (running) return
-      running = true
-      val t = new Thread(() => while (running) {
-        sample(); try Thread.sleep(250) catch { case _: InterruptedException => () }
-      }, "graft-shm-watch")
-      t.setDaemon(true)
-      t.start()
-    }
-    def stop(): Unit = synchronized { running = false }
-    private def sample(): Unit = {
-      val u = LocalDirs.shmUsedBytes
-      if (u >= 0) { maxUsed.updateAndGet(m => math.max(m, u)); () }
-    }
-    /** Reset the high-water mark (start of a scale point). */
-    def reset(): Unit = { maxUsed.set(-1L); sample() }
-    def hwmBytes: Long = maxUsed.get
   }
 
   private object CpuClock {
@@ -394,114 +256,48 @@ object Bench {
           b.getProcessCpuTime / 1e9
         case _ => -1.0
       }
-    /** Process CPU MINUS the canary spin thread's own burn — the clock
-      * every measured delta uses, so cpu/util/exponent_cpu reflect
-      * query work only. With the canary now running for the WHOLE bench
-      * (suite + scale), suite baselines and scale points share the same
-      * (zero) instrument bias. */
-    def benchCpuSec: Double = {
-      val p = processCpuSec
-      if (p < 0) -1.0 else p - Canary.cpuSec
-    }
   }
 
-  /** A completed run is stall-suspect when it took real time while the
-    * process averaged under half a busy core — near-total starvation.
-    * Calibration (suite sf0.1 + sf0.001-based smoke): every healthy
-    * query, including driver-bound small-data runs, averages ≥ 1.4
-    * busy cores; the documented host stalls (16.6 s work measured at
-    * 101/195 s wall) sit near 0.3. The threshold is deliberately
-    * conservative — PARTIAL stalls (r8's 2.6× q_fuzzy_join inflation)
-    * can keep activeCores above any absolute cut, which is why the
-    * artifact also reports `exponent_cpu`: CPU seconds are invariant
-    * under host stalls (the stall inflates wall, not work), so the
-    * CPU-based exponent adjudicates scaling even when the wall
-    * number is poisoned. */
-  val StallActiveCoresThreshold = 0.5
-  val StallMinWallSec = 5.0
-
-  /** Canary-rate fraction below which a run is stall-suspect.
-    * Calibration from the round-9 anchor run: healthy runs of queries
-    * that saturate all 32 cores for tens of seconds (q_ann_lsh_big)
-    * measure frac 0.52-0.7 — the canary legitimately loses cycles to
-    * our own 32 workers + GC threads — while the documented hypervisor
-    * stalls are 5-30× slowdowns (frac < 0.2). 0.3 separates the two
-    * regimes with margin on both sides. */
-  val CanaryStallFrac = 0.3
-
-  /** Three-band canary discipline for SCALE LEGS (round-11; extends the
-    * suite's "only canary-gated minima are admissible" rule to the
-    * legs the exponents are computed from — the r10 anchor fed
-    * super-linear graph exponents from legs its own canary rated
-    * 0.35–0.59 under load ~30):
-    *  - frac < [[CanaryStallFrac]] (0.3): stall-suspect — retried, and
-    *    only used if every retry looks the same (stall_suspect flag).
-    *  - frac < [[CanaryExcludeFrac]] (0.5): completed but below the
-    *    healthy-saturated band (calibration: runs that saturate all 32
-    *    cores still measure 0.52+, documented stalls < 0.2) — the leg
-    *    gets ONE extra attempt at a quieter window; if it stays
-    *    degraded it is EXCLUDED from the headline exponent fields
-    *    (the raw seconds and an `exponent_unfiltered` fit stay in the
-    *    artifact, clearly labeled).
-    *  - frac < [[CanaryDegradedFrac]] (0.8): admissible but flagged in
-    *    `degraded_legs` right next to the exponent, so no exponent is
-    *    ever computed from a sub-0.8-canary point without a flag. 0.8
-    *    would be too strict as an EXCLUSION bar — our own 32 worker +
-    *    GC threads legitimately push the canary to 0.5–0.7 on heavy
-    *    legs — but as a disclosure bar it costs nothing. */
-  val CanaryExcludeFrac = 0.5
-  val CanaryDegradedFrac = 0.8
-
-  /** A heal run whose canary frac lands within this of the pre-heal
-    * frac — under a HEALTHY idle canary — is evidence the depression is
-    * the leg's own 32-core saturation, not external contention (ADVICE
-    * r14): healthy saturated legs measure 0.5-0.8 from the bench's own
-    * workers, and no number of heal runs will clear the 0.8 bar. */
-  val SelfSaturationNoise = 0.1
+  /** The synthetic scale points: [[ScaleFixture]] replicas at
+    * `ScaleFactor`× (every family member) and `ScaleFactor3`×
+    * ([[HeavyFive]] only) the suite's inputs. Every sf1/sf3 run is
+    * cancelled after `ScaleTimeoutSec`. */
+  val ScaleFactor = 10
+  val ScaleFactor3 = 30
+  val ScaleTimeoutSec = 420
 
   /** `loadMax` is the highest 1-minute load average observed across
     * this point's runs (informative — mid-run load is dominated by our
     * own worker threads); `loadFlagged` marks points measured on a host
-    * whose AMBIENT load at bench start exceeded [[LoadFlagThreshold]] —
-    * those exponents/cancels are host noise, not plan cost. `sf3` is
-    * the optional third point ([[HeavyFive]] only) at
-    * `factor3`× the base sf0.1 inputs. `stallRetries` counts extra runs
-    * forced by the wall-vs-CPU stall detector; `stallSuspect` marks a
-    * point whose EVERY run looked starved (its exponent is then host
-    * noise by the artifact's own evidence, no re-run required to argue
-    * it). */
+    * whose AMBIENT load at bench start exceeded [[LoadFlagThreshold]].
+    * `sf3` is the optional third point ([[HeavyFive]] only). The
+    * exponents are fitted over every measured leg. */
   case class ScalePoint(sf01: RunMeasure, sf1: Option[RunMeasure],
                         sf3: Option[RunMeasure],
                         cancelledAt: Option[Int], note: Option[String],
                         loadMax: Double = 0.0, loadFlagged: Boolean = false,
-                        stallRetries: Int = 0, stallSuspect: Boolean = false,
-                        shmHwmMb: Long = -1L,
-                        budgetTruncated: Boolean = false,
-                        loadDeferred: Boolean = false)
+                        budgetTruncated: Boolean = false) {
+    private def legs: Seq[(Double, RunMeasure)] = (1.0, sf01) +:
+      Seq(ScaleFactor.toDouble -> sf1, ScaleFactor3.toDouble -> sf3)
+        .collect { case (f, Some(m)) => (f, m) }
+    private def fit(v: RunMeasure => Double,
+                    ls: Seq[(Double, RunMeasure)]): Option[Double] =
+      fitExponent(ls.collect { case (f, m) if v(m) > 0 => (f, v(m)) })
+    /** log(t_sf1 / t_sf0.1) / log(factor) on wall seconds. */
+    def exponent: Option[Double] =
+      if (sf1.isEmpty) None else fit(_.wall, legs.filter(_._1 <= ScaleFactor))
+    /** Least-squares log-log wall fit over all three points. */
+    def exponent3pt: Option[Double] =
+      if (legs.size < 3) None else fit(_.wall, legs)
+    /** The same fit on process-CPU seconds, over every measured leg. */
+    def exponentCpu: Option[Double] = fit(_.cpu, legs)
+  }
 
   /** Ambient (pre-bench) 1-minute load above which a scale measurement
     * is untrustworthy on this 32-cpu host (r7's driver run STARTED at
     * load 19.4 — before doing any work — and cancelled two sf1 points a
     * quiet host completes in 39 s / 247 s). */
   val LoadFlagThreshold = 8.0
-
-  /** Scale legs whose wall clocks have been the round-over-round
-    * casualties of host contention windows: both r11 anchors measured
-    * q_triangles at canary 0.49–0.55 under ambient load ~30 while
-    * direct counts ([[ScaleCounts]], pinned in ScaleLinearitySpec)
-    * prove the workload exactly linear, and r10 did the same to
-    * q_label_prop. Rather than measure a number the canary will only
-    * flag post-hoc, a fragile leg whose
-    * START sees a depressed IDLE canary rate (sampled between legs,
-    * while our own executors are quiescent — mid-bench loadavg is
-    * useless here, it is dominated by our own just-finished 32
-    * workers; the first r12 anchor deferred both graph legs off a
-    * self-generated load 16+) is pushed to the back of the queue ONCE
-    * (artifact field `load_deferred`) — a contention-watermark
-    * reorder, not a retry, so it costs one 2 s sample when the host is
-    * quiet and zero extra runs either way. */
-  val FragileLegs: Set[String] = Set("q_triangles", "q_label_prop",
-    "q_pagerank")
 
   private def loadAvg1m: Double = java.lang.management.ManagementFactory
     .getOperatingSystemMXBean.getSystemLoadAverage
@@ -600,10 +396,9 @@ object Bench {
       "stage, both individually linear-adjudicated"),
     "q_fuzzy_join" -> ("(p_size, length-band) composite-block " +
       "levenshtein<=2 self-match. ADJUDICATED LINEAR by direct count " +
-      "(RunFuzzyCount r12, SHUFFLE_TUNING): candidate pairs scale " +
+      "(ScaleCounts, pinned in ScaleLinearitySpec): candidate pairs scale " +
       "exactly 10.00x/30.00x (7.82M/78.2M/234.5M) with max block " +
-      "occupancy CONSTANT at 411 rows; ScaleLinearitySpec pins the " +
-      "invariant. r12 FIX of the stubborn ~1.0 exponent, root-caused " +
+      "occupancy CONSTANT at 411 rows. r12 FIX of the stubborn ~1.0 exponent, root-caused " +
       "by stage profile: the part table is ~MB-sized so the scan got " +
       "ONE partition and the whole candidate eval ran on a single " +
       "core (run 31.3 s = cpu 31.1 s at sf1) - wall scaled exactly " +
@@ -617,46 +412,25 @@ object Bench {
     "q_label_prop" -> ("3 synchronous mode-label LPA iterations; " +
       "per-iteration plan is PageRank-shaped (one hash join + two " +
       "aggs over ONE src-hash exchange, linear in E). ADJUDICATED " +
-      "LINEAR by direct count (RunGraphCount r11, SHUFFLE_TUNING): " +
+      "LINEAR by direct count (ScaleCounts, pinned in " +
+      "ScaleLinearitySpec): " +
       "messages/iteration and (src,label) group cardinalities scale " +
       "exactly 10.00x/30.00x across the three fixture points - the " +
-      "r10 anchor's 1.11/1.60 exponents were measured at canary_frac " +
-      "0.42 under ambient load ~30 and are host noise by the " +
+      "r10 anchor's 1.11/1.60 exponents were measured on a starved " +
+      "host under ambient load ~30 and are host noise by the " +
       "fixture's own counts"),
     "q_triangles" -> ("degree-oriented edge-iterator close; " +
-      "ADJUDICATED LINEAR by direct count (RunGraphCount r11, " +
-      "SHUFFLE_TUNING): merge-walk steps (the exact probe count of " +
+      "ADJUDICATED LINEAR by direct count (ScaleCounts, pinned in " +
+      "ScaleLinearitySpec): merge-walk steps (the exact probe count of " +
       "the SortedIntIntersect close) and triangles scale exactly " +
       "10.00x/30.00x across the three fixture points - the r10 " +
-      "anchor's 1.34/1.64 exponents were measured at canary_frac " +
-      "0.35-0.59 under ambient load ~30 and are host noise by the " +
+      "anchor's 1.34/1.64 exponents were measured on a starved host " +
+      "under ambient load ~30 and are host noise by the " +
       "fixture's own counts (r9 measured 0.92/0.98 clean)"),
     "dedup_embed_hi_tau" -> ("same embeddingPairs operator at tau=0.9 " +
       "with 16-bit bands (numSigs=32): sub-threshold collisions ~0.2% " +
       "of pairs, the scalable near-dup regime (differential-tested in " +
       "DedupSpec on a twin-planted corpus)"))
-
-  /** Legs whose WORKLOAD linearity is proven by direct fixture counts
-    * (exponent, adjudicator). These are the legs whose wall measurement
-    * this host keeps degrading (graph close / fuzzy eval saturate all
-    * 32 cores for minutes — exactly the regime where co-tenancy noise
-    * concentrates), while the fixture's own operation counts — probe
-    * steps, messages, candidate pairs — scale EXACTLY 10x/30x and are
-    * pinned as invariants in ScaleLinearitySpec. When such a leg's
-    * measured headline would carry a degraded/cpu-fallback source (or
-    * no admissible fit exists at all), the count verdict headlines as
-    * `headline_source: "direct-count"` instead — first-class machine
-    * adjudication (VERDICT r14 item 5), replacing three rounds of
-    * recurring flags + prose companions. The measured fits stay
-    * published beside it (exponent/exponent_3pt/exponent_cpu,
-    * degraded_legs) — provenance is added, data never hidden. */
-  val DirectCountPins: Map[String, (Double, String)] = Map(
-    "q_triangles" -> ((1.0, "RunGraphCount: merge-walk probe steps and " +
-      "triangle counts scale exactly 10.00x/30.00x")),
-    "q_label_prop" -> ((1.0, "RunGraphCount: messages/iteration and " +
-      "(src,label) group cardinalities scale exactly 10.00x/30.00x")),
-    "q_fuzzy_join" -> ((1.0, "RunFuzzyCount: candidate pairs scale " +
-      "exactly 10.00x/30.00x with max block occupancy constant")))
 
   /** Sampled recall of the BOUNDED ANN mode at the sf1 point — the
     * regime where the per-bucket/per-query caps actually BIND (at
@@ -680,7 +454,7 @@ object Bench {
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       if (brute.isEmpty) None
       else Some((brute & bounded).size.toDouble / brute.size)
-    } catch { case e: Throwable =>
+    } catch { case NonFatal(e) =>
       System.err.println(s"[bench] bounded ANN sf1 recall failed: $e")
       None
     }
@@ -713,57 +487,48 @@ object Bench {
       val hits = qids.count(q => got.getOrElse(q, Set.empty)
         .contains(q - factor * nVec))
       Some(hits.toDouble / qids.length)
-    } catch { case e: Throwable =>
+    } catch { case NonFatal(e) =>
       System.err.println(s"[bench] bounded ANN near-dup recall failed: $e")
       None
     }
 
-  /** Times the scale family against the synthetic `factor`× fixture
-    * (generation excluded from timing). Each sf1 run is capped at
-    * `SPARK_GRAFT_SCALE_TIMEOUT_SEC` (default 420) via job-group
-    * cancellation — a cancelled run is recorded as such, with its
-    * named reason, instead of stalling the whole bench.
+  /** The two fixture dirs, `target/scale/sf1` and `target/scale/sf3`
+    * under the repository dir (`SPARK_GRAFT_REPO_DIR`, the same root
+    * the standing indexes use). */
+  private def scaleDirs: (String, String) = {
+    val scaleRoot = s"${graft.sources.StandingIndex.repoRoot}/target/scale"
+    (s"$scaleRoot/sf1", s"$scaleRoot/sf3")
+  }
+
+  /** Times the scale family against the synthetic `ScaleFactor`× and
+    * `ScaleFactor3`× fixtures (generation excluded from timing). Each leg
+    * is the min wall of a fixed number of runs: 2 at sf0.1 (unless the
+    * suite already timed it) and at sf1, 1 at sf3. Each sf1/sf3 run is
+    * capped at `ScaleTimeoutSec` via job-group cancellation — a
+    * cancelled run is recorded as such instead of stalling the whole
+    * bench.
     *
     * `ambientLoad` is the 1-minute load average captured BEFORE the
     * bench did any work: load measured DURING a run is dominated by our
-    * own 32 worker threads and says nothing about contention, but a
-    * high ambient at start (r7's driver run began at 19.4 and
-    * cancelled two points a quiet host completes) marks every
-    * downstream exponent/cancel as host noise. Points still record the
-    * max load observed across their runs as data. */
+    * own worker threads and says nothing about contention, but a high
+    * ambient at start (r7's driver run began at 19.4 and cancelled two
+    * points a quiet host completes) is recorded on every point as
+    * `load_flagged`. Points also record the max load observed across
+    * their runs as data. `only` limits the run to those points (empty:
+    * the whole family). */
   def scalePointTimings(spark: SparkSession, sfDir: String,
                         timings: collection.Map[String, Double],
                         ambientLoad: Double = 0.0,
                         suiteCpu: collection.Map[String, Double] = Map.empty,
                         deadlineNanos: Long = Long.MaxValue,
                         onPoint: Seq[(String, ScalePoint)] => Unit = _ => (),
-                        suiteCanary: collection.Map[String, Double] = Map.empty)
-      : (Int, Int, Seq[(String, ScalePoint)]) = {
-    val factor = sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTOR", "10").toInt
-    val factor3 = sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTOR3", "30").toInt
-    val timeoutSec =
-      sys.env.getOrElse("SPARK_GRAFT_SCALE_TIMEOUT_SEC", "420").toInt
-    val scaleRoot = sys.env.getOrElse("SPARK_GRAFT_REPO_DIR", "/root/repo") +
-      "/target/scale"
-    val outDir = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR",
-      s"$scaleRoot/sf1")
-    val outDir3 = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR3",
-      s"$scaleRoot/sf3")
+                        only: Seq[String] = Seq.empty)
+      : Seq[(String, ScalePoint)] = {
+    val (outDir, outDir3) = scaleDirs
     // seconds left before the global bench budget (see main) — the
-    // r9 driver artifact died rc=124 because per-run defenses (caps,
-    // canary retries, third points) stack without a global bound
+    // r9 driver artifact died rc=124 because per-run caps and third
+    // points stack without a global bound
     def remainingSec: Double = (deadlineNanos - System.nanoTime()) / 1e9
-    ScaleFixture.ensure(spark, sfDir, outDir, factor)
-    ScaleFixture.ensure(spark, sfDir, outDir3, factor3)
-    CpuClock.register(spark.sparkContext)
-    // instruments this call STARTED it must also stop (Bench.main owns
-    // its own pair for the whole bench): otherwise a standalone caller
-    // (`Dev scale`) leaves the canary spin thread burning a full core from
-    // measurement end until JVM exit and biases its later CPU reads
-    val ownCanary = !Canary.isRunning
-    val ownShm = !ShmWatch.isRunning
-    Canary.start()
-    ShmWatch.start()
     import org.apache.spark.sql.DataFrame
     // the hi-tau companion is not a registry query (the driver fixtures
     // have no pairs above cosine 0.51, so it would be a 0-row oracle);
@@ -771,15 +536,17 @@ object Bench {
     def hiTau(d: String): DataFrame = graft.dedup.Dedup.embeddingPairs(
       Tables.embeddings(spark, d), "vec_id", "embedding",
       threshold = 0.9, dim = 64, bits = 64, bands = 4, numSigs = 32)
-    // dev filter: SPARK_GRAFT_SCALE_ONLY=q_a,q_b measures only those
-    // points (`Dev scale`); unset in driver runs
-    val only = sys.env.get("SPARK_GRAFT_SCALE_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    val entries: Seq[(String, String => DataFrame)] =
-      (ScaleFamily.map(n =>
+    val family: Seq[(String, String => DataFrame)] =
+      ScaleFamily.map(n =>
         n -> ((d: String) => SparkEntry.queries(n)(spark, d))) :+
-        ("dedup_embed_hi_tau" -> (hiTau _)))
-        .filter(e => only.forall(_.contains(e._1)))
+        ("dedup_embed_hi_tau" -> (hiTau _))
+    val unknown = only.filterNot(family.map(_._1).contains)
+    require(unknown.isEmpty, s"not scale points: ${unknown.mkString(", ")} " +
+      s"(known: ${family.map(_._1).mkString(", ")})")
+    val entries = family.filter(e => only.isEmpty || only.contains(e._1))
+    ScaleFixture.ensure(spark, sfDir, outDir, ScaleFactor)
+    ScaleFixture.ensure(spark, sfDir, outDir3, ScaleFactor3)
+    CpuClock.register(spark.sparkContext)
     val sc = spark.sparkContext
     def run(label: String, mk: String => DataFrame, d: String,
             cancelAfterSec: Option[Int]): Option[RunMeasure] = {
@@ -791,263 +558,69 @@ object Bench {
         override def run(): Unit = { cancelled = true; sc.cancelJobGroup(group) }
       }, s * 1000L))
       val t0 = System.nanoTime()
-      val cpu0 = CpuClock.benchCpuSec
+      val cpu0 = CpuClock.processCpuSec
       val task0 = CpuClock.taskCpuSec
-      val can0 = Canary.count
       try {
         mk(d).write.format("noop").mode("overwrite").save()
-        val wall = (System.nanoTime() - t0) / 1e9
-        Some(RunMeasure(wall,
-          CpuClock.benchCpuSec - cpu0, CpuClock.taskCpuSec - task0,
-          Canary.observe(Canary.count - can0, wall)))
+        Some(RunMeasure((System.nanoTime() - t0) / 1e9,
+          CpuClock.processCpuSec - cpu0, CpuClock.taskCpuSec - task0))
       } catch {
         case _: Throwable if cancelled =>
           System.err.println(s"[bench] scale $label cancelled at ${cancelAfterSec.get}s")
           None
       } finally { timer.cancel(); sc.clearJobGroup() }
     }
-    def isSuspect(m: RunMeasure): Boolean =
-      (m.wall > StallMinWallSec && m.cpu >= 0 &&
-        m.activeCores < StallActiveCoresThreshold) ||
-      // the canary sees the stalls CPU accounting cannot: a run during
-      // which the spin thread made < half its best-known progress rate
-      // ran on a host that was giving this VM < half its cycles
-      (m.wall > StallMinWallSec && m.canaryFrac >= 0 &&
-        m.canaryFrac < CanaryStallFrac)
-    val contendedStart = ambientLoad > LoadFlagThreshold
-    // this host suffers transient multi-minute stalls from OUTSIDE the
-    // container (a ~30 s sf1 point has measured 170+ s while the
-    // min-of-3 sf0.1 suite showed zero contention), and container
-    // loadavg cannot see them. Defense in depth:
-    //   1. `initialRuns` attempts, min wall — a stall must span all of
-    //      them to survive;
-    //   2. every run carries wall AND cpu; if EVERY completed run is
-    //      stall-suspect (took wall but the process was starved of
-    //      CPU), re-run up to `maxExtra` more times;
-    //   3. a point still all-suspect after retries is recorded with
-    //      `stall_suspect: true` — the artifact then says, with its own
-    //      numbers, "this exponent is host noise" instead of needing a
-    //      human re-measure to argue it.
-    // The min-wall run among CLEAN runs wins (a starved run can only be
-    // slower than the same plan un-starved, so preferring clean runs
-    // never hides real cost).
-    // a leg (or retry) only starts when at least this much budget is
-    // left — a started run can still use up to the per-run cap
+    // a run only starts when at least this much budget is left — a
+    // started run can still use up to the per-run cap
     val MinStartBudgetSec = 60.0
-    // IDLE canary watermark (shared by fragile-leg deferral and leg
-    // self-healing): between legs our own executors are quiescent, so a
-    // depressed spin rate measures exactly the external contention that
-    // poisons a measurement — mid-bench loadavg cannot (it is dominated
-    // by our own just-finished workers).
-    def idleCanaryFrac(sampleMs: Long = 2000L): Double = {
-      if (!Canary.isRunning || Canary.bestMops <= 0) return -1.0
-      val c0 = Canary.count; val t0 = System.nanoTime()
-      Thread.sleep(sampleMs)
-      val m = Canary.observe(Canary.count - c0, (System.nanoTime() - t0) / 1e9)
-      if (m < 0) -1.0 else m / Canary.bestMops
-    }
+    def budgetOk: Boolean = remainingSec > MinStartBudgetSec
     def measure(label: String, mk: String => DataFrame, d: String,
-                cancelAfterSec: Option[Int], initialRuns: Int,
-                maxExtra: Int): (Option[RunMeasure], Int, Boolean) = {
+                cancelAfterSec: Option[Int], nRuns: Int): Option[RunMeasure] = {
       // never let one run blow the global budget: the per-run cap
       // shrinks to whatever budget remains (floor 30 s so a cap of 3 s
       // doesn't record a bogus cancel)
       def cap: Option[Int] = {
         val rem = math.max(30, remainingSec.toInt)
         cancelAfterSec.map(math.min(_, rem))
-          .orElse(if (remainingSec < timeoutSec * 2) Some(rem) else None)
+          .orElse(if (remainingSec < ScaleTimeoutSec * 2) Some(rem) else None)
       }
-      def budgetOk: Boolean = remainingSec > MinStartBudgetSec
-      val ms = scala.collection.mutable.Buffer[RunMeasure]()
-      (1 to initialRuns).foreach(_ =>
-        if (budgetOk) run(label, mk, d, cap).foreach(ms += _))
-      if (ms.isEmpty && budgetOk) {
-        // every attempt was timeout-cancelled. On this host that is as
-        // likely a multi-minute hypervisor-starvation window as real
-        // plan cost (r10: an sf3 leg a quiet host completes in 219 s
-        // cancelled at 420 s while the canary read 0.33-0.56) — one
-        // more attempt round before recording a cancelled point, budget
-        // permitting. A genuinely over-cap query costs one extra cap.
-        System.err.println(s"[bench] scale $label: all attempts " +
-          f"cancelled (ambient load $ambientLoad%.1f) - retrying once")
-        (1 to initialRuns).foreach(_ =>
-          if (budgetOk) run(label, mk, d, cap).foreach(ms += _))
-      }
-      var extra = 0
-      while (ms.nonEmpty && ms.forall(isSuspect) && extra < maxExtra &&
-             budgetOk) {
-        extra += 1
-        System.err.println(f"[bench] scale $label: all runs stall-suspect " +
-          f"(best util ${ms.map(_.util).max}%.3f, best canary_frac " +
-          f"${ms.map(_.canaryFrac).max}%.3f) - extra run $extra")
-        run(label, mk, d, cap).foreach(ms += _)
-      }
-      // SELF-HEALING degraded legs (r13 VERDICT item 2, generalizing
-      // the r11 single sub-0.5 retry): a leg whose best completed run
-      // sits below the CLEAN canary band (0.8) would flag the point
-      // `wall_degraded` in the artifact — the round-over-round cost has
-      // been hand-scheduled re-measures and prose companions. Before
-      // banking such a leg, re-measure it INSIDE the artifact run, but
-      // idle-canary SCHEDULED: sample the between-legs spin rate first
-      // (our executors are quiescent, so it reads exactly the external
-      // contention), wait one bounded window for a wave to pass if it
-      // is depressed, and only then spend a run — a blind retry would
-      // land straight back in the same wave (three of four r13 anchor
-      // attempts did). Bounded at 2 heal runs + 1 wait per leg; if the
-      // wave outlasts the budget the degraded number banks, flagged as
-      // before — healing adds quiet-window candidates, it never hides
-      // data (the displaced degraded wall is published in
-      // healed_from_* fields right on the point).
-      def bestOf(runs: Seq[RunMeasure]): Option[RunMeasure] = {
-        val clean = runs.filterNot(isSuspect)
-        if (clean.nonEmpty) Some(clean.minBy(_.wall))
-        else if (runs.nonEmpty) Some(runs.minBy(_.wall)) else None
-      }
-      def bestIsDegraded: Option[RunMeasure] = bestOf(ms.toSeq)
-        .filter(m => m.canaryFrac >= 0 && m.canaryFrac < CanaryDegradedFrac)
-      val preHeal = bestIsDegraded
-      var dExtra = 0
-      var waited = false
-      // separate exit flag: dExtra feeds the artifact's stall_retries
-      // run-accounting, so it must count only runs that actually
-      // happened (review r14 — the old `dExtra = 2` sentinel published
-      // phantom retries)
-      var healingStopped = false
-      // healing is a luxury, coverage is the record: under a tight
-      // global budget (the driver's default 2100 s) the waits + heal
-      // runs must not push later POINTS into budget_truncated (the
-      // first r14 anchor attempt lost 13 of 30 points that way, and
-      // quarantineIfWorse had to restore the previous round's record) —
-      // so heals only spend budget while at least 10 minutes remain
-      val HealMinBudgetSec = 600.0
-      while (bestIsDegraded.isDefined && dExtra < 2 && !healingStopped &&
-             budgetOk && remainingSec > HealMinBudgetSec) {
-        var idle = idleCanaryFrac()
-        if (idle >= 0 && idle < CanaryDegradedFrac && !waited && budgetOk) {
-          // one bounded wait for the contention wave to pass
-          waited = true
-          System.err.println(f"[bench] scale $label: heal deferred - idle " +
-            f"canary $idle%.3f still depressed, waiting 20s")
-          Thread.sleep(20000L)
-          idle = idleCanaryFrac()
-        }
-        if (idle >= 0 && idle < CanaryDegradedFrac) {
-          System.err.println(f"[bench] scale $label: wave persists (idle " +
-            f"$idle%.3f) - banking the degraded leg, flagged")
-          healingStopped = true // the flag machinery takes over
-        } else {
-          dExtra += 1
-          val preFrac = bestIsDegraded.get.canaryFrac
-          System.err.println(f"[bench] scale $label: best completed run " +
-            f"is canary-degraded (frac " +
-            f"$preFrac%.3f < $CanaryDegradedFrac) " +
-            f"- heal run $dExtra at a quiet window (idle $idle%.3f)")
-          val healed = run(label, mk, d, cap)
-          healed.foreach(ms += _)
-          // SELF-SATURATION stop (ADVICE r14): healthy saturated sf1/sf3
-          // legs legitimately sit at 0.5-0.8 canary frac because the
-          // bench's OWN 32-core workers steal the spin thread's fair
-          // share. For those legs the idle canary reads healthy, so the
-          // old loop spent both heal runs and could never clear the
-          // bar - systematic budget burn. A heal run that executed in a
-          // healthy idle window (external contention ruled out by the
-          // gate above) and still lands within noise of the pre-heal
-          // frac PROVES the depression is the leg's own saturation:
-          // stop healing, the degraded flag machinery takes over.
-          healed.foreach { h =>
-            if (h.canaryFrac >= 0 && h.canaryFrac < CanaryDegradedFrac &&
-                math.abs(h.canaryFrac - preFrac) <= SelfSaturationNoise) {
-              System.err.println(f"[bench] scale $label: heal run under " +
-                f"healthy idle canary landed at ${h.canaryFrac}%.3f, " +
-                f"within noise of pre-heal $preFrac%.3f - self-saturation, " +
-                "not contention; stopping heals for this leg")
-              healingStopped = true
-            }
-          }
-        }
-      }
-      // provenance: if healing replaced a degraded best with a clean
-      // one, carry the displaced number on the banked measure
-      def withHealProvenance(m: RunMeasure): RunMeasure = preHeal match {
-        case Some(old) if m.canaryFrac >= CanaryDegradedFrac &&
-            (old.wall != m.wall || old.canaryFrac != m.canaryFrac) =>
-          m.copy(healedFromWall = old.wall, healedFromFrac = old.canaryFrac)
-        case _ => m
-      }
-      val clean = ms.filterNot(isSuspect)
-      if (clean.nonEmpty)
-        (Some(withHealProvenance(clean.minBy(_.wall))), extra + dExtra, false)
-      else if (ms.nonEmpty)
-        (Some(withHealProvenance(ms.minBy(_.wall))), extra + dExtra, true)
-      else (None, extra + dExtra, false)
+      (1 to nRuns).flatMap(_ => if (budgetOk) run(label, mk, d, cap) else None)
+        .minByOption(_.wall)
     }
+    val contendedStart = ambientLoad > LoadFlagThreshold
     val pts = scala.collection.mutable.Buffer[(String, ScalePoint)]()
-    // contention-watermark reorder for the known-fragile graph legs
-    // (see [[FragileLegs]]): a fragile leg starting into an external-
-    // contention window is deferred to the queue tail ONCE instead of
-    // measured into a number the canary can only flag after the fact.
-    // The watermark is the shared IDLE canary sample (see
-    // idleCanaryFrac above), not loadavg.
-    val queue = scala.collection.mutable.Queue(entries: _*)
-    val deferredOnce = scala.collection.mutable.Set[String]()
-    try while (queue.nonEmpty) {
-      val (label, mk) = queue.dequeue()
-      val wasDeferred = deferredOnce.contains(label)
-      val idleFrac =
-        if (FragileLegs.contains(label) && !wasDeferred && queue.nonEmpty &&
-            remainingSec > MinStartBudgetSec * 4) idleCanaryFrac()
-        else -1.0
-      if (idleFrac >= 0 && idleFrac < CanaryDegradedFrac) {
-        deferredOnce += label
-        // bounded displacement: re-insert a few entries back, NOT at the
-        // tail — a tail deferral could push the round's most-disputed
-        // leg past the budget horizon and convert a measurable
-        // (flagged) point into a budget-truncated hole, while 2-3 legs
-        // (~minutes) is enough for a contention wave to pass
-        val delay = math.min(3, queue.size)
-        val (ahead, rest) = queue.splitAt(delay)
-        queue.clear()
-        queue ++= ahead; queue += ((label, mk)); queue ++= rest
-        System.err.println(f"[bench] scale $label: idle canary frac " +
-          f"$idleFrac%.3f < $CanaryDegradedFrac%.1f (external contention) " +
-          f"- deferring fragile leg $delay entries back")
-      } else try {
+    entries.foreach { case (label, mk) =>
+      try {
         var loadMax = loadAvg1m
-        ShmWatch.reset()
-        // the suite already timed the sf0.1 point min-of-3 (with cpu
-        // and canary frac — frozen at measurement time); measure it
-        // here only for the non-registry companion
+        // the suite already timed the sf0.1 point min-of-N (with cpu);
+        // measure it here only for the non-registry companion and for
+        // `Dev scale`, which runs no suite
         val sf01: Option[RunMeasure] = timings.get(label)
-          .map(w => RunMeasure(w, suiteCpu.getOrElse(label, -1.0), -1.0,
-            frozenFrac = suiteCanary.getOrElse(label, -1.0)))
-          .orElse(if (remainingSec > MinStartBudgetSec)
-            measure(label, mk, sfDir, None, 2, 2)._1 else None)
-        val outOfBudget = remainingSec <= MinStartBudgetSec
+          .map(w => RunMeasure(w, suiteCpu.getOrElse(label, -1.0), -1.0))
+          .orElse(measure(label, mk, sfDir, None, 2))
+        val outOfBudget = !budgetOk
         loadMax = math.max(loadMax, loadAvg1m)
-        val (sf1, r1, s1) =
-          if (outOfBudget) (None, 0, false)
-          else measure(label, mk, outDir, Some(timeoutSec), 2, 2)
+        val sf1 =
+          if (outOfBudget) None
+          else measure(label, mk, outDir, Some(ScaleTimeoutSec), 2)
         loadMax = math.max(loadMax, loadAvg1m)
         val wantSf3 = HeavyFive.contains(label)
-        val sf3OutOfBudget = remainingSec <= MinStartBudgetSec
-        val (sf3, r3, s3) =
+        val sf3OutOfBudget = !budgetOk
+        val sf3 =
           if (wantSf3 && !sf3OutOfBudget)
-            measure(label, mk, outDir3, Some(timeoutSec), 1, 2)
-          else (None, 0, false)
+            measure(label, mk, outDir3, Some(ScaleTimeoutSec), 1)
+          else None
         loadMax = math.max(loadMax, loadAvg1m)
         // budget exhaustion DURING a leg (cap shrank below the query's
         // real runtime) is truncation too, not a plan-cost cancel
-        val nowOut = remainingSec <= MinStartBudgetSec
+        val nowOut = !budgetOk
         val truncated = ((outOfBudget || nowOut) && sf1.isEmpty) ||
           (wantSf3 && (sf3OutOfBudget || nowOut) && sf3.isEmpty)
         sf01.foreach { s01 =>
           pts += label -> ScalePoint(s01, sf1, sf3,
-            if (sf1.isEmpty && !outOfBudget && !nowOut) Some(timeoutSec)
+            if (sf1.isEmpty && !outOfBudget && !nowOut) Some(ScaleTimeoutSec)
             else None,
-            scaleNotes.get(label), loadMax, contendedStart, r1 + r3,
-            s1 || s3,
-            if (ShmWatch.hwmBytes < 0) -1L else ShmWatch.hwmBytes / 1000000L,
-            truncated, wasDeferred)
+            scaleNotes.get(label), loadMax, contendedStart, truncated)
           // flush the artifact after EVERY point: a driver kill then
           // truncates coverage instead of destroying the round record
           onPoint(pts.toSeq)
@@ -1056,14 +629,11 @@ object Bench {
         // ContextCleaner can evict them from tmpfs before the next
         // point measures under that pressure
         System.gc()
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         System.err.println(s"[bench] scale point $label failed: $e")
       }
-    } finally {
-      if (ownCanary) Canary.stop()
-      if (ownShm) ShmWatch.stop()
     }
-    (factor, factor3, pts.toSeq)
+    pts.toSeq
   }
 
   /** Least-squares slope of ln t over ln factor across every measured
@@ -1081,79 +651,23 @@ object Bench {
       else Some(xs.zip(ys).map { case (x, y) => (x - xm) * (y - ym) }.sum / den)
     }
 
-  /** Self-adjudicating headline exponent (r12, VERDICT item 4). The r11
-    * anchors burned retry budget re-rolling q_ann_lsh_big's sf3 wall
-    * (146 s vs 362 s at identical code and bit-identical output) because
-    * no single field NAMED the number to judge: a degraded-window wall
-    * either poisoned the headline or cost a manual re-measure. The
-    * artifact now publishes one `exponent_headline` per point with its
-    * provenance in `headline_source`:
-    *  - every admissible leg in the clean canary band (≥0.8) → the wall
-    *    fit (`wall_3pt` / `wall`; `wall_admissible` when an excluded leg
-    *    dropped out but the survivors are clean);
-    *  - SOME admissible legs degraded (0.5–0.8) → still the wall fit
-    *    (clean legs anchor it), labeled `wall_degraded`;
-    *  - EVERY admissible leg degraded (r12 VERDICT item 2, the
-    *    bench_full_r12 q_ann_lsh_big case: sf3 canary 0.773 with no
-    *    clean leg to anchor the fit) → the CPU fit headlines (`cpu`)
-    *    when one exists — at such a point there is NO clean wall
-    *    instrument at all, and CPU seconds are at least invariant to
-    *    pure idle-wait starvation where wall is not. The wall fit
-    *    stays published beside it (`exponent`/`exponent_3pt`) and the
-    *    point carries a `headline_note` naming the switch;
-    *  - a CPU fit also headlines when no two admissible wall points
-    *    exist.
-    * Why the wall still headlines when ANY clean leg anchors the fit —
-    * the r11 anchors adjudicate against a blanket CPU gate on this
-    * host's own numbers: co-tenancy bills hypervisor-stolen cycles to
-    * the running thread, so raw CPU inflates MORE than wall on degraded
-    * legs (anchor #2's q_triangles: exponent_cpu 1.28 on
-    * 0.55/0.51-canary legs vs wall 0.93 vs direct-count exactly linear;
-    * q_label_prop r11: cpu 1.43 on a 0.73-canary leg, group
-    * cardinalities exactly linear). Correcting CPU by canary_frac
-    * overcorrects instead: heavy legs legitimately depress the canary
-    * to 0.5–0.7 by saturating all 32 cores (the documented reason 0.8
-    * is a disclosure bar, not an exclusion bar), so cpu×frac penalizes
-    * exactly the legs that work hardest (re-derived r12: it would
-    * headline q_triangles at ~1.09 against the count-proven 1.0).
-    * Because the same billing lie can inflate an all-degraded CPU fit
-    * too, `ScaleLinearitySpec`'s direct-count pins remain the
-    * tiebreaker of record for the heavy family either way;
-    * `degraded_legs`, the raw seconds, and both fits stay published
-    * next to the headline — it adds provenance, it never hides data. */
-  private[graft] def headlineExponent(
-      admWall: Seq[(Double, Double)], cpuPts: Seq[(Double, Double)],
-      anyDegraded: Boolean, anyExcluded: Boolean,
-      allDegraded: Boolean = false)
-      : Option[(Double, String)] = {
-    val wallFit = if (admWall.size >= 2) fitExponent(admWall) else None
-    val cpuFit = if (cpuPts.size >= 2) fitExponent(cpuPts) else None
-    if (allDegraded && cpuFit.isDefined) cpuFit.map((_, "cpu"))
-    else if (wallFit.isDefined)
-      wallFit.map(e => (e,
-        if (anyDegraded) "wall_degraded"
-        else if (anyExcluded) "wall_admissible"
-        else if (admWall.size >= 3) "wall_3pt" else "wall"))
-    else cpuFit.map((_, "cpu"))
-  }
-
-  private def writeFullArtifact(
+  /** Writes the full per-run record to `out`: the suite, the skew
+    * fixture, streaming, standing-index builds, the bounded-ANN recall
+    * and every scale point with its raw seconds and exponents. */
+  private[graft] def writeFullArtifact(
+      out: java.nio.file.Path,
       timings: collection.Map[String, Double],
       allRuns: collection.Map[String, Seq[Double]],
       rowCounts: collection.Map[String, Long],
       errors: collection.Map[String, String],
       skew: Map[String, Double],
-      scale: (Int, Int, Seq[(String, ScalePoint)]),
+      scale: Seq[(String, ScalePoint)],
       annRecall: (Option[Double], Option[Double]),
       sfDir: String,
       suiteCpu: collection.Map[String, Double] = Map.empty,
-      suiteCanary: collection.Map[String, Double] = Map.empty,
       budgetSec: Int = -1,
       streaming: Seq[(String, String)] = Seq.empty): Unit = {
     try {
-      val repoDir = java.nio.file.Paths.get(
-        sys.env.getOrElse("SPARK_GRAFT_REPO_DIR", "/root/repo"))
-      val out = repoDir.resolve(f"bench_full_r${roundNumber(repoDir)}%02d.json")
       val loadAvg = java.lang.management.ManagementFactory
         .getOperatingSystemMXBean.getSystemLoadAverage
       val nCpu = Runtime.getRuntime.availableProcessors()
@@ -1167,19 +681,13 @@ object Bench {
         val contended = spread > 3.0
         val cpu = suiteCpu.get(name)
           .map(c => s""","cpu_sec":${f3(c)}""").getOrElse("")
-        // stall-proofing for the suite too (round-10): the canary runs
-        // for the whole bench, so every suite min-run carries the same
-        // progress-rate evidence the scale points do
-        val canary = suiteCanary.get(name).filter(_ >= 0)
-          .map(c => s""","canary_frac":${f"$c%.3f"}""").getOrElse("")
         s"""    "$name": {"sec":${f3(minT)},"runs":[${runs.map(f3).mkString(",")}],""" +
-          s""""rows":${rowCounts.getOrElse(name, -1L)},"spread":${f"$spread%.2f"},"contended":$contended$cpu$canary}"""
+          s""""rows":${rowCounts.getOrElse(name, -1L)},"spread":${f"$spread%.2f"},"contended":$contended$cpu}"""
       }.mkString(",\n")
       val es = errors.toSeq.sortBy(_._1).map { case (k, v) =>
         s"""    "$k": "${jesc(v)}"""" }.mkString(",\n")
       val sk = skew.toSeq.sortBy(_._1).map { case (k, v) =>
         s"""    "$k": ${f3(v)}""" }.mkString(",\n")
-      val (scaleFactor, scaleFactor3, scaleT) = scale
       def cpuFields(prefix: String, m: RunMeasure): String = {
         val cpu = if (m.cpu >= 0) s""","${prefix}_cpu_sec":${f3(m.cpu)}""" else ""
         // Spark's own per-task executorCpuTime (listener-accumulated):
@@ -1189,129 +697,26 @@ object Bench {
           s""","${prefix}_task_cpu_sec":${f3(m.taskCpu)}""" else ""
         val util = if (m.cpu >= 0 && m.wall > 0)
           s""","${prefix}_util":${f"${m.util}%.3f"}""" else ""
-        // canary_frac ~1.0 = the host was giving this VM full cycles
-        // during the run; < 0.5 = hypervisor-level stall window (the
-        // regime where wall AND cpu numbers are both inflated lies)
-        val canary = if (m.canaryFrac >= 0)
-          s""","${prefix}_canary_frac":${f"${m.canaryFrac}%.3f"}""" else ""
-        // self-healed leg: the displaced degraded measurement stays
-        // published next to the clean one that replaced it
-        val healed = if (m.healedFromWall < 0) "" else
-          s""","${prefix}_healed_from_sec":${f3(m.healedFromWall)}""" +
-            s""","${prefix}_healed_from_frac":${f"${m.healedFromFrac}%.3f"}"""
-        cpu + task + util + canary + healed
+        cpu + task + util
       }
-      val sc = scaleT.sortBy(_._1).map { case (k, p) =>
+      def exp(name: String, e: Option[Double]): String =
+        e.map(v => s""","$name":${f"$v%.2f"}""").getOrElse("")
+      val sc = scale.sortBy(_._1).map { case (k, p) =>
         val sf1 = p.sf1.map(m => f3(m.wall)).getOrElse("null")
-        // Three-band canary discipline (see [[CanaryExcludeFrac]]):
-        // measured legs below the exclusion band never feed a headline
-        // exponent field; every sub-0.8 leg is named in degraded_legs
-        // right next to whatever exponent IS published.
-        val legs = Seq(("sf01", 1.0, Some(p.sf01)),
-            ("sf1", scaleFactor.toDouble, p.sf1),
-            ("sf3", scaleFactor3.toDouble, p.sf3))
-          .collect { case (n, f, Some(m)) => (n, f, m) }
-        def isExcluded(m: RunMeasure): Boolean =
-          m.canaryFrac >= 0 && m.canaryFrac < CanaryExcludeFrac
-        def isDegraded(m: RunMeasure): Boolean =
-          m.canaryFrac >= 0 && m.canaryFrac < CanaryDegradedFrac
-        val admissible = legs.filterNot(l => isExcluded(l._3))
-        val anyExcluded = admissible.size != legs.size
-        val degradedLegs = legs.filter(l => isDegraded(l._3)).map(_._1)
-        val sf01Ok = !isExcluded(p.sf01)
-        val exp = p.sf1
-          .filter(m => p.sf01.wall > 0 && sf01Ok && !isExcluded(m))
-          .map(m => f"${math.log(m.wall / p.sf01.wall) / math.log(scaleFactor.toDouble)}%.2f")
-          .getOrElse("null")
-        val admWall = admissible.collect {
-          case (_, f, m) if m.wall > 0 => (f, m.wall) }
-        val exp3 = if (p.sf3.isEmpty || admWall.size < 3) ""
-          else fitExponent(admWall)
-            .map(e => s""","exponent_3pt":${f"$e%.2f"}""").getOrElse("")
-        // CPU-second exponents: host stalls inflate wall more than
-        // work, but hypervisor oversubscription inflates BOTH (the r9
-        // finding) — so excluded legs stay out of this fit too
-        val cpuPts = admissible.collect {
-          case (_, f, m) if m.cpu > 0 => (f, m.cpu) }
-        val expCpu = if (cpuPts.size < 2) "" else fitExponent(cpuPts)
-          .map(e => s""","exponent_cpu":${f"$e%.2f"}""").getOrElse("")
-        // when the sf01→sf1 headline ratio is unavailable (sf1 leg
-        // excluded) but ≥2 admissible wall points remain (e.g. sf01 +
-        // sf3), publish their fit under its own name — an excluded leg
-        // should cost the poisoned number, not every number
-        val expAdmissible = if (exp != "null" || admWall.size < 2) ""
-          else fitExponent(admWall)
-            .map(e => s""","exponent_admissible":${f"$e%.2f"}""").getOrElse("")
-        // the raw all-legs fit survives, clearly labeled, when the
-        // filter dropped something — numbers are kept, never headline
-        val allWall = legs.collect {
-          case (_, f, m) if m.wall > 0 => (f, m.wall) }
-        val expUnfiltered = if (!anyExcluded || allWall.size < 2) ""
-          else fitExponent(allWall)
-            .map(e => s""","exponent_unfiltered":${f"$e%.2f"}""").getOrElse("")
-        val degField = if (degradedLegs.isEmpty) ""
-          else degradedLegs.map("\"" + _ + "\"")
-            .mkString(""","degraded_legs":[""", ",", "]")
-        // one named headline per point, with provenance — see
-        // [[headlineExponent]]; degraded-ness is judged over the
-        // ADMISSIBLE legs (excluded ones already left every fit)
-        val someDegraded = admissible.exists(l => isDegraded(l._3))
-        val everyDegraded =
-          admissible.nonEmpty && admissible.forall(l => isDegraded(l._3))
-        val measuredHead = headlineExponent(admWall, cpuPts,
-          someDegraded, anyExcluded, everyDegraded)
-        // direct-count adjudication (VERDICT r14 item 5): a count-pinned
-        // leg whose measured headline would be flagged (degraded legs in
-        // the fit, a cpu fallback, or no admissible fit at all) headlines
-        // the count verdict instead — see [[DirectCountPins]]
-        val pin = DirectCountPins.get(k)
-          .filter { _ => measuredHead.forall { case (_, src) =>
-            src == "cpu" || src == "wall_degraded" } }
-        val headField = pin.map { case (pinExp, adjudicator) =>
-            val measured = measuredHead
-              .map { case (e, src) => f"measured $src fit $e%.2f kept in " +
-                "exponent fields; " }
-              .getOrElse("no admissible measured fit this run; ")
-            s""","exponent_headline":${f"$pinExp%.2f"}""" +
-              s""","headline_source":"direct-count"""" +
-              s""","headline_note":"${jesc(measured + "workload count-" +
-                s"proven linear ($adjudicator; pinned in " +
-                "ScaleLinearitySpec) - the count verdict headlines")}"""" }
-          .orElse(measuredHead.map { case (e, src) =>
-            // self-explaining provenance (r12 VERDICT item 2: the
-            // competing fit was "unexplained in the artifact itself")
-            val noteTxt =
-              if (src == "cpu" && everyDegraded)
-                "every admissible wall leg degraded (no clean anchor) - " +
-                  "cpu fit headlines; wall fit published alongside, " +
-                  "direct-count spec is the tiebreaker"
-              else if (src == "wall_degraded")
-                "clean legs anchor the wall fit; degraded legs named in " +
-                  "degraded_legs - raw cpu inflates more than wall under " +
-                  "co-tenancy (r11 anchors)"
-              else ""
-            val note = if (noteTxt.isEmpty) ""
-              else s""","headline_note":"$noteTxt""""
-            s""","exponent_headline":${f"$e%.2f"},"headline_source":"$src"$note""" })
-          .getOrElse("")
         val sf3 = p.sf3.map(m =>
           s""","sf3_sec":${f3(m.wall)}${cpuFields("sf3", m)}""").getOrElse("")
+        val exponent = p.exponent.map(e => f"$e%.2f").getOrElse("null")
         val cancelled = p.cancelledAt
           .map(s => s""","cancelled_at_sec":$s""").getOrElse("")
-        val loadFlag = (if (p.loadFlagged) s""","load_flagged":true""" else "") +
-          (if (p.loadDeferred) s""","load_deferred":true""" else "")
-        val stall = (if (p.stallRetries > 0)
-            s""","stall_retries":${p.stallRetries}""" else "") +
-          (if (p.stallSuspect) s""","stall_suspect":true""" else "")
-        val shm = if (p.shmHwmMb >= 0)
-          s""","shm_hwm_mb":${p.shmHwmMb}""" else ""
+        val loadFlag = if (p.loadFlagged) s""","load_flagged":true""" else ""
         val budget = if (p.budgetTruncated)
           s""","budget_truncated":true""" else ""
         val note = p.note.map(n => s""","note":"${jesc(n)}"""").getOrElse("")
         s"""    "$k": {"sf01_sec":${f3(p.sf01.wall)}${cpuFields("sf01", p.sf01)},""" +
           s""""sf1_sec":$sf1${p.sf1.map(cpuFields("sf1", _)).getOrElse("")}$sf3,""" +
-          s""""exponent":$exp$exp3$expCpu$expAdmissible$expUnfiltered$degField$headField,"load_avg_1m":${f"${p.loadMax}%.2f"}""" +
-          s"""$cancelled$loadFlag$stall$shm$budget$note}"""
+          s""""exponent":$exponent${exp("exponent_3pt", p.exponent3pt)}""" +
+          s"""${exp("exponent_cpu", p.exponentCpu)},"load_avg_1m":${f"${p.loadMax}%.2f"}""" +
+          s"""$cancelled$loadFlag$budget$note}"""
       }.mkString(",\n")
       val nContended = timings.keys.count { name =>
         val runs = allRuns.getOrElse(name, Seq.empty)
@@ -1325,8 +730,8 @@ object Bench {
            |  "load_avg_1m": ${f"$loadAvg%.2f"},
            |  "n_cpu": $nCpu,
            |  "budget_sec": $budgetSec,
-           |  "n_budget_truncated": ${scaleT.count(_._2.budgetTruncated)},
-           |  "budget_note": "global wall-clock budget (SPARK_GRAFT_BENCH_BUDGET_SEC): when exceeded, remaining scale legs/retries are skipped and marked budget_truncated instead of overrunning the driver (r9's artifact died rc=124); the artifact is rewritten after the suite and after EVERY scale point, so a kill truncates coverage, never the round record. CPU seconds everywhere are process CPU MINUS the canary spin thread's own burn (ThreadMXBean), so the stall instrument no longer biases exponent_cpu; the canary runs for the whole bench including the suite. shm_hwm_mb per scale point = high-water usage of the WHOLE /dev/shm filestore during the point (tmpfs pages compete with executor heap for physical memory whoever wrote them, so this can include other tenants' pages - it explains pressure, it does not attribute it); shuffle refs are GC'd between points",
+           |  "n_budget_truncated": ${scale.count(_._2.budgetTruncated)},
+           |  "budget_note": "global wall-clock budget (SPARK_GRAFT_BENCH_BUDGET_SEC): when exceeded, remaining scale legs are skipped and marked budget_truncated instead of overrunning the run; the artifact is rewritten after the suite and after EVERY scale point, so a kill truncates coverage, never the round record. CPU seconds are process CPU (getProcessCpuTime); shuffle refs are GC'd between points",
            |  "total_min_sec": ${f3(timings.values.sum)},
            |  "n_queries": ${timings.size},
            |  "n_contended": $nContended,
@@ -1356,10 +761,9 @@ object Bench {
            |    "note": "bounded-mode recall AT the sf1 point where the per-bucket/per-query caps bind (at sf0.01 they are no-ops; ACCURACY's 0.85 gate covers that regime). vs-brute = exact top-5 of a random-geometry corpus (everything at cosine ~0.5) - no sub-quadratic method preserves that under binding caps; near-dup = planted twins (cosine ~0.9998) retrieved in top-5, the retrieval contract a dedup/contamination pipeline needs"
            |  },
            |  "scale_points": {
-           |    "factor": $scaleFactor,
-           |    "factor3": $scaleFactor3,
-           |    "canary_best_mops": ${f"${Canary.bestMops}%.1f"},
-           |    "note": "exponent = log(t_sf1/t_sf0.1)/log(factor) on WALL seconds; exponent_3pt = least-squares log-log fit over all measured wall points (the heavy five get a third point at factor3); exponent_cpu = the same fit on CPU seconds. STALL ADJUDICATION: round 9 established (jstack + /proc sampling of a '3100 CPU-s' stage) that the sandbox is a VM whose hypervisor periodically oversubscribes the host, and during those windows GUEST CPU ACCOUNTING LIES - descheduled vCPU time is billed to the running thread, so wall, process-CPU and task-CPU inflate together (identical code measured 2 s and 98 s with 'busy' CPU both times). The canary is the stall-proof instrument: a spin thread whose ops/s rate cannot be faked by the hypervisor; canary_frac = run rate / session best. frac ~1.0 = trustworthy point; frac < 0.3 = the host starved this VM (healthy saturated runs measure 0.52+; documented stalls < 0.2) and the point's wall AND cpu numbers are inflated. Runs are min-of-N with canary-suspect runs re-run up to 2 extra times; a point whose every run is suspect is recorded stall_suspect:true. THREE-BAND LEG ADMISSION (r11): a completed leg whose chosen run's canary_frac < $CanaryExcludeFrac gets one quieter-window retry and, if still degraded, is EXCLUDED from exponent/exponent_3pt/exponent_cpu (raw seconds stay; exponent_unfiltered carries the all-legs fit, clearly labeled); any leg with frac < $CanaryDegradedFrac is named in degraded_legs next to the exponent - so no headline exponent is ever computed from a sub-0.8-canary point without a flag. The exclusion bar sits at $CanaryExcludeFrac, not $CanaryDegradedFrac, because healthy runs that saturate all 32 cores legitimately push the canary to 0.52-0.7 (our own workers steal its fair share) while documented hypervisor stalls measure < 0.2. SELF-HEALING (r14): a leg whose best completed run is canary-degraded (< $CanaryDegradedFrac) is automatically re-measured BEFORE the artifact banks it, idle-canary scheduled - the between-legs spin rate is sampled first and one bounded 20s wait lets a contention wave pass, so heal runs land in quiet windows instead of back inside the wave; bounded at 2 heal runs per leg, and when healing replaced the number the displaced degraded wall stays published in <leg>_healed_from_sec/_frac next to the clean one. SELF-SATURATION stop (r15): a heal run executed under a HEALTHY idle canary that still lands within $SelfSaturationNoise of the pre-heal frac proves the depression is the leg's own 32-core saturation (healthy saturated legs legitimately measure 0.5-0.8) - healing stops for that leg instead of burning the remaining budget on a bar it cannot clear. DIRECT-COUNT ADJUDICATION (r15): legs in DirectCountPins (q_triangles/q_label_prop/q_fuzzy_join) whose measured headline would carry a degraded/cpu source - or no admissible fit at all - headline the fixture's count-proven exponent as headline_source 'direct-count' instead, with the measured fits still published in the exponent fields; the counts (probe steps, messages, candidate pairs) scale exactly 10x/30x and are pinned in ScaleLinearitySpec. A completed run averaging < $StallActiveCoresThreshold busy cores over > ${StallMinWallSec.toInt}s wall is also suspect (total starvation). Fixture is ScaleFixture's replica-salted scale-up (per-replica dup structure preserved, cross-replica decorrelated, block-key cardinality scales with data); load_avg_1m is the max 1-min load observed across the point's runs; load_flagged means the AMBIENT load at bench start exceeded ${LoadFlagThreshold.toInt} - and a cancel on such a host is retried once before being recorded",
+           |    "factor": $ScaleFactor,
+           |    "factor3": $ScaleFactor3,
+           |    "note": "each leg is the min wall of a fixed number of runs: 2 at sf0.1 (a registry query's sf0.1 leg is its suite min) and sf1, 1 at sf3 (the heavy five only); an sf1/sf3 run still going after ${ScaleTimeoutSec}s is cancelled and the point records cancelled_at_sec; legs skipped for the global budget mark budget_truncated. exponent = log(t_sf1/t_sf0.1)/log(factor) on wall seconds; exponent_3pt = least-squares log-log fit over the three wall points; exponent_cpu = the same fit on process-CPU seconds over every measured leg. <leg>_cpu_sec = process CPU, <leg>_task_cpu_sec = Spark executorCpuTime, <leg>_util = cpu/(wall*n_cpu). load_avg_1m is the max 1-min load observed across the point's runs; load_flagged means the ambient load at bench start exceeded ${LoadFlagThreshold.toInt}. Nothing is filtered or re-measured: a speed claim is settled by an adjacent A/B. Fixture is ScaleFixture's replica-salted scale-up (per-replica dup structure preserved, cross-replica decorrelated, block-key cardinality scales with data)",
            |    "queries": {
            |$sc
            |    }
@@ -1371,7 +775,7 @@ object Bench {
            |""".stripMargin
       java.nio.file.Files.write(out, json.getBytes("UTF-8"))
       System.err.println(s"[bench] full artifact: $out (load_avg=$loadAvg)")
-    } catch { case e: Throwable =>
+    } catch { case NonFatal(e) =>
       System.err.println(s"[bench] WARN could not write full artifact: $e")
     }
   }
@@ -1436,18 +840,14 @@ object Bench {
     // runs — a stall now inflates one run of several queries, which
     // min-of-3 rejects, instead of every run of one query.
     val nRuns = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    // canary + task-CPU listener run for the WHOLE bench (suite
-    // included) so suite and scale measurements share one instrument
-    // and one (subtracted-out) canary-CPU bias
+    // task-CPU listener for the whole bench, suite included
     CpuClock.register(spark.sparkContext)
-    Canary.start()
     val timings = collection.mutable.LinkedHashMap[String, Double]()
     val allRuns = collection.mutable.LinkedHashMap[String, Vector[Double]]()
     // process-CPU seconds of each run, index-aligned with allRuns: the
     // suite artifact records the cpu of each query's min-wall run so a
     // judge can tell a genuinely slow query from a host-stalled one
     val allCpu = collection.mutable.LinkedHashMap[String, Vector[Double]]()
-    val allCanary = collection.mutable.LinkedHashMap[String, Vector[Double]]()
     val rowCounts = collection.mutable.LinkedHashMap[String, Long]()
     val errors = collection.mutable.LinkedHashMap[String, String]()
     val named = SparkEntry.queries.toSeq.sortBy(_._1)
@@ -1456,8 +856,7 @@ object Bench {
         if (!errors.contains(name)) {
           val obs = if (pass == nRuns) Some(new Observation(s"rows_$name")) else None
           val t0 = System.nanoTime()
-          val cpu0 = CpuClock.benchCpuSec
-          val can0 = Canary.count
+          val cpu0 = CpuClock.processCpuSec
           try {
             val df = fn(spark, sfDir)
             val tapped = obs.map(o => df.observe(o, count(lit(1)).as("rows"))).getOrElse(df)
@@ -1466,11 +865,7 @@ object Bench {
             val wall = (System.nanoTime() - t0) / 1e9
             allRuns(name) = allRuns.getOrElse(name, Vector.empty) :+ wall
             allCpu(name) =
-              allCpu.getOrElse(name, Vector.empty) :+ (CpuClock.benchCpuSec - cpu0)
-            val mops = Canary.observe(Canary.count - can0, wall)
-            allCanary(name) = allCanary.getOrElse(name, Vector.empty) :+
-              (if (mops < 0 || Canary.bestMops <= 0) -1.0
-               else mops / Canary.bestMops)
+              allCpu.getOrElse(name, Vector.empty) :+ (CpuClock.processCpuSec - cpu0)
           } catch { case e: Throwable =>
             val msg = s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(300)}"
             errors(name) = msg
@@ -1483,10 +878,6 @@ object Bench {
     allRuns.foreach { case (name, times) => timings(name) = times.min }
     val suiteCpu: Map[String, Double] = allRuns.flatMap { case (name, times) =>
       allCpu.get(name).filter(_.size == times.size)
-        .map(cs => name -> cs(times.indexOf(times.min)))
-    }.toMap
-    val suiteCanary: Map[String, Double] = allRuns.flatMap { case (name, times) =>
-      allCanary.get(name).filter(_.size == times.size)
         .map(cs => name -> cs(times.indexOf(times.min)))
     }.toMap
     // The driver captures only the TAIL of stdout (observed cap: 2000 chars),
@@ -1566,15 +957,11 @@ object Bench {
     if (java.nio.file.Files.exists(artifactPath))
       try java.nio.file.Files.copy(artifactPath, prevSnapshot,
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         System.err.println(s"[bench] WARN artifact snapshot failed: $e") }
     val skew = skewFixtureTimings(spark, nRuns)
-    val factorEnv = sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTOR", "10").toInt
-    val factor3Env = sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTOR3", "30").toInt
     val scaleEnabled = sys.env.getOrElse("SPARK_GRAFT_SCALE_BENCH", "1") == "1"
-    val scaleDir = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR",
-      sys.env.getOrElse("SPARK_GRAFT_REPO_DIR", "/root/repo") +
-        "/target/scale/sf1")
+    val (scaleDir, _) = scaleDirs
     // ROUND-GATE ORDERING (r10 finding: the default-budget re-anchor
     // spent its whole budget on scale legs and returned the bounded-ANN
     // recall — a round gate — as null): the recall sample runs BEFORE
@@ -1584,10 +971,10 @@ object Bench {
     val annRecall =
       if (scaleEnabled)
         try {
-          ScaleFixture.ensure(spark, sfDir, scaleDir, factorEnv)
+          ScaleFixture.ensure(spark, sfDir, scaleDir, ScaleFactor)
           (boundedAnnRecallSf1(spark, scaleDir),
-            boundedAnnNearDupRecallSf1(spark, scaleDir, sfDir, factorEnv))
-        } catch { case e: Throwable =>
+            boundedAnnNearDupRecallSf1(spark, scaleDir, sfDir, ScaleFactor))
+        } catch { case NonFatal(e) =>
           System.err.println(s"[bench] bounded-ANN recall phase failed: $e")
           (None, None)
         }
@@ -1596,27 +983,18 @@ object Bench {
     // permitting) the synthetic sf1 point — runs BEFORE the scale legs
     // like the ANN recall (a round gate must not be starved by them),
     // costs ~1 min total
-    val streamEnabled = sys.env.getOrElse("SPARK_GRAFT_STREAM_BENCH", "1") == "1"
     def remainingBudgetSec: Double = (deadlineNanos - System.nanoTime()) / 1e9
+    // labels must be distinct even when the suite dir is itself named
+    // sf1 (dev runs) — a duplicate JSON key would silently clobber one
+    // record; the tag also names the work dir, so distinct tags keep the
+    // two measurements' inputs/checkpoints apart
+    val baseLabel = sfDir.split('/').last
+    val scaledLabel = if (baseLabel == "sf1") "sf1_scaled" else "sf1"
     val streaming: Seq[(String, String)] =
-      if (!streamEnabled) Seq.empty
-      else {
-        // labels must be distinct even when the suite dir is itself
-        // named sf1 (dev runs) — a duplicate JSON key would silently
-        // clobber one record; the tag also names the work dir, so
-        // distinct tags keep the two measurements' inputs/checkpoints
-        // apart
-        val baseLabel = sfDir.split('/').last
-        val scaledLabel = if (baseLabel == "sf1") "sf1_scaled" else "sf1"
-        val base = streamingMetrics(spark, sfDir, baseLabel)
-          .map(baseLabel -> _).toSeq
-        val scaled =
-          if (scaleEnabled && remainingBudgetSec > 420)
-            streamingMetrics(spark, scaleDir, scaledLabel)
-              .map(scaledLabel -> _).toSeq
-          else Seq.empty
-        base ++ scaled
-      }
+      streamingMetrics(spark, sfDir, baseLabel).map(baseLabel -> _).toSeq ++
+        (if (scaleEnabled && remainingBudgetSec > 420)
+          streamingMetrics(spark, scaleDir, scaledLabel).map(scaledLabel -> _).toSeq
+        else Seq.empty)
     // index MAINTENANCE economics (r15): one-shot compaction of the
     // fixture-wired maintained near-dup index (no-op when the committed
     // generation is already compacted with no appends since) plus a gc
@@ -1630,24 +1008,22 @@ object Bench {
       val (gens, roots) = graft.sources.StandingIndex.gc(7L * 24 * 3600 * 1000)
       graft.sources.StandingIndex.statsLog.put("gc_gens_removed", gens.toDouble)
       graft.sources.StandingIndex.statsLog.put("gc_roots_removed", roots.toDouble)
-    } catch { case scala.util.control.NonFatal(e) =>
+    } catch { case NonFatal(e) =>
       System.err.println(s"[bench] index maintenance economics failed: $e") }
     def flush(pts: Seq[(String, ScalePoint)]): Unit =
-      writeFullArtifact(timings, allRuns, rowCounts, errors, skew,
-        (factorEnv, factor3Env, pts), annRecall, sfDir, suiteCpu,
-        suiteCanary, budgetSec, streaming)
+      writeFullArtifact(artifactPath, timings, allRuns, rowCounts, errors,
+        skew, pts, annRecall, sfDir, suiteCpu, budgetSec, streaming)
     flush(Seq.empty)
     val scalePts =
       if (scaleEnabled)
         try scalePointTimings(spark, sfDir, timings, ambientLoad, suiteCpu,
-          deadlineNanos, pts => flush(pts), suiteCanary)
-        catch { case e: Throwable =>
+          deadlineNanos, pts => flush(pts))
+        catch { case NonFatal(e) =>
           System.err.println(s"[bench] scale points failed: $e")
-          (factorEnv, factor3Env, Seq.empty[(String, ScalePoint)])
+          Seq.empty[(String, ScalePoint)]
         }
-      else (factorEnv, factor3Env, Seq.empty[(String, ScalePoint)])
-    writeFullArtifact(timings, allRuns, rowCounts, errors, skew, scalePts,
-      annRecall, sfDir, suiteCpu, suiteCanary, budgetSec, streaming)
+      else Seq.empty[(String, ScalePoint)]
+    flush(scalePts)
     quarantineIfWorse(artifactPath, prevSnapshot,
       repoDir.resolve(f"bench_quick_r${roundNumber(repoDir)}%02d.json"))
     // ---- clean shutdown so the metric line is the FINAL stdout line.
@@ -1665,10 +1041,8 @@ object Bench {
         Thread.sleep(200)
       if (sc.statusTracker.getActiveJobIds().nonEmpty)
         System.err.println("[bench] WARN active jobs did not drain in 20s")
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
     sc.setLogLevel("OFF")
-    Canary.stop()
-    ShmWatch.stop()
     spark.stop()
     println(line)
     Console.out.flush()
@@ -1706,7 +1080,7 @@ object Bench {
           s"${n.trunc} vs ${o.trunc}): kept the old one, this run is " +
           s"at $quickPath")
       }
-    } catch { case e: Throwable =>
+    } catch { case NonFatal(e) =>
       System.err.println(s"[bench] WARN artifact quarantine check failed: $e")
     }
 

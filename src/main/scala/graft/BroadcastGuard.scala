@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 /** Measured-size admission for forced dimension-table broadcasts.
@@ -68,11 +69,17 @@ object BroadcastGuard {
     * definition the small side, and re-registering data UNDER a cached
     * plan's path mid-session is already undefined behavior for Spark's
     * own FileIndex caches — tests that regenerate fixtures in place
-    * call [[clearCache]]. */
+    * call [[clearCache]]. Only a `memoKey` or a plan with no
+    * `LogicalRDD` enters the memo: a plan over a per-invocation
+    * checkpoint canonicalizes differently on every call, so its entry
+    * could never hit and would pin that invocation's blocks for the
+    * rest of the session. */
   private val sized = new java.util.concurrent.ConcurrentHashMap[
     (SparkSession, Any, String), (DataFrame, Long)]()
 
   private[graft] def clearCache(): Unit = sized.clear()
+
+  private[graft] def memoSize: Int = sized.size
 
   /** The dim table ready to stand as the build side of an equi-join:
     * `broadcast(...)` when its measured payload fits under half the
@@ -102,9 +109,11 @@ object BroadcastGuard {
       .get(MaxBytesKey, DefaultMaxBytes.toString).toLong
     val effMax = ceiling / 2
     if (effMax >= Long.MaxValue / 4) return broadcast(table)
-    val key = (spark,
-      memoKey.getOrElse(table.queryExecution.analyzed.canonicalized),
-      payloadBytesPerRow.toString)
+    val analyzed = table.queryExecution.analyzed
+    val key =
+      if (memoKey.isEmpty && analyzed.exists(_.isInstanceOf[LogicalRDD])) None
+      else Some((spark, memoKey.getOrElse(analyzed.canonicalized),
+        payloadBytesPerRow.toString))
     // one materialization serves the sizing aggregate AND the join —
     // without it the guard would re-run the (possibly corpus-wide)
     // aggregate that produced the dim table. The sizing job runs
@@ -114,12 +123,12 @@ object BroadcastGuard {
     // behind it and a re-entrant guard use would deadlock. The cost is
     // a rare duplicate sizing pass, whose loser unpersists its
     // checkpoint blocks.
-    val cached = sized.get(key)
+    val cached = key.map(sized.get).orNull
     val (pinned, bytes) = if (cached != null) cached else {
       val p = table.localCheckpoint()
       val row = p.agg(sum(payloadBytesPerRow.cast("long")).as("b")).head()
       val v = (p, if (row.isNullAt(0)) 0L else row.getLong(0))
-      val prev = sized.putIfAbsent(key, v)
+      val prev = key.map(sized.putIfAbsent(_, v)).orNull
       if (prev != null) { p.unpersist(); prev } else v
     }
     if (bytes <= effMax) broadcast(pinned)

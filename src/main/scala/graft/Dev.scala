@@ -12,7 +12,7 @@ import org.apache.spark.sql.SparkSession
   * Dev stages  <sfDir> <q...>                      quick + one line per stage
   * Dev ab      <sfDir> <key> <valA> <valB> <q...>  quick per conf value
   * Dev explain <sfDir> <q...>                      formatted physical plan
-  * Dev scale   <sfDir>                             Bench's scale legs
+  * Dev scale   <sfDir> [q...]                      Bench's scale legs (all, or the named points)
   * Dev stream  <sfDir>                             Bench's streaming measurement
   * }}}
   *
@@ -35,7 +35,7 @@ object Dev {
         println(s"===== $q =====")
         SparkEntry.queries(q)(s, d).explain("formatted")
       }
-      case Seq("scale", d) => scale(_, d)
+      case Seq("scale", d, qs @ _*) => scale(_, d, qs)
       case Seq("stream", d) => s => println(Bench.streamingMetrics(s, d, "dev")
         .map(b => s"{$b}").getOrElse("FAILED"))
       case _ =>
@@ -114,22 +114,25 @@ object Dev {
     })
   }
 
-  /** Generate the [[ScaleFixture]] and time the scale family against
-    * it: the measurement Bench embeds in bench_full_r<N>.json. */
-  private def scale(spark: SparkSession, sfDir: String): Unit = {
+  /** Generate the [[ScaleFixture]] and time the scale family (or the
+    * named points) against it: the measurement Bench embeds in
+    * bench_full_r<N>.json. One line per point: each leg's min wall and
+    * util, then the wall, 3-point and CPU exponents. */
+  private def scale(spark: SparkSession, sfDir: String,
+                    only: Seq[String]): Unit = {
     val ambient = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
-    val (factor, factor3, pts) = Bench.scalePointTimings(spark, sfDir,
-      Map.empty[String, Double], ambient)
+    val pts = Bench.scalePointTimings(spark, sfDir,
+      Map.empty[String, Double], ambient, only = only)
+    def leg(m: Bench.RunMeasure): String = f"${m.wall}%8.2f s u=${m.util}%.2f"
+    def exp(e: Option[Double]): String = e.fold("-")(v => f"$v%.2f")
     pts.sortBy(_._1).foreach { case (k, p) =>
-      val sf1 = p.sf1.map(m => f"${m.wall}%8.2f s u=${m.util}%.2f").getOrElse(
-        s"cancelled@${p.cancelledAt.getOrElse(0)}s")
-      val sf3 = p.sf3.map(m => f"  sf3(x$factor3) ${m.wall}%8.2f s u=${m.util}%.2f")
-        .getOrElse("")
-      val exp = p.sf1.map(m =>
-        f"${math.log(m.wall / p.sf01.wall) / math.log(factor.toDouble)}%.2f").getOrElse("-")
-      val stall = if (p.stallSuspect) "  STALL-SUSPECT" else ""
-      println(f"$k%-20s sf0.1 ${p.sf01.wall}%7.2f s   sf1 $sf1   exp $exp$sf3$stall")
+      val sf1 = p.sf1.map(leg).getOrElse(
+        if (p.budgetTruncated) "truncated" else s"cancelled@${p.cancelledAt.getOrElse(0)}s")
+      val sf3 = p.sf3.map(m => s"  sf3 ${leg(m)}").getOrElse("")
+      println(f"$k%-20s sf0.1 ${leg(p.sf01)}   sf1 $sf1$sf3   " +
+        s"exp ${exp(p.exponent)} exp3 ${exp(p.exponent3pt)} " +
+        s"exp_cpu ${exp(p.exponentCpu)}")
     }
   }
 }

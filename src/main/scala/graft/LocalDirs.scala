@@ -29,7 +29,7 @@ object LocalDirs {
     * page-pressure thrash for the disk latency it was avoiding. Below
     * the floor (default 16 GiB, `GRAFT_SHM_MIN_FREE_GB`) the session
     * falls back to the disk tmpdir and says so on stderr — slower but
-    * honest, and the bench artifact's shm high-water column shows why. */
+    * honest. */
   private def shmFloorBytes: Long =
     sys.env.getOrElse("GRAFT_SHM_MIN_FREE_GB", "16").toLong * (1L << 30)
 
@@ -53,24 +53,6 @@ object LocalDirs {
       }
     } else System.getProperty("java.io.tmpdir")
   }
-
-  /** Bytes currently used on the WHOLE /dev/shm filestore (total −
-    * usable) — deliberately not scoped to the graft shuffle root:
-    * tmpfs pages compete with executor heap for the same physical
-    * memory regardless of which tenant wrote them, so whole-filestore
-    * usage is the pressure number the bench artifact's `shm_hwm_mb`
-    * records (it can therefore include other tenants' pages — a
-    * high-water mark here explains pressure, it does not attribute
-    * it). -1 when unavailable. */
-  def shmUsedBytes: Long =
-    try {
-      val root = java.nio.file.Paths.get("/dev/shm")
-      if (!java.nio.file.Files.isDirectory(root)) -1L
-      else {
-        val store = java.nio.file.Files.getFileStore(root)
-        store.getTotalSpace - store.getUsableSpace
-      }
-    } catch { case _: Throwable => -1L }
 
   /** Remove scratch dirs owned by DEAD processes (pid-tagged, exact via
     * ProcessHandle) plus any legacy un-tagged spark-* dir older than

@@ -626,8 +626,8 @@ object Analytics {
       // driver) it degrades to exactly the old shuffle_hash plan —
       // the BroadcastGuard contract (the bm25/surprisal/tfidf shape).
       // No memoKey: the plan hangs off a per-invocation checkpoint, so
-      // every invocation re-sizes its own adjacency — nothing persists
-      // across bench passes.
+      // every invocation re-sizes its own adjacency and the guard keeps
+      // no memo entry for it (the checkpoint lives as long as the query).
       val adj = graft.BroadcastGuard.dim(
         ed.groupBy(col("u"))
           .agg(sort_array(collect_list(col("v"))).as("nbrs")),

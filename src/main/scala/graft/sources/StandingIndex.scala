@@ -125,7 +125,7 @@ object StandingIndex {
       if (s.nonEmpty) buildLog.putIfAbsent(label, s.toDouble)
     } catch { case _: Throwable => () } // pre-r14 empty marker: no record
 
-  private def repoRoot: String =
+  private[graft] def repoRoot: String =
     sys.env.getOrElse("SPARK_GRAFT_REPO_DIR", "/root/repo")
 
   private[graft] def standingRoot: String = s"$repoRoot/target/standing"

@@ -90,46 +90,6 @@ class BenchArtifactSpec extends AnyFunSuite {
     }
   }
 
-  test("headline exponent provenance: wall-first, cpu only as last resort") {
-    val w2 = Seq((1.0, 1.0), (10.0, 10.0)) // wall slope exactly 1.0
-    val w3 = w2 :+ ((30.0, 27.0))
-    val cpu = Seq((1.0, 2.0), (10.0, 14.0)) // cpu slope ln7/ln10 ~ 0.845
-    assert(Bench.headlineExponent(w3, cpu, anyDegraded = false,
-      anyExcluded = false).exists(_._2 == "wall_3pt"))
-    assert(Bench.headlineExponent(w2, cpu, anyDegraded = false,
-      anyExcluded = false).exists(_._2 == "wall"))
-    // an excluded leg dropped out but the survivors are clean: still wall
-    assert(Bench.headlineExponent(w2, cpu, anyDegraded = false,
-      anyExcluded = true).exists(_._2 == "wall_admissible"))
-    // SOME legs degraded but a clean leg anchors the fit: the wall
-    // STAYS the headline (raw CPU inflates more than wall under
-    // co-tenancy billing — r11 anchors), labeled with its provenance
-    val h = Bench.headlineExponent(w2, cpu, anyDegraded = true,
-      anyExcluded = false)
-    assert(h.exists(_._2 == "wall_degraded"))
-    assert(h.exists(e => math.abs(e._1 - 1.0) < 1e-9))
-    // EVERY admissible leg degraded (r12 VERDICT item 2): no clean wall
-    // instrument exists at the point, so the CPU fit headlines and the
-    // wall fit is merely published alongside
-    val ad = Bench.headlineExponent(w2, cpu, anyDegraded = true,
-      anyExcluded = false, allDegraded = true)
-    assert(ad.exists(_._2 == "cpu"))
-    assert(ad.exists(e =>
-      math.abs(e._1 - math.log(7.0) / math.log(10.0)) < 1e-9))
-    // ... but with no usable cpu fit, the degraded wall fit still beats
-    // publishing nothing
-    assert(Bench.headlineExponent(w2, Seq.empty, anyDegraded = true,
-      anyExcluded = false, allDegraded = true).exists(_._2 == "wall_degraded"))
-    // no two admissible wall points: the CPU fit is the last resort
-    val c = Bench.headlineExponent(Seq((1.0, 1.0)), cpu,
-      anyDegraded = true, anyExcluded = true)
-    assert(c.exists(_._2 == "cpu"))
-    assert(c.exists(e =>
-      math.abs(e._1 - math.log(7.0) / math.log(10.0)) < 1e-9))
-    assert(Bench.headlineExponent(Seq((1.0, 1.0)), Seq.empty,
-      anyDegraded = true, anyExcluded = false).isEmpty)
-  }
-
   // Format-drift guard (r11 ADVICE): the quarantine's stats extraction
   // runs against a REAL writeFullArtifact-produced artifact — the
   // newest committed round record — so a field rename or restructure in

@@ -71,6 +71,26 @@ class BroadcastGuardSpec extends SparkSuite {
     }
   }
 
+  test("a checkpoint-derived dim is never memoized; a stable plan memoizes once") {
+    val (_, dim) = fixture
+    val payload = length(col("tok")) + lit(8)
+    val before = BroadcastGuard.memoSize
+    // each invocation of a query that builds its dim over a fresh
+    // localCheckpoint: the plan never canonicalizes the same twice
+    (1 to 2).foreach { _ =>
+      BroadcastGuard.dim(dim.localCheckpoint(), payload, "spec-ckpt-dim")
+    }
+    assert(BroadcastGuard.memoSize == before,
+      "a per-invocation checkpoint plan must not pin a memo entry")
+    val stable = spark.range(37)
+      .select(col("id").cast("string").as("tok"), (col("id") * 3).as("w"))
+    (1 to 2).foreach { _ =>
+      BroadcastGuard.dim(stable, payload, "spec-stable-dim")
+    }
+    assert(BroadcastGuard.memoSize == before + 1,
+      "a stable plan is sized once per session and memoized")
+  }
+
   test("the three vocabulary queries are result-invariant under fallback") {
     // the correctness half of VERDICT r12 item 1's done-condition: with
     // the ceiling forced below any real table, every guarded query runs
