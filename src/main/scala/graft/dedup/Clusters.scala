@@ -1,8 +1,14 @@
 package graft.dedup
 
-import org.apache.spark.sql.DataFrame
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.util.TypeUtils
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
 /** Duplicate-cluster resolution: near-dup PAIRS (from MinHash/SimHash/
   * embedding banding) → connected components → one canonical
@@ -24,73 +30,86 @@ import org.apache.spark.sql.functions._
   * a chain of borderline near-dups makes diameter, not log n, the
   * round bound).
   *
+  * Local finish: every round costs several Spark jobs, and on a small
+  * pair graph those rounds ARE the whole cost (471 edges took 45 jobs).
+  * Each round already counts its edges for the convergence fingerprint;
+  * as soon as that count (plus the distinct self-pair and null-ended
+  * rows) is at most `LocalFinishEdges`, the driver collects those rows,
+  * runs a union-find and returns a local DataFrame. A small graph runs
+  * 0 rounds; a large one runs distributed rounds until its edge set
+  * fits, then finishes locally. The star rounds preserve connectivity,
+  * so the handoff gives the same labels at any round.
+  *
   * Scale notes:
-  *  - each round is two groupBy-min + two joins over the EDGE table
-  *    (bounded by the near-dup pair count, orders of magnitude smaller
-  *    than the corpus), all declarative — nothing is collected and
-  *    nothing is broadcast;
+  *  - the driver never collects more than `LocalFinishEdges` rows, and
+  *    the returned local DataFrame has one row per node. Worst case at
+  *    the bound (2^20 disjoint long-id edges, 2^21 nodes, 4 cores, 6 GB
+  *    driver heap): the finish took 12.9 s, the result held ~190 MB of
+  *    heap and the heap peaked at ~1.5 GB, uncollected garbage included;
+  *  - above the bound each round is two groupBy-min + two joins over the
+  *    EDGE table (bounded by the near-dup pair count, orders of magnitude
+  *    smaller than the corpus), all declarative and nothing broadcast;
   *  - edge counts are non-increasing round over round (stars only
   *    shrink), so the first round bounds every intermediate;
-  *  - `localCheckpoint` after each round truncates lineage, or Catalyst
-  *    re-analysis cost grows quadratically with iteration count (the
-  *    standard iterative-DataFrame pattern; swap for `checkpoint(dir)`
-  *    on a real cluster if executor loss during the loop matters);
-  *  - convergence is detected by a constant-size fingerprint aggregate
-  *    (edge count + hash sum) — the driver loop carries two longs per
-  *    round, no data.
+  *  - each round's edge table is a `localCheckpoint` (lineage truncated,
+  *    or Catalyst re-analysis cost grows quadratically with iteration
+  *    count), materialized by that round's fingerprint job; a round's
+  *    checkpoint is released as soon as the next one is materialized,
+  *    and the local finish releases all of them. Swap for
+  *    `checkpoint(dir)` on a real cluster if executor loss during the
+  *    loop matters;
+  *  - convergence is detected by a constant-size fingerprint (edge count
+  *    + hash XOR), one map-only job per round — the driver loop carries
+  *    a few longs per round, no data.
   */
 object Clusters {
 
+  /** Largest row count `connectedComponents` collects to finish on the
+    * driver: oriented edges plus distinct self-pair / null-ended rows. */
+  val LocalFinishEdges: Long = 1L << 20
+
   /** Connected components of the undirected graph given by `edges`.
-    * Returns (id, comp) with `comp` = min node id in the component.
-    * Nodes appearing only in self-pairs label themselves. */
+    * Returns (id, comp) with `comp` = min node id in the component,
+    * under Spark's ordering for the id type. Nodes appearing only in
+    * self-pairs label themselves; a null end is a node of its own with
+    * a null label. `localFinishEdges` = 0 runs the distributed loop on
+    * any non-empty input. */
   def connectedComponents(edges: DataFrame, srcCol: String, dstCol: String,
-                          maxIter: Int = 25): DataFrame = {
-    // ids keep their own type: greatest/least/min and xxhash64 are
+                          maxIter: Int = 25,
+                          localFinishEdges: Long = LocalFinishEdges): DataFrame = {
+    val u = col("u")
+    val v = col("v")
+    // ids keep their own type: comparisons, min and xxhash64 are
     // defined for any orderable column (a cast to long would silently
     // null out string ids)
     //
     // Materialized ONCE, up front: `edges` is typically the tail of a
     // whole near-dup pipeline (shingle → signature → band join) whose
-    // cost dwarfs everything below. Both derived tables (the node set
-    // and the oriented edge set) used to carry their own eager
-    // localCheckpoint, which evaluated that pair lineage TWICE per
-    // query — the r15 profile showed q_dup_clusters at ~82 CPU-s vs
-    // q_dedup_minhash's ~30 for the identical pair stage.
-    val raw = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
-      .localCheckpoint(true)
-
-    // Every labeled node, kept aside so self-pair-only nodes still get a
-    // (singleton) component at the end. Derived lazily from the `raw`
-    // checkpoint — only consumed by the final label join.
-    val nodes = raw.select(col("u").as("id"))
-      .union(raw.select(col("v").as("id")))
+    // cost dwarfs everything below, and the node set, the round-1 edges
+    // and the local finish all read this one table (the r15 profile
+    // showed q_dup_clusters at ~82 CPU-s vs q_dedup_minhash's ~30 when
+    // the pair lineage ran twice). Proper edges are oriented big→small
+    // — the invariant both star steps emit — and loose rows (self-pairs,
+    // null ends) stay as they are, so their nodes survive; `isEdge`
+    // tells the two apart.
+    val base = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
+      .select(when(u < v, v).otherwise(u).as("u"),
+        when(u < v, u).otherwise(v).as("v"))
       .distinct()
+      .localCheckpoint(eager = false)
+    val isEdge = coalesce(u =!= v, lit(false))
+    val idType = base.schema("u").dataType
+    val nullable = base.schema("u").nullable || base.schema("v").nullable
 
-    // Orient big→small and drop self-loops; this is already the
-    // invariant both star steps emit, so round 1 sees canonical input.
-    var e = raw.filter(col("u") =!= col("v"))
-      .select(greatest(col("u"), col("v")).as("u"),
-        least(col("u"), col("v")).as("v"))
-      .distinct()
-      .localCheckpoint(true)
+    val fp0 = fingerprint(base, isEdge)
+    val loose = fp0.loose
+    def fits(fp: Fingerprint): Boolean = fp.edges + loose <= localFinishEdges
 
-    // Probabilistic set-equality check between rounds: (count, XOR of
-    // 64-bit edge hashes — order-independent and overflow-free under
-    // ANSI; the edge set is distinct so self-cancellation cannot hide a
-    // change of the same cardinality except by 2^-64 collision, and
-    // `maxIter` backstops even that). Replaces a join-against-previous-
-    // labels job per round.
-    def fingerprint(df: DataFrame): (Long, Long) = {
-      val r = df.agg(count(lit(1)),
-        coalesce(expr("bit_xor(xxhash64(u, v))"), lit(0L))).head()
-      (r.getLong(0), r.getLong(1))
-    }
-
-    var prev = (-1L, -1L)
-    var cur = fingerprint(e)
+    var e = base.filter(isEdge)
+    var prev = Fingerprint(-1L, -1L, 0L)
+    var cur = fp0.copy(loose = 0L)
     var iter = 0
-    while (cur != prev && iter < maxIter) {
+    while (!fits(cur) && cur != prev && iter < maxIter) {
       // large-star: m(u) = min(neighborhood(u) ∪ {u}); every neighbor
       // v > u links to m. Emitted edges are (v, m) with v > m, so the
       // big→small orientation is preserved by construction.
@@ -106,31 +125,121 @@ object Clusters {
       // this direction is "small"; u and all of them link to the min.
       val ssMin = large.groupBy("u").agg(min("v").as("m"))
       val withM = large.join(ssMin, "u")
-      e = withM.select(col("u"), col("m").as("v"))
+      val next = withM.select(col("u"), col("m").as("v"))
         .union(withM.select(col("v").as("u"), col("m").as("v")))
         .filter(col("u") =!= col("v"))
         .distinct()
-        .localCheckpoint(true)
+        .localCheckpoint(eager = false)
 
       prev = cur
-      cur = fingerprint(e)
+      cur = fingerprint(next, lit(true))
+      if (iter > 0) release(e)
+      e = next
       iter += 1
     }
 
-    if (cur != prev)
-      System.err.println(s"[graft] connectedComponents: maxIter=$maxIter " +
-        "reached before the star fixpoint — labels below are the best " +
-        "lower bound, components may still be split")
+    if (fits(cur)) {
+      val rows =
+        if (iter == 0) base.collect()
+        else e.collect() ++ (if (loose > 0) base.filter(!isEdge).collect() else Array.empty[Row])
+      release(base)
+      if (iter > 0) release(e)
+      val schema = StructType(Seq(StructField("id", idType, nullable),
+        StructField("comp", idType, nullable)))
+      base.sparkSession.createDataFrame(localComponents(rows, idType).asJava, schema)
+    } else {
+      if (cur != prev)
+        System.err.println(s"[graft] connectedComponents: maxIter=$maxIter " +
+          "reached before the star fixpoint — labels below are the best " +
+          "lower bound, components may still be split")
 
-    // Fixpoint: a union of stars (leaf u → center v = component min).
-    // The min-aggregate (not distinct) keeps the output WELL-FORMED —
-    // exactly one label per node — even if the loop exited via maxIter
-    // with some node still pointing at two provisional centers.
-    val labels = e.select(col("u").as("id"), col("v").as("comp"))
-      .union(e.select(col("v").as("id"), col("v").as("comp")))
-      .groupBy(col("id")).agg(min(col("comp")).as("comp"))
-    nodes.join(labels, Seq("id"), "left")
-      .select(col("id"), coalesce(col("comp"), col("id")).as("comp"))
+      // Fixpoint: a union of stars (leaf u → center v = component min).
+      // The min-aggregate (not distinct) keeps the output WELL-FORMED —
+      // exactly one label per node — even if the loop exited via maxIter
+      // with some node still pointing at two provisional centers. Every
+      // node comes from `base`, so self-pair-only nodes still get a
+      // (singleton) component.
+      val nodes = base.select(u.as("id")).union(base.select(v.as("id"))).distinct()
+      val labels = e.select(col("u").as("id"), col("v").as("comp"))
+        .union(e.select(col("v").as("id"), col("v").as("comp")))
+        .groupBy(col("id")).agg(min(col("comp")).as("comp"))
+      nodes.join(labels, Seq("id"), "left")
+        .select(col("id"), coalesce(col("comp"), col("id")).as("comp"))
+    }
+  }
+
+  /** Edge count, XOR of 64-bit edge hashes and loose-row count of a
+    * distinct (u, v) table. */
+  private final case class Fingerprint(edges: Long, hash: Long, loose: Long) {
+    def +(o: Fingerprint): Fingerprint =
+      Fingerprint(edges + o.edges, hash ^ o.hash, loose + o.loose)
+  }
+
+  /** The table's [[Fingerprint]], in one map-only job that also
+    * materializes the table's pending checkpoint: a probabilistic
+    * set-equality check between rounds. The XOR is order-independent
+    * and overflow-free; the edge set is distinct, so self-cancellation
+    * cannot hide a change of the same cardinality except by 2^-64
+    * collision, and `maxIter` backstops even that. */
+  private def fingerprint(df: DataFrame, isEdge: Column): Fingerprint =
+    df.select(isEdge, xxhash64(col("u"), col("v"))).queryExecution.toRdd
+      .mapPartitions { it =>
+        var n, x, loose = 0L
+        it.foreach { r =>
+          if (r.getBoolean(0)) { n += 1; x ^= r.getLong(1) } else loose += 1
+        }
+        Iterator(Fingerprint(n, x, loose))
+      }
+      .collect()
+      .foldLeft(Fingerprint(0L, 0L, 0L))(_ + _)
+
+  /** Drops a `localCheckpoint`'s blocks. `Dataset.unpersist` does not
+    * reach them: a checkpoint is not in the cache manager. */
+  private def release(checkpointed: DataFrame): Unit =
+    checkpointed.queryExecution.analyzed.foreach {
+      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+      case _ =>
+    }
+
+  /** Union-find over collected (u, v) rows: one (id, comp) row per
+    * distinct non-null id, `comp` = component minimum, plus (null, null)
+    * when any end is null. Ids are sorted under Spark's ordering for
+    * `idType` (UTF-8 byte order for strings, not `String.compareTo`), so
+    * the smallest index in a component is its `min`, and ordering ties
+    * are the same node. Rows with equal ends add no edge. */
+  private def localComponents(rows: Array[Row], idType: DataType): Seq[Row] = {
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(idType)
+    val toScala = CatalystTypeConverters.createToScalaConverter(idType)
+    val ord = TypeUtils.getInterpretedOrdering(idType)
+    val cmp: java.util.Comparator[AnyRef] = (a, b) => ord.compare(a, b)
+    def end(r: Row, i: Int): AnyRef =
+      if (r.isNullAt(i)) null else toCatalyst(r.get(i)).asInstanceOf[AnyRef]
+    val us = rows.map(end(_, 0))
+    val vs = rows.map(end(_, 1))
+    val sorted = (us ++ vs).filter(_ != null)
+    java.util.Arrays.sort(sorted, cmp)
+    val ids = new Array[AnyRef](sorted.length)
+    var n = 0
+    sorted.foreach { x =>
+      if (n == 0 || cmp.compare(ids(n - 1), x) != 0) { ids(n) = x; n += 1 }
+    }
+    def index(x: AnyRef): Int = java.util.Arrays.binarySearch(ids, 0, n, x, cmp)
+
+    val parent = Array.range(0, n)
+    def find(i0: Int): Int = {
+      var i = i0
+      while (parent(i) != i) { parent(i) = parent(parent(i)); i = parent(i) }
+      i
+    }
+    us.indices.foreach { i =>
+      if (us(i) != null && vs(i) != null) {
+        val a = find(index(us(i)))
+        val b = find(index(vs(i)))
+        if (a < b) parent(b) = a else if (b < a) parent(a) = b
+      }
+    }
+    val labeled = (0 until n).map(i => Row(toScala(ids(i)), toScala(ids(find(i)))))
+    if (us.contains(null) || vs.contains(null)) labeled :+ Row(null, null) else labeled
   }
 
   /** (doc_id, cluster_id, cluster_size) for every doc in some near-dup
@@ -138,8 +247,10 @@ object Clusters {
     * left to the planner (AQE broadcasts it when it is actually small
     * — one row per COMPONENT, which is unbounded at lake scale, so a
     * forced broadcast would be a driver OOM). */
-  def dupClusters(pairs: DataFrame, srcCol: String, dstCol: String): DataFrame = {
-    val cc = connectedComponents(pairs, srcCol, dstCol)
+  def dupClusters(pairs: DataFrame, srcCol: String, dstCol: String,
+                  localFinishEdges: Long = LocalFinishEdges): DataFrame = {
+    val cc = connectedComponents(pairs, srcCol, dstCol,
+      localFinishEdges = localFinishEdges)
     val sizes = cc.groupBy(col("comp")).agg(count(lit(1)).as("cluster_size"))
     cc.join(sizes, "comp")
       .select(col("id").as("doc_id"), col("comp").as("cluster_id"),
@@ -159,8 +270,10 @@ object Clusters {
     * corpus). `docs` should be pre-projected to (id, score) — document
     * payloads stay out of both the shuffle and the window sort. */
   def keepBest(docs: DataFrame, idCol: String, pairs: DataFrame,
-               srcCol: String, dstCol: String, scoreCol: String): DataFrame = {
-    val cc = connectedComponents(pairs, srcCol, dstCol)
+               srcCol: String, dstCol: String, scoreCol: String,
+               localFinishEdges: Long = LocalFinishEdges): DataFrame = {
+    val cc = connectedComponents(pairs, srcCol, dstCol,
+      localFinishEdges = localFinishEdges)
       .select(col("id").as(idCol), col("comp"))
     val labeled = docs.join(cc, Seq(idCol), "left")
       .withColumn("cluster_id", coalesce(col("comp"), col(idCol)))

@@ -17,6 +17,10 @@ class ShuffleSeamSpec extends AnyFunSuite {
 
   private val sfDir = "/root/testdata/sf0.001"
 
+  // q_dup_clusters: the minhash pair pipeline plus connected components
+  // (on this fixture, the local finish over a checkpointed edge table)
+  private val queries = Seq("q1_agg", "q_join_smj", "q_wordcount", "q_dup_clusters")
+
   private def runWith(shuffleManager: Option[String]): Map[String, Array[String]] = {
     SparkSession.getActiveSession.foreach(_.stop())
     SparkSession.clearActiveSession()
@@ -30,7 +34,7 @@ class ShuffleSeamSpec extends AnyFunSuite {
     shuffleManager.foreach(b.config("spark.shuffle.manager", _))
     val spark = b.getOrCreate()
     try {
-      Seq("q1_agg", "q_join_smj", "q_wordcount").map { q =>
+      queries.map { q =>
         val rows = SparkEntry.queries(q)(spark, sfDir)
           .collect().map(_.toString).sorted
         q -> rows
@@ -126,7 +130,7 @@ class ShuffleSeamSpec extends AnyFunSuite {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     try {
-      Seq("q1_agg", "q_join_smj", "q_wordcount").foreach { q =>
+      queries.foreach { q =>
         FaultInjection.arm(2)
         val rows = SparkEntry.queries(q)(spark, sfDir)
           .collect().map(_.toString).sorted
