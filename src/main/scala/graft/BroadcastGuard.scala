@@ -121,7 +121,7 @@ object BroadcastGuard {
     // computeIfAbsent would hold the bin lock across a multi-second
     // Spark job — key-colliding concurrent dim() calls would serialize
     // behind it and a re-entrant guard use would deadlock. The cost is
-    // a rare duplicate sizing pass, whose loser unpersists its
+    // a rare duplicate sizing pass, whose loser releases its
     // checkpoint blocks.
     val cached = key.map(sized.get).orNull
     val (pinned, bytes) = if (cached != null) cached else {
@@ -129,7 +129,7 @@ object BroadcastGuard {
       val row = p.agg(sum(payloadBytesPerRow.cast("long")).as("b")).head()
       val v = (p, if (row.isNullAt(0)) 0L else row.getLong(0))
       val prev = key.map(sized.putIfAbsent(_, v)).orNull
-      if (prev != null) { p.unpersist(); prev } else v
+      if (prev != null) { Checkpoints.release(p); prev } else v
     }
     if (bytes <= effMax) broadcast(pinned)
     else {

@@ -10,9 +10,9 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * graft SQL function (native expressions + the UDTF generator) into
   * each new session's registry at build time. This is the
   * `SparkSessionExtensions` integration seam (the same plug point used
-  * for custom rules/strategies); function injection is the piece this
-  * engine needs — its operators are declarative DataFrame plans, which
-  * Catalyst already optimizes without custom rules.
+  * for custom rules/strategies). Besides the functions it injects the
+  * planner strategies of the custom operators (`graft.plans`); their
+  * DataFrame APIs also register them on first use.
   */
 class GraftSessionExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -24,8 +24,10 @@ class GraftSessionExtensions extends (SparkSessionExtensions => Unit) {
     def inject(name: String, usage: String)(b: Seq[Expression] => Expression): Unit =
       ext.injectFunction((FunctionIdentifier(name), info(name, usage), b))
 
-    // custom-operator strategy (group-wise top-k, graft.plans.GroupTopK)
+    // custom-operator strategies (group-wise top-k, graft.plans.GroupTopK;
+    // binary-key prefix sort, graft.plans.PrefixSort)
     ext.injectPlannerStrategy(_ => graft.plans.GroupTopKStrategy)
+    ext.injectPlannerStrategy(_ => graft.plans.PrefixSortStrategy)
 
     inject("graft_cosine", "cosine similarity of two numeric arrays") {
       e => graft.expressions.CosineSimilarity(e(0), e(1))

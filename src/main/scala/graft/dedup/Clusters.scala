@@ -5,10 +5,11 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.util.TypeUtils
-import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
+
+import graft.Checkpoints
 
 /** Duplicate-cluster resolution: near-dup PAIRS (from MinHash/SimHash/
   * embedding banding) → connected components → one canonical
@@ -133,7 +134,7 @@ object Clusters {
 
       prev = cur
       cur = fingerprint(next, lit(true))
-      if (iter > 0) release(e)
+      if (iter > 0) Checkpoints.release(e)
       e = next
       iter += 1
     }
@@ -142,8 +143,8 @@ object Clusters {
       val rows =
         if (iter == 0) base.collect()
         else e.collect() ++ (if (loose > 0) base.filter(!isEdge).collect() else Array.empty[Row])
-      release(base)
-      if (iter > 0) release(e)
+      Checkpoints.release(base)
+      if (iter > 0) Checkpoints.release(e)
       val schema = StructType(Seq(StructField("id", idType, nullable),
         StructField("comp", idType, nullable)))
       base.sparkSession.createDataFrame(localComponents(rows, idType).asJava, schema)
@@ -192,14 +193,6 @@ object Clusters {
       }
       .collect()
       .foldLeft(Fingerprint(0L, 0L, 0L))(_ + _)
-
-  /** Drops a `localCheckpoint`'s blocks. `Dataset.unpersist` does not
-    * reach them: a checkpoint is not in the cache manager. */
-  private def release(checkpointed: DataFrame): Unit =
-    checkpointed.queryExecution.analyzed.foreach {
-      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
-      case _ =>
-    }
 
   /** Union-find over collected (u, v) rows: one (id, comp) row per
     * distinct non-null id, `comp` = component minimum, plus (null, null)

@@ -2,6 +2,9 @@ package graft.shuffle
 
 import org.apache.spark.sql.{Dataset, Encoder}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.BinaryType
+
+import graft.plans.PrefixSort
 
 /** Typed key/value shuffle-merge veneer — the reference's operator
   * surface (partition routing, k-way sorted merge, sorted group
@@ -10,8 +13,10 @@ import org.apache.spark.sql.functions.col
   * Mapping (SURVEY §1.5 / §2.1):
   *  - `partitionByKey`  = reduceID routing (O1–O4): hash exchange.
   *  - `mergeSorted`     = the k-way merge (O5–O7): each output partition
-  *    is a globally key-sorted run — Spark's ExternalSorter IS the
-  *    LPQ/RPQ two-level merge, spill files included.
+  *    is a globally key-sorted run — Spark's external sorter IS the
+  *    LPQ/RPQ two-level merge, spill files included. Binary keys
+  *    radix-sort on their 8-byte prefix with exact tie repair (see
+  *    `mergeSorted`).
   *  - `sortedGroups`    = grouped delivery to the reduce function (O12,
   *    J2CQueue): per-key iterator, keys adjacent.
   * Ordering semantics match the reference's comparators: String sorts
@@ -26,9 +31,23 @@ object KV {
     ds.repartition(n, col("_1"))
 
   /** Partition by key and deliver each partition as a key-sorted run —
-    * the network-levitated merge's output contract. */
-  def mergeSorted[K, V](ds: Dataset[(K, V)], n: Int): Dataset[(K, V)] =
-    ds.repartition(n, col("_1")).sortWithinPartitions(col("_1"))
+    * the network-levitated merge's output contract.
+    *
+    * A `BinaryType` key (terasort's 10-byte keys, `bytes_compare`) is
+    * sorted by [[graft.plans.PrefixSort]]: a radix sort on the key's
+    * 8-byte prefix, then an exact repair inside each run of equal
+    * prefixes. Ties stay exact after spills because Spark's spill
+    * merger orders by prefix first and so keeps equal prefixes
+    * adjacent. Spark itself radix-sorts only keys whose prefix is the
+    * whole key, so a binary key would otherwise take TimSort. Other key
+    * types keep `sortWithinPartitions`, which radix-sorts the fixed-
+    * width ones already. */
+  def mergeSorted[K, V](ds: Dataset[(K, V)], n: Int): Dataset[(K, V)] = {
+    val routed = ds.repartition(n, col("_1"))
+    if (ds.schema("_1").dataType == BinaryType)
+      PrefixSort.sortWithinPartitions(routed.toDF(), "_1").as(ds.encoder)
+    else routed.sortWithinPartitions(col("_1"))
+  }
 
   /** Globally key-sorted stream (range partition + per-partition sort —
     * the TeraSort pattern). */

@@ -1,7 +1,5 @@
 package graft.sources.ifile
 
-import java.io.{DataInputStream, DataOutputStream, InputStream}
-
 import org.apache.hadoop.conf.Configuration
 
 /** Block compression for `graft-ifile` streams, mirroring the
@@ -25,31 +23,55 @@ import org.apache.hadoop.conf.Configuration
   * and compressed files and every reader knows what it has.
   */
 sealed abstract class IFileCodec(val name: String) extends Serializable {
-  def compress(raw: Array[Byte]): Array[Byte]
-  def decompress(comp: Array[Byte], rawLen: Int): Array[Byte]
+  /** Room `compress` needs for `rawLen` input bytes. */
+  def maxCompressedLength(rawLen: Int): Int
+  /** Deflates `src(off until off + len)` into `dst` at `dstOff`;
+    * returns the compressed length. */
+  def compress(src: Array[Byte], off: Int, len: Int,
+               dst: Array[Byte], dstOff: Int): Int
+  /** Inflates `src(off until off + len)` into `dst` at `dstOff`, which
+    * has room for `rawLen` bytes; fails unless exactly `rawLen` come out. */
+  def decompress(src: Array[Byte], off: Int, len: Int,
+                 dst: Array[Byte], dstOff: Int, rawLen: Int): Unit
   def fileSuffix: String = s".$name.ifile"
 }
 
 object IFileCodec {
   case object SnappyCodec extends IFileCodec("snappy") {
-    override def compress(raw: Array[Byte]): Array[Byte] =
-      org.xerial.snappy.Snappy.compress(raw)
-    override def decompress(comp: Array[Byte], rawLen: Int): Array[Byte] = {
-      val out = org.xerial.snappy.Snappy.uncompress(comp)
-      require(out.length == rawLen,
-        s"snappy block inflated to ${out.length}, frame said $rawLen")
-      out
+    import org.xerial.snappy.Snappy
+    override def maxCompressedLength(rawLen: Int): Int =
+      Snappy.maxCompressedLength(rawLen)
+    override def compress(src: Array[Byte], off: Int, len: Int,
+                          dst: Array[Byte], dstOff: Int): Int =
+      Snappy.compress(src, off, len, dst, dstOff)
+    override def decompress(src: Array[Byte], off: Int, len: Int,
+                            dst: Array[Byte], dstOff: Int, rawLen: Int): Unit = {
+      // the block's own length header is checked first, so a corrupt
+      // one can never inflate past the room the frame promised
+      val n = Snappy.uncompressedLength(src, off, len)
+      require(n == rawLen, s"snappy block inflates to $n, frame said $rawLen")
+      Snappy.uncompress(src, off, len, dst, dstOff)
     }
   }
 
   case object ZstdCodec extends IFileCodec("zstd") {
-    override def compress(raw: Array[Byte]): Array[Byte] =
-      com.github.luben.zstd.Zstd.compress(raw, 3)
-    override def decompress(comp: Array[Byte], rawLen: Int): Array[Byte] = {
-      val out = new Array[Byte](rawLen)
-      val n = com.github.luben.zstd.Zstd.decompress(out, comp)
+    import com.github.luben.zstd.Zstd
+    override def maxCompressedLength(rawLen: Int): Int =
+      Zstd.compressBound(rawLen.toLong).toInt
+    override def compress(src: Array[Byte], off: Int, len: Int,
+                          dst: Array[Byte], dstOff: Int): Int = {
+      val n = Zstd.compressByteArray(dst, dstOff, dst.length - dstOff,
+        src, off, len, 3)
+      if (Zstd.isError(n))
+        throw new IllegalStateException(s"zstd: ${Zstd.getErrorName(n)}")
+      n.toInt
+    }
+    override def decompress(src: Array[Byte], off: Int, len: Int,
+                            dst: Array[Byte], dstOff: Int, rawLen: Int): Unit = {
+      val n = Zstd.decompressByteArray(dst, dstOff, rawLen, src, off, len)
+      if (Zstd.isError(n))
+        throw new IllegalStateException(s"zstd: ${Zstd.getErrorName(n)}")
       require(n == rawLen, s"zstd block inflated to $n, frame said $rawLen")
-      out
     }
   }
 
@@ -90,101 +112,87 @@ object IFileCodec {
   }
 }
 
-/** Counts bytes as the CONSUMER pulls them — sits above buffering, so
-  * `count` is exact at every record/block boundary the reader crosses
-  * (a counting layer below a BufferedInputStream would include
-  * readahead and be useless for split accounting). */
-private[ifile] class CountingInputStream(in: InputStream) extends InputStream {
-  private var n = 0L
-  def count: Long = n
-  override def read(): Int = {
-    val b = in.read(); if (b >= 0) n += 1; b
-  }
-  override def read(b: Array[Byte], off: Int, len: Int): Int = {
-    val r = in.read(b, off, len); if (r > 0) n += r; r
-  }
-  override def close(): Unit = in.close()
-}
+/** A refillable window over a byte source, which record and block
+  * frames are parsed straight out of: `buf(pos until lim)` is unread,
+  * and `offset` is the source position of `buf(pos)`, counted from where
+  * the window started (for a split, its seek position). */
+private[ifile] abstract class ByteWindow(capacity: Int) {
+  var buf: Array[Byte] = new Array[Byte](capacity)
+  var pos = 0
+  var lim = 0
+  private var base = 0L
 
-/** Counts bytes written through it; `count` at a record/block boundary
-  * is the boundary's final-file offset (sits between DataOutputStream
-  * and the buffer, so no flush-timing skew). */
-private[ifile] class CountingOutputStream(out: java.io.OutputStream)
-    extends java.io.OutputStream {
-  private var n = 0L
-  def count: Long = n
-  override def write(b: Int): Unit = { out.write(b); n += 1 }
-  override def write(b: Array[Byte], off: Int, len: Int): Unit = {
-    out.write(b, off, len); n += len
-  }
-  override def flush(): Unit = out.flush()
-  override def close(): Unit = out.close()
-}
+  def offset: Long = base + pos
 
-/** Inflates `<VInt rawLen> <VInt compLen> <bytes>` blocks from `in`
-  * (whose `count` starts at 0 at this split's seek position) and serves
-  * the decompressed bytes. Stops — reporting clean end-of-stream —
-  * before inflating a block whose START offset lies at or beyond
-  * `limit`: that block belongs to the next split. */
-private[ifile] class BlockInflaterInputStream(
-    in: CountingInputStream, codec: IFileCodec, limit: Long, file: String)
-    extends InputStream {
-  private val data = new DataInputStream(in)
-  private var block: Array[Byte] = Array.emptyByteArray
-  private var pos = 0
-  private var done = false
+  /** Appends at least one byte at `lim`, or returns false at the end of
+    * the source. */
+  protected def fill(): Boolean
 
-  private def loadBlock(): Boolean = {
-    if (done || in.count >= limit) { done = true; return false }
-    val first = in.read()
-    if (first < 0) { done = true; return false } // clean file end
-    val rawLen = VInt.readWithFirst(first.toByte, data).toInt
-    val compLen = VInt.readInt(data)
-    if (rawLen < 0 || compLen < 0)
-      IFileKV.badFrame("blockLen", math.min(rawLen, compLen), file)
-    val comp = new Array[Byte](compLen)
-    data.readFully(comp)
-    block =
-      try codec.decompress(comp, rawLen)
-      catch { case e: Exception =>
-        throw new IllegalStateException(
-          s"graft-ifile: corrupt ${codec.name} block in $file", e)
+  /** Grows `buf` so that `n` bytes fit after `lim`. */
+  protected final def room(n: Int): Unit =
+    if (buf.length - lim < n)
+      buf = java.util.Arrays.copyOf(buf, math.max(lim + n, buf.length * 2))
+
+  /** True once `n` unread bytes are in the window; false if the source
+    * ends first. Unread bytes move to the front only when a refill is
+    * due, so a frame of any size — larger than the window included —
+    * ends up contiguous in `buf`. */
+  final def ensure(n: Int): Boolean = {
+    while (lim - pos < n) {
+      if (pos > 0) {
+        System.arraycopy(buf, pos, buf, 0, lim - pos)
+        base += pos
+        lim -= pos
+        pos = 0
       }
-    pos = 0
+      room(n - lim)
+      if (!fill()) return false
+    }
     true
   }
-
-  override def read(): Int = {
-    while (pos >= block.length) if (!loadBlock()) return -1
-    val b = block(pos) & 0xff; pos += 1; b
-  }
-  override def read(b: Array[Byte], off: Int, len: Int): Int = {
-    while (pos >= block.length) if (!loadBlock()) return -1
-    val n = math.min(len, block.length - pos)
-    System.arraycopy(block, pos, b, off, n)
-    pos += n
-    n
-  }
-  override def close(): Unit = in.close()
 }
 
-/** Buffers records and emits compressed blocks; the WRITER decides when
-  * to flush (after appending a whole record), so blocks are cut only at
-  * record boundaries. */
-private[ifile] class BlockDeflater(out: DataOutputStream, codec: IFileCodec,
-                                   blockSize: Int) {
-  private val buf = new java.io.ByteArrayOutputStream(blockSize + (blockSize >> 2))
-  val data = new DataOutputStream(buf)
+/** The window over an input stream (a split's file bytes). */
+private[ifile] class StreamWindow(in: java.io.InputStream, capacity: Int)
+    extends ByteWindow(capacity) {
+  override protected def fill(): Boolean = {
+    val r = in.read(buf, lim, buf.length - lim)
+    if (r > 0) lim += r
+    r >= 0
+  }
+}
 
-  def pendingBytes: Int = buf.size()
+/** The window over the inflated contents of `<VInt rawLen> <VInt
+  * compLen> <compLen bytes>` blocks read from `file` (whose offset is 0
+  * at this split's seek position). Ends — reporting a clean end of
+  * source — before inflating a block whose START offset lies at or
+  * beyond `limit`: that block belongs to the next split. */
+private[ifile] class BlockWindow(file: StreamWindow, codec: IFileCodec,
+                                 limit: Long, name: String)
+    extends ByteWindow(IFileKV.DefaultBlockSize) {
+  private var done = false
 
-  def flushBlock(): Unit = if (buf.size() > 0) {
-    val raw = buf.toByteArray
-    val comp = codec.compress(raw)
-    VInt.write(out, raw.length.toLong)
-    VInt.write(out, comp.length.toLong)
-    out.write(comp)
-    buf.reset()
+  private def header(): Int = IFileKV.readVInt(file, name)
+
+  override protected def fill(): Boolean = {
+    if (done || file.offset >= limit || !file.ensure(1)) {
+      done = true // a split's end, or the file's
+      return false
+    }
+    val rawLen = header()
+    val compLen = header()
+    if (rawLen < 0 || compLen < 0)
+      IFileKV.badFrame("blockLen", math.min(rawLen, compLen), name)
+    if (!file.ensure(compLen)) IFileKV.truncated(name)
+    room(rawLen)
+    try codec.decompress(file.buf, file.pos, compLen, buf, lim, rawLen)
+    catch { case e: Exception =>
+      throw new IllegalStateException(
+        s"graft-ifile: corrupt ${codec.name} block in $name", e)
+    }
+    file.pos += compLen
+    lim += rawLen
+    true
   }
 }
 

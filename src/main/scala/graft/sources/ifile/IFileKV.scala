@@ -1,12 +1,11 @@
 package graft.sources.ifile
 
-
 import java.util
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeRow}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
@@ -14,6 +13,7 @@ import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterF
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.{BinaryType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.unsafe.Platform
 
 /** Batch source/sink for the reference's on-the-wire record format:
   * a stream of `<VInt keyLen> <VInt valLen> <key bytes> <val bytes>`
@@ -75,12 +75,29 @@ object IFileKV {
   private[ifile] val DefaultIndexInterval = 1L << 20
   private[ifile] val DefaultMaxSplitBytes = 128L << 20
   private[ifile] val DefaultBlockSize = 1 << 16
+  /** The reader's byte window, and the raw writer's flush size. */
+  private[graft] val WindowBytes = 1 << 16
 
   /** Records that a VInt length field read something other than a
     * non-negative length or the EOF pair — a truncated or foreign file. */
   private[ifile] def badFrame(what: String, v: Int, file: String): Nothing =
     throw new IllegalStateException(
       s"graft-ifile: corrupt frame ($what = $v) in $file")
+
+  /** The source ended inside a frame: a truncated file. */
+  private[ifile] def truncated(file: String): Nothing =
+    throw new java.io.EOFException(
+      s"graft-ifile: $file ends inside a frame (truncated file)")
+
+  /** Reads one VInt-framed int header from `w`. */
+  private[ifile] def readVInt(w: ByteWindow, file: String): Int = {
+    if (!w.ensure(1)) truncated(file)
+    val n = VInt.decodeSize(w.buf(w.pos))
+    if (!w.ensure(n)) truncated(file)
+    val v = VInt.readInt(w.buf, w.pos)
+    w.pos += n
+    v
+  }
 
   private[graft] def sessionConf(): HadoopConfHolder =
     new HadoopConfHolder(SparkSession.active.sessionState.newHadoopConf())
@@ -236,16 +253,16 @@ private[ifile] class IFileKVReader(file: String, start: Long, end: Long,
                                    conf: HadoopConfHolder)
     extends PartitionReader[InternalRow] {
   private val codec = IFileCodec.fromFileName(file)
-  private val counting = {
+  private val fsin = {
     val p = new Path(file)
-    val fsin = p.getFileSystem(conf.value).open(p)
-    if (start > 0) fsin.seek(start)
-    new CountingInputStream(new java.io.BufferedInputStream(fsin, 1 << 16))
+    val in = p.getFileSystem(conf.value).open(p)
+    if (start > 0) in.seek(start)
+    in
   }
-  private val in = codec match {
-    case None    => new java.io.DataInputStream(counting)
-    case Some(c) => new java.io.DataInputStream(
-      new BlockInflaterInputStream(counting, c, end - start, file))
+  private val fileWindow = new StreamWindow(fsin, IFileKV.WindowBytes)
+  private val in: ByteWindow = codec match {
+    case None    => fileWindow
+    case Some(c) => new BlockWindow(fileWindow, c, end - start, file)
   }
   private val bounded = end != Long.MaxValue
   private var row: InternalRow = _
@@ -254,40 +271,41 @@ private[ifile] class IFileKVReader(file: String, start: Long, end: Long,
   override def next(): Boolean = {
     if (eof) return false
     // raw files: a record starting at or past `end` belongs to the next
-    // split (counting sits at a record boundary exactly here)
-    if (codec.isEmpty && bounded && start + counting.count >= end) {
+    // split (the window's offset is a record boundary exactly here)
+    if (codec.isEmpty && bounded && start + in.offset >= end) {
       eof = true
       return false
     }
-    val first = in.read()
-    if (first < 0) {
+    if (!in.ensure(1)) {
       // clean stream end: expected for bounded range reads (the split
       // ends mid-file); a full-file read must end at the EOF marker
       if (!bounded) IFileKV.badFrame("truncated-eof", -1, file)
       eof = true
       return false
     }
-    val keyLenL = VInt.readWithFirst(first.toByte, in)
-    require(keyLenL >= Int.MinValue && keyLenL <= Int.MaxValue,
-      s"VInt out of int range: $keyLenL")
-    val keyLen = keyLenL.toInt
-    val valLen = VInt.readInt(in)
+    val keyLen = IFileKV.readVInt(in, file)
+    val valLen = IFileKV.readVInt(in, file)
     if (keyLen == IFileKV.EofMarker && valLen == IFileKV.EofMarker) {
       eof = true
       return false
     }
     if (keyLen < 0) IFileKV.badFrame("keyLen", keyLen, file)
     if (valLen < 0) IFileKV.badFrame("valLen", valLen, file)
-    val key = new Array[Byte](keyLen)
-    val value = new Array[Byte](valLen)
-    in.readFully(key)
-    in.readFully(value)
+    // key and value must fit one array together
+    if (valLen > Int.MaxValue - keyLen) IFileKV.badFrame("valLen", valLen, file)
+    if (!in.ensure(keyLen + valLen)) IFileKV.truncated(file)
+    // the scan's unsafe projection copies these arrays into its row and
+    // would allocate them itself from any other row shape
+    val key = java.util.Arrays.copyOfRange(in.buf, in.pos, in.pos + keyLen)
+    in.pos += keyLen
+    val value = java.util.Arrays.copyOfRange(in.buf, in.pos, in.pos + valLen)
+    in.pos += valLen
     row = new GenericInternalRow(Array[Any](key, value))
     true
   }
 
   override def get(): InternalRow = row
-  override def close(): Unit = in.close()
+  override def close(): Unit = fsin.close()
 }
 
 // --------------------------------------------------------------- write
@@ -364,62 +382,99 @@ private[ifile] class IFileKVWriterFactory(stageDir: String,
   }
 }
 
-private[ifile] class IFileKVWriter(tempFile: String, finalName: String,
+/** Frames records into one reused block buffer, copying key and value
+  * bytes straight from an [[UnsafeRow]]'s memory (other rows go through
+  * `getBinary`). A raw file flushes the buffer as it is once it holds
+  * 64 KiB; a compressed file deflates it into a reused array once it
+  * holds `blockSize` bytes, so blocks are cut only at record boundaries. */
+private[graft] class IFileKVWriter(tempFile: String, finalName: String,
                                    codec: Option[IFileCodec],
                                    conf: HadoopConfHolder,
                                    indexInterval: Long, blockSize: Int)
     extends DataWriter[InternalRow] {
   private val p = new Path(tempFile)
   private val fs = p.getFileSystem(conf.value)
-  private val counting = new CountingOutputStream(
-    new java.io.BufferedOutputStream(fs.create(p, true), 1 << 16))
-  private val out = new java.io.DataOutputStream(counting)
-  private val deflater = codec.map(c => new BlockDeflater(out, c, blockSize))
+  private val out = fs.create(p, true)
+  private val flushAt = if (codec.isEmpty) IFileKV.WindowBytes else blockSize
+  private var block = new Array[Byte](flushAt + (flushAt >> 2))
+  private var len = 0
+  // bytes handed to `out`; written + len is the next record's offset
+  private var written = 0L
+  // compressed block: room for its two int VInts (at most 5 bytes
+  // each), then the deflated bytes
+  private val HeaderRoom = 10
+  private var packed = Array.emptyByteArray
   // boundary offsets for the .idx sidecar (position 0 is implicit)
   private val marks = scala.collection.mutable.ArrayBuffer[Long]()
   private var lastMark = 0L
 
-  private def markIfDue(): Unit = {
-    val pos = counting.count
+  private def markIfDue(pos: Long): Unit =
     if (pos - lastMark >= indexInterval) { marks += pos; lastMark = pos }
+
+  override def write(record: InternalRow): Unit = record match {
+    case u: UnsafeRow =>
+      if (u.isNullAt(0) || u.isNullAt(1)) nullFrame()
+      // a variable-length field's slot holds (offset << 32 | size)
+      val k = u.getLong(0)
+      val v = u.getLong(1)
+      append(u.getBaseObject, u.getBaseOffset + (k >>> 32), k.toInt,
+        u.getBaseObject, u.getBaseOffset + (v >>> 32), v.toInt)
+    case r =>
+      val key = r.getBinary(0)
+      val value = r.getBinary(1)
+      if (key == null || value == null) nullFrame()
+      append(key, Platform.BYTE_ARRAY_OFFSET, key.length,
+        value, Platform.BYTE_ARRAY_OFFSET, value.length)
   }
 
-  override def write(record: InternalRow): Unit = {
-    val key = record.getBinary(0)
-    val value = record.getBinary(1)
-    require(key != null && value != null,
-      "graft-ifile: null key/value — frame lengths cannot encode null")
-    deflater match {
-      case None =>
-        markIfDue() // record boundary
-        VInt.write(out, key.length.toLong)
-        VInt.write(out, value.length.toLong)
-        out.write(key)
-        out.write(value)
-      case Some(d) =>
-        VInt.write(d.data, key.length.toLong)
-        VInt.write(d.data, value.length.toLong)
-        d.data.write(key)
-        d.data.write(value)
-        if (d.pendingBytes >= blockSize) {
-          // counting.count here is the start offset of the pending
-          // block flushBlock is about to write — a valid seek boundary
-          markIfDue()
-          d.flushBlock()
-        }
+  private def nullFrame(): Nothing = throw new IllegalArgumentException(
+    "graft-ifile: null key/value — frame lengths cannot encode null")
+
+  private def append(kBase: AnyRef, kOff: Long, kLen: Int,
+                     vBase: AnyRef, vOff: Long, vLen: Int): Unit = {
+    if (codec.isEmpty) markIfDue(written + len) // record boundary
+    reserve(VInt.size(kLen) + VInt.size(vLen) + kLen + vLen)
+    len = VInt.write(block, len, kLen)
+    len = VInt.write(block, len, vLen)
+    Platform.copyMemory(kBase, kOff, block, Platform.BYTE_ARRAY_OFFSET + len, kLen)
+    len += kLen
+    Platform.copyMemory(vBase, vOff, block, Platform.BYTE_ARRAY_OFFSET + len, vLen)
+    len += vLen
+    if (len >= flushAt) {
+      // compressed: `written` is the start offset of the block about to
+      // be written — a valid seek boundary
+      if (codec.nonEmpty) markIfDue(written)
+      flush()
     }
+  }
+
+  private def reserve(n: Int): Unit = if (block.length - len < n)
+    block = java.util.Arrays.copyOf(block, math.max(len + n, block.length * 2))
+
+  /** Writes the buffered records: as they are (raw) or as one block
+    * `<VInt rawLen> <VInt compLen> <compLen bytes>`. */
+  private def flush(): Unit = if (len > 0) {
+    codec match {
+      case None =>
+        out.write(block, 0, len)
+        written += len
+      case Some(c) =>
+        val bound = HeaderRoom + c.maxCompressedLength(len)
+        if (packed.length < bound) packed = new Array[Byte](bound)
+        val n = c.compress(block, 0, len, packed, HeaderRoom)
+        val h = VInt.size(len) + VInt.size(n)
+        VInt.write(packed, VInt.write(packed, HeaderRoom - h, len), n)
+        out.write(packed, HeaderRoom - h, h + n)
+        written += h + n
+    }
+    len = 0
   }
 
   override def commit(): WriterCommitMessage = {
-    deflater match {
-      case None =>
-        VInt.write(out, IFileKV.EofMarker.toLong)
-        VInt.write(out, IFileKV.EofMarker.toLong)
-      case Some(d) =>
-        VInt.write(d.data, IFileKV.EofMarker.toLong)
-        VInt.write(d.data, IFileKV.EofMarker.toLong)
-        d.flushBlock()
-    }
+    reserve(2)
+    len = VInt.write(block, len, IFileKV.EofMarker.toLong)
+    len = VInt.write(block, len, IFileKV.EofMarker.toLong)
+    flush()
     out.close()
     val ip = new Path(tempFile + IFileKV.IdxSuffix)
     val iout = new java.io.DataOutputStream(

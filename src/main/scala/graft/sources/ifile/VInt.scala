@@ -1,7 +1,5 @@
 package graft.sources.ifile
 
-import java.io.{DataInput, DataOutput}
-
 /** Hadoop zero-compressed VInt/VLong codec, re-implemented from the
   * public encoding spec so the [[IFileKV]] frames are bit-identical to
   * `org.apache.hadoop.io.WritableUtils.writeVLong` (the reference
@@ -16,25 +14,35 @@ import java.io.{DataInput, DataOutput}
   * dropped. `IFileSpec` differential-tests every boundary against
   * Hadoop's own WritableUtils on the classpath — the byte-compat
   * fixture SURVEY §7.4 calls for.
+  *
+  * Works on byte arrays: the graft-ifile writer frames records into one
+  * reused block buffer and the reader parses frames out of a byte
+  * window, so no stream sits between a record and its bytes.
   */
 object VInt {
 
-  def write(out: DataOutput, value: Long): Unit = {
+  /** Encodes `value` at `buf(pos)`, which has room for `size(value)`
+    * bytes; returns the position after it. */
+  def write(buf: Array[Byte], pos: Int, value: Long): Int = {
     if (value >= -112 && value <= 127) {
-      out.writeByte(value.toInt)
+      buf(pos) = value.toByte
+      pos + 1
     } else {
       var len = -112
       var v = value
       if (v < 0) { v ^= -1L; len = -120 }
       var tmp = v
       while (tmp != 0) { tmp >>>= 8; len -= 1 }
-      out.writeByte(len)
+      buf(pos) = len.toByte
       val nBytes = if (len < -120) -(len + 120) else -(len + 112)
       var idx = nBytes - 1
+      var p = pos + 1
       while (idx >= 0) {
-        out.writeByte(((v >>> (8 * idx)) & 0xff).toInt)
+        buf(p) = (v >>> (8 * idx)).toByte
         idx -= 1
+        p += 1
       }
+      p
     }
   }
 
@@ -47,18 +55,16 @@ object VInt {
     n + 1
   }
 
-  def read(in: DataInput): Long = readWithFirst(in.readByte(), in)
-
-  /** Decode when the first byte was already consumed (readers that use
-    * a raw `InputStream.read()` on the leading byte to distinguish a
-    * clean end-of-stream from a frame). */
-  def readWithFirst(first: Byte, in: DataInput): Long = {
+  /** Decodes the VInt at `buf(pos)`; all `decodeSize(buf(pos))` of its
+    * bytes must be present. */
+  def read(buf: Array[Byte], pos: Int): Long = {
+    val first = buf(pos)
     val len = decodeSize(first)
     if (len == 1) return first.toLong
     var v = 0L
-    var i = 0
-    while (i < len - 1) {
-      v = (v << 8) | (in.readByte() & 0xff)
+    var i = 1
+    while (i < len) {
+      v = (v << 8) | (buf(pos + i) & 0xff)
       i += 1
     }
     if (isNegative(first)) v ^ -1L else v
@@ -73,10 +79,10 @@ object VInt {
   def isNegative(first: Byte): Boolean =
     first < -120 || (first >= -112 && first < 0)
 
-  /** `read` narrowed to Int with a range check (IFile record headers
-    * are VInt-framed ints). */
-  def readInt(in: DataInput): Int = {
-    val v = read(in)
+  /** `read` narrowed to Int with a range check (IFile record and block
+    * headers are VInt-framed ints). */
+  def readInt(buf: Array[Byte], pos: Int): Int = {
+    val v = read(buf, pos)
     require(v >= Int.MinValue && v <= Int.MaxValue, s"VInt out of int range: $v")
     v.toInt
   }

@@ -1,7 +1,6 @@
 package org.apache.spark.shuffle.graft
 
-import org.apache.spark.{ShuffleDependency, SparkConf, TaskContext}
-import org.apache.spark.shuffle.{ShuffleBlockResolver, ShuffleHandle, ShuffleManager, ShuffleReader, ShuffleReadMetricsReporter, ShuffleWriter, ShuffleWriteMetricsReporter}
+import org.apache.spark.SparkConf
 import org.apache.spark.shuffle.sort.SortShuffleManager
 
 /** Pluggable shuffle seam: the engine analog of the reference's whole
@@ -11,13 +10,19 @@ import org.apache.spark.shuffle.sort.SortShuffleManager
   * (plugins/shared/.../UdaShuffleConsumerPluginShared.java:162-344).
   *
   * Spark's equivalent plug point is `spark.shuffle.manager`; this class
-  * occupies it and delegates every operation to the built-in
-  * [[SortShuffleManager]]. On RDMA-capable hardware, `getReader` /
-  * `getWriter` are the two methods a transport-optimized implementation
-  * would override (fetch iterators and push streams respectively) —
-  * registration, handles, block resolution and the sort/spill machinery
-  * stay exactly as Spark implements them, which is what makes the seam
-  * cheap to occupy and safe to swap.
+  * occupies it as a [[SortShuffleManager]]. On RDMA-capable hardware,
+  * `getReader` / `getWriter` are the two methods a transport-optimized
+  * implementation would override (fetch iterators and push streams
+  * respectively) — registration, handles, block resolution and the
+  * sort/spill machinery stay exactly as Spark implements them, which is
+  * what makes the seam cheap to occupy and safe to swap.
+  *
+  * It EXTENDS the sort manager rather than delegating to one because
+  * Spark keys a per-record cost on the manager's class:
+  * `ShuffleExchangeExec.needToCopyObjectsBeforeShuffle` skips the
+  * `UnsafeRow.copy()` of every row before the shuffle write only when
+  * `SparkEnv.get.shuffleManager.isInstanceOf[SortShuffleManager]`. A
+  * delegating manager paid that copy on every shuffle of every query.
   *
   * Lives under `org.apache.spark.shuffle` because the ShuffleManager
   * SPI is `private[spark]`; Spark instantiates it reflectively from the
@@ -25,34 +30,4 @@ import org.apache.spark.shuffle.sort.SortShuffleManager
   * (SparkConf) constructor.
   */
 private[spark] class GraftShuffleManager(conf: SparkConf)
-    extends ShuffleManager {
-
-  private val delegate = new SortShuffleManager(conf)
-
-  override def registerShuffle[K, V, C](
-      shuffleId: Int,
-      dependency: ShuffleDependency[K, V, C]): ShuffleHandle =
-    delegate.registerShuffle(shuffleId, dependency)
-
-  override def getWriter[K, V](
-      handle: ShuffleHandle, mapId: Long, context: TaskContext,
-      metrics: ShuffleWriteMetricsReporter): ShuffleWriter[K, V] =
-    delegate.getWriter(handle, mapId, context, metrics)
-
-  override def getReader[K, C](
-      handle: ShuffleHandle,
-      startMapIndex: Int, endMapIndex: Int,
-      startPartition: Int, endPartition: Int,
-      context: TaskContext,
-      metrics: ShuffleReadMetricsReporter): ShuffleReader[K, C] =
-    delegate.getReader(handle, startMapIndex, endMapIndex,
-      startPartition, endPartition, context, metrics)
-
-  override def unregisterShuffle(shuffleId: Int): Boolean =
-    delegate.unregisterShuffle(shuffleId)
-
-  override def shuffleBlockResolver: ShuffleBlockResolver =
-    delegate.shuffleBlockResolver
-
-  override def stop(): Unit = delegate.stop()
-}
+    extends SortShuffleManager(conf)

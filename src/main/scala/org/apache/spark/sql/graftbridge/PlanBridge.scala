@@ -21,6 +21,9 @@ object PlanBridge {
   def expression(c: Column): Expression =
     classic.ColumnNodeToExpressionConverter(c.node)
 
+  /** The memory manager's page size — what SortExec gives its sorter. */
+  def pageSizeBytes: Long = org.apache.spark.SparkEnv.get.memoryManager.pageSizeBytes
+
   /** Column → SortOrder (honoring .asc/.desc; bare columns sort asc). */
   def sortOrder(c: Column): SortOrder = expression(c) match {
     case s: SortOrder => s

@@ -71,6 +71,22 @@ class BroadcastGuardSpec extends SparkSuite {
     }
   }
 
+  test("Checkpoints.release drops a localCheckpoint's blocks; unpersist does not") {
+    import org.apache.spark.sql.execution.LogicalRDD
+    def rddId(df: org.apache.spark.sql.Dataset[_]): Int =
+      df.queryExecution.analyzed.collectFirst { case r: LogicalRDD => r.rdd.id }.get
+    def listed(id: Int): Boolean =
+      spark.sparkContext.getRDDStorageInfo.exists(_.id == id)
+    val p = spark.range(100).localCheckpoint()
+    val id = rddId(p)
+    assert(listed(id), "checkpoint blocks not in storage")
+    // what the losing sizing pass used to do: the blocks stay pinned
+    p.unpersist()
+    assert(listed(id), "Dataset.unpersist now reaches checkpoints; simplify release")
+    Checkpoints.release(p)
+    assert(!listed(id), "released checkpoint still listed in storage")
+  }
+
   test("a checkpoint-derived dim is never memoized; a stable plan memoizes once") {
     val (_, dim) = fixture
     val payload = length(col("tok")) + lit(8)

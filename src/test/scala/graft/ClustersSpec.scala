@@ -197,10 +197,29 @@ class ClustersSpec extends SparkSuite {
     assert(rows == Map("😀" -> "｡", "｡" -> "｡", "a" -> "a", "b" -> "a"), rows.toString)
   }
 
+  /** Storage ids once the ContextCleaner has dropped the RDDs earlier
+    * tests left unreferenced: otherwise a GC inside the measured call
+    * can shrink the set and fail the comparison for a reason that is
+    * not the call's. */
+  private def settledStorage(): Set[Int] = {
+    def ids() = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+    var prev = Set.empty[Int]
+    var cur = ids()
+    var tries = 0
+    while (cur != prev && tries < 20) {
+      prev = cur
+      System.gc()
+      Thread.sleep(250)
+      cur = ids()
+      tries += 1
+    }
+    cur
+  }
+
   test("local finish: at most 4 jobs over checkpointed pairs, no checkpoint left behind") {
     val sc = spark.sparkContext
     val pairs = fixturePairs().localCheckpoint()
-    val before = sc.getRDDStorageInfo.map(_.id).toSet
+    val before = settledStorage()
     val (rows, jobs) = countingJobs(
       Clusters.connectedComponents(pairs, "doc_a", "doc_b").collect())
     assert(rows.nonEmpty)

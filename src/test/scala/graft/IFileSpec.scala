@@ -21,9 +21,8 @@ class IFileSpec extends SparkSuite {
   }
 
   private def ourEncode(v: Long): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    VInt.write(new DataOutputStream(bos), v)
-    bos.toByteArray
+    val buf = new Array[Byte](9)
+    buf.take(VInt.write(buf, 0, v))
   }
 
   // every byte-length boundary of the encoding, both signs, plus the
@@ -50,12 +49,11 @@ class IFileSpec extends SparkSuite {
 
   test("VInt decode round-trips ours AND Hadoop's bytes") {
     boundaryValues.foreach { v =>
-      assert(VInt.read(new DataInputStream(
-        new ByteArrayInputStream(ourEncode(v)))) == v)
+      assert(VInt.read(ourEncode(v), 0) == v)
       assert(WritableUtils.readVLong(new DataInputStream(
         new ByteArrayInputStream(ourEncode(v)))) == v, s"hadoop reads ours: $v")
-      assert(VInt.read(new DataInputStream(
-        new ByteArrayInputStream(hadoopEncode(v)))) == v, s"we read hadoop's: $v")
+      assert(VInt.read(hadoopEncode(v), 0) == v, s"we read hadoop's: $v")
+      assert(VInt.decodeSize(hadoopEncode(v)(0)) == hadoopEncode(v).length)
     }
   }
 
@@ -361,6 +359,185 @@ class IFileSpec extends SparkSuite {
         .readObject().asInstanceOf[HadoopConfHolder]
       assert(back.value.get("graft.test.marker") == "present")
     } finally spark.sparkContext.hadoopConfiguration.unset("graft.test.marker")
+  }
+
+  // A fixed 10k-record input: keys 0-20 bytes, values 0-210 bytes (one-
+  // and two-byte VInt lengths), one partition so the order is fixed.
+  private def pinnedInput =
+    spark.range(0, 10000, 1, 1).select(
+      expr("substring(unhex(sha1(cast(id AS string))), 1, CAST(id % 21 AS int))").as("key"),
+      expr("encode(concat(repeat(chr(97 + CAST(id % 26 AS int)), CAST(id % 200 AS int)), " +
+        "cast(id AS string)), 'utf-8')").as("value"))
+
+  private def crc32(f: java.io.File): Long = {
+    val c = new java.util.zip.CRC32()
+    c.update(java.nio.file.Files.readAllBytes(f.toPath))
+    c.getValue
+  }
+
+  test("frame bytes are pinned: CRC32 of raw and snappy output for a fixed input") {
+    // taken from the stream-based writer this one replaced
+    Seq("none" -> (3684059063L, 2282660050L), "snappy" -> (3965138129L, 3452271999L)).foreach {
+      case (codec, (wantData, wantIdx)) =>
+        val dir = java.nio.file.Files.createTempDirectory(s"ifile_pin_$codec").toString
+        pinnedInput.write.format("graft-ifile").option("compression", codec)
+          .option("index.interval.bytes", "4096").mode("overwrite").save(dir)
+        val files = new java.io.File(dir).listFiles()
+        val data = files.filter(_.getName.endsWith(".ifile")).head
+        val idx = files.filter(_.getName.endsWith(".ifile.idx")).head
+        assert((crc32(data), crc32(idx)) == (wantData, wantIdx), codec)
+    }
+  }
+
+  private def dataFiles(dir: String): Array[java.io.File] =
+    new java.io.File(dir).listFiles().filter(_.getName.endsWith(".ifile")).sortBy(_.getName)
+
+  private def bytesDf(rows: Seq[Seq[(Array[Byte], Array[Byte])]]) = {
+    import spark.implicits._
+    spark.sparkContext.parallelize(rows, rows.length).flatMap(identity)
+      .toDF("key", "value")
+  }
+
+  /** Cuts `f` to `n` bytes, dropping the local filesystem's checksum
+    * sidecar so the frame parser, not the checksum, sees the damage. */
+  private def truncateTo(f: java.io.File, n: Long): Unit = {
+    val ch = java.nio.channels.FileChannel.open(f.toPath,
+      java.nio.file.StandardOpenOption.WRITE)
+    try ch.truncate(n) finally ch.close()
+    new java.io.File(f.getParent, s".${f.getName}.crc").delete()
+  }
+
+  private def failureText(e: Throwable): String =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .map(t => s"${t.getClass.getName}: ${t.getMessage}").mkString("; ")
+
+  test("records straddling the reader's window edge read back intact") {
+    val w = graft.sources.ifile.IFileKV.WindowBytes
+    // record 2 is <2-byte keyLen><3-byte valLen><200-byte key><300-byte
+    // value>; record 1's size puts the first window edge `d` bytes into
+    // it: inside each header byte, inside the key, inside the value
+    val key2 = Array.tabulate[Byte](200)(i => (i * 7).toByte)
+    val val2 = Array.tabulate[Byte](300)(i => (i * 13 + 1).toByte)
+    val ds = Seq(1, 2, 3, 4, 5, 100, 504)
+    val rows = ds.map { d =>
+      val v1 = Array.fill[Byte](w - d - 5)(d.toByte)
+      Seq(Array[Byte](d.toByte) -> v1, key2 -> val2,
+        Array[Byte](9, d.toByte) -> Array.fill[Byte](3 * w)(7))
+    }
+    Seq("none", "snappy").foreach { codec =>
+      val dir = java.nio.file.Files.createTempDirectory(s"ifile_edge_$codec").toString
+      bytesDf(rows).write.format("graft-ifile").option("compression", codec)
+        .mode("overwrite").save(dir)
+      if (codec == "none") dataFiles(dir).zip(ds).foreach { case (f, d) =>
+        assert(f.length == (w - d) + 505 + (1 + 4 + 2 + 3 * w) + 2, s"d=$d layout")
+      }
+      assert(hexPairs(spark.read.format("graft-ifile").load(dir)) == hexPairs(bytesDf(rows)),
+        codec)
+    }
+  }
+
+  test("a record larger than the window (1 MiB value) reads back, raw and snappy") {
+    val big = Array.tabulate[Byte](1 << 20)(i => (i % 251).toByte)
+    val rows = Seq(Seq(Array[Byte](1) -> Array[Byte](2), Array[Byte](3) -> big,
+      Array.emptyByteArray -> Array.emptyByteArray))
+    Seq("none", "snappy").foreach { codec =>
+      val dir = java.nio.file.Files.createTempDirectory(s"ifile_big_$codec").toString
+      bytesDf(rows).write.format("graft-ifile").option("compression", codec)
+        .mode("overwrite").save(dir)
+      assert(hexPairs(spark.read.format("graft-ifile").load(dir)) == hexPairs(bytesDf(rows)),
+        codec)
+    }
+  }
+
+  test("a file truncated mid-header or mid-payload fails loudly, never returns rows") {
+    // record 2 = <2-byte keyLen 200><1-byte valLen 5><200 key><5 value>
+    val rows = Seq(Seq(Array[Byte](1) -> Array[Byte](2),
+      Array.fill[Byte](200)(3) -> Array.fill[Byte](5)(4)))
+    val dir = java.nio.file.Files.createTempDirectory("ifile_trunc").toString
+    bytesDf(rows).write.format("graft-ifile").mode("overwrite").save(dir)
+    val f = dataFiles(dir).head
+    val whole = java.nio.file.Files.readAllBytes(f.toPath)
+    assert(whole.length == 4 + 208 + 2)
+    // cut after record 2's first header byte, and inside its key
+    Seq(5L, 4L + 3 + 100).foreach { cut =>
+      java.nio.file.Files.write(f.toPath, whole)
+      truncateTo(f, cut)
+      var rowsBack = -1L
+      val e = intercept[org.apache.spark.SparkException] {
+        rowsBack = spark.read.format("graft-ifile").load(dir).count()
+      }
+      assert(rowsBack == -1L)
+      assert(failureText(e).contains("truncated"), s"cut=$cut: ${failureText(e)}")
+    }
+    // a compressed file cut inside its one block fails the same way
+    val dirC = java.nio.file.Files.createTempDirectory("ifile_truncc").toString
+    bytesDf(rows).write.format("graft-ifile").option("compression", "snappy")
+      .mode("overwrite").save(dirC)
+    val fc = dataFiles(dirC).head
+    truncateTo(fc, fc.length - 3)
+    val ec = intercept[org.apache.spark.SparkException] {
+      spark.read.format("graft-ifile").load(dirC).count()
+    }
+    assert(failureText(ec).contains("truncated"), failureText(ec))
+  }
+
+  test("split reads at every sidecar mark agree with the whole read, raw and snappy") {
+    Seq("none", "snappy").foreach { codec =>
+      val dir = java.nio.file.Files.createTempDirectory(s"ifile_marks_$codec").toString
+      kvDf(20000, 1).write.format("graft-ifile").option("compression", codec)
+        .option("block.size.bytes", "1500").option("index.interval.bytes", "2000")
+        .mode("overwrite").save(dir)
+      val idx = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".ifile.idx")).head
+      val marks = idx.length / 8
+      assert(marks > 10, s"$codec: only $marks marks")
+      // max.split.bytes = 1 cuts a split at every mark
+      val split = spark.read.format("graft-ifile").option("max.split.bytes", "1").load(dir)
+      assert(split.rdd.getNumPartitions == marks + 1, codec)
+      assert(hexPairs(split) == hexPairs(spark.read.format("graft-ifile").load(dir)), codec)
+      assert(split.count() == 20000, codec)
+    }
+  }
+
+  test("rows that are not UnsafeRows frame to the same bytes; null keys are refused") {
+    import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeProjection}
+    import org.apache.spark.sql.types.{BinaryType, DataType}
+    import graft.sources.ifile.{IFileCodec, IFileKV, IFileKVWriter}
+    val toUnsafe = UnsafeProjection.create(Array[DataType](BinaryType, BinaryType))
+    val recs = (0 until 3000).map(i =>
+      (Array.tabulate[Byte](i % 17)(j => (i + j).toByte), Array.fill[Byte](i % 300)(i.toByte)))
+    def writeWith(codec: Option[IFileCodec], unsafe: Int => Boolean): Array[Byte] = {
+      val dir = java.nio.file.Files.createTempDirectory("ifile_rows").toString
+      val w = new IFileKVWriter(s"$dir/part-0.ifile", "unused", codec,
+        IFileKV.sessionConf(), 4096, 4096)
+      recs.zipWithIndex.foreach { case ((k, v), i) =>
+        val g = new GenericInternalRow(Array[Any](k, v))
+        w.write(if (unsafe(i)) toUnsafe(g) else g)
+      }
+      w.commit()
+      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(s"$dir/part-0.ifile"))
+    }
+    Seq(None, Some(IFileCodec.SnappyCodec)).foreach { codec =>
+      val viaUnsafe = writeWith(codec, _ => true)
+      assert(writeWith(codec, _ => false).toSeq == viaUnsafe.toSeq, s"$codec generic")
+      assert(writeWith(codec, _ % 3 == 0).toSeq == viaUnsafe.toSeq, s"$codec mixed")
+    }
+    // Spark refuses a null in the sink's non-nullable key column before
+    // the writer runs; the writer refuses it on its own too
+    val e = intercept[Exception] {
+      bytesDf(Seq(Seq((null: Array[Byte]) -> Array[Byte](1))))
+        .write.format("graft-ifile").mode("overwrite")
+        .save(java.nio.file.Files.createTempDirectory("ifile_null").toString)
+    }
+    assert(failureText(e).contains("NOT_NULL_ASSERT_VIOLATION"), failureText(e))
+    val dir = java.nio.file.Files.createTempDirectory("ifile_nullw").toString
+    val w = new IFileKVWriter(s"$dir/part-0.ifile", "unused", None,
+      IFileKV.sessionConf(), 4096, 4096)
+    val nullKey = new GenericInternalRow(Array[Any](null, Array[Byte](1)))
+    Seq(nullKey, toUnsafe(nullKey)).foreach { r =>
+      val e2 = intercept[IllegalArgumentException](w.write(r))
+      assert(e2.getMessage.contains("null key/value"), e2.getMessage)
+    }
+    w.abort()
   }
 
   test("overwrite truncates previous files; binary sort order matches memcmp") {

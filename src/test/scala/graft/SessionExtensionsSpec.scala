@@ -4,8 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** `spark.sql.extensions=graft.GraftSessionExtensions` must make every
-  * graft SQL function available with no register() call — the
-  * cluster-deployment path. Own-session spec (extensions are a
+  * graft SQL function and custom-operator strategy available with no
+  * register() call — the cluster-deployment path. Own-session spec (extensions are a
   * session-build setting); suites run sequentially in the forked JVM. */
 class SessionExtensionsSpec extends AnyFunSuite {
 
@@ -34,6 +34,12 @@ class SessionExtensionsSpec extends AnyFunSuite {
           |LATERAL VIEW graft_posexplode_shingles(t, 3) g AS pos, shingle""".stripMargin)
         .collect().map(r => (r.getInt(0), r.getString(1))).toSeq
       assert(gen == Seq((0, "a b c"), (1, "b c d")))
+      // the custom-operator strategies come from the extension, not from
+      // the first-use registration in their DataFrame APIs
+      assert(spark.experimental.extraStrategies.isEmpty)
+      val strategies = spark.sessionState.planner.strategies
+      assert(strategies.contains(graft.plans.GroupTopKStrategy))
+      assert(strategies.contains(graft.plans.PrefixSortStrategy))
     } finally {
       spark.stop()
       SparkSession.clearActiveSession()

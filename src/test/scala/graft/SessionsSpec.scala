@@ -22,6 +22,10 @@ class SessionsSpec extends AnyFunSuite {
       val conf = spark.conf
       assert(conf.get("spark.shuffle.manager") ==
         "org.apache.spark.shuffle.graft.GraftShuffleManager")
+      // ShuffleExchangeExec.needToCopyObjectsBeforeShuffle skips the
+      // UnsafeRow.copy() of every row before a shuffle write only when
+      // the manager isInstanceOf[SortShuffleManager]
+      assert(org.apache.spark.shuffle.graft.ShuffleSeamAccess.isSortShuffleManager)
       assert(conf.get("spark.io.compression.codec") == "snappy")
       assert(conf.get("spark.io.compression.snappy.blockSize") == "128k")
       assert(SQLConf.get.autoBroadcastJoinThreshold == 67108864L)

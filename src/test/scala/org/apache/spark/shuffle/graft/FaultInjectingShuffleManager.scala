@@ -2,8 +2,8 @@ package org.apache.spark.shuffle.graft
 
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.{ShuffleDependency, SparkConf, TaskContext}
-import org.apache.spark.shuffle.{ShuffleBlockResolver, ShuffleHandle, ShuffleManager, ShuffleReader, ShuffleReadMetricsReporter, ShuffleWriter, ShuffleWriteMetricsReporter}
+import org.apache.spark.{SparkConf, TaskContext}
+import org.apache.spark.shuffle.{ShuffleHandle, ShuffleReader, ShuffleReadMetricsReporter}
 import org.apache.spark.shuffle.sort.SortShuffleManager
 
 /** Test-only fault injector for the shuffle seam: the first
@@ -14,6 +14,10 @@ import org.apache.spark.shuffle.sort.SortShuffleManager
   * Spark's equivalent recovery is TaskSetManager re-attempting the
   * reduce task, which calls `getReader` again). Queries must survive
   * the injected failures with byte-identical results.
+  *
+  * A [[SortShuffleManager]] like the production seam, overriding only
+  * `getReader`, so the injected-fault runs take production's write path
+  * (no pre-shuffle row copy; see `GraftShuffleManager`).
   *
   * Lives under `org.apache.spark.shuffle` because the ShuffleManager
   * SPI is `private[spark]`; instantiated reflectively from
@@ -28,19 +32,7 @@ object FaultInjection {
 }
 
 private[spark] class FaultInjectingShuffleManager(conf: SparkConf)
-    extends ShuffleManager {
-
-  private val delegate = new SortShuffleManager(conf)
-
-  override def registerShuffle[K, V, C](
-      shuffleId: Int,
-      dependency: ShuffleDependency[K, V, C]): ShuffleHandle =
-    delegate.registerShuffle(shuffleId, dependency)
-
-  override def getWriter[K, V](
-      handle: ShuffleHandle, mapId: Long, context: TaskContext,
-      metrics: ShuffleWriteMetricsReporter): ShuffleWriter[K, V] =
-    delegate.getWriter(handle, mapId, context, metrics)
+    extends SortShuffleManager(conf) {
 
   override def getReader[K, C](
       handle: ShuffleHandle,
@@ -48,15 +40,15 @@ private[spark] class FaultInjectingShuffleManager(conf: SparkConf)
       startPartition: Int, endPartition: Int,
       context: TaskContext,
       metrics: ShuffleReadMetricsReporter): ShuffleReader[K, C] = {
-    val inner = delegate.getReader[K, C](handle, startMapIndex, endMapIndex,
+    val inner = super.getReader[K, C](handle, startMapIndex, endMapIndex,
       startPartition, endPartition, context, metrics)
     if (FaultInjection.remaining.getAndDecrement() > 0) {
       FaultInjection.injected.incrementAndGet()
       new ShuffleReader[K, C] {
         override def read(): Iterator[Product2[K, C]] = {
-          // fail mid-stream, not at open: the delegate's fetch really
-          // starts, then the task dies after consuming a record — the
-          // ugliest point in the reference's failure window
+          // fail mid-stream, not at open: the real fetch starts, then
+          // the task dies after consuming a record — the ugliest point
+          // in the reference's failure window
           val it = inner.read()
           if (it.hasNext) it.next()
           throw new RuntimeException(
@@ -65,12 +57,4 @@ private[spark] class FaultInjectingShuffleManager(conf: SparkConf)
       }
     } else inner
   }
-
-  override def unregisterShuffle(shuffleId: Int): Boolean =
-    delegate.unregisterShuffle(shuffleId)
-
-  override def shuffleBlockResolver: ShuffleBlockResolver =
-    delegate.shuffleBlockResolver
-
-  override def stop(): Unit = delegate.stop()
 }
