@@ -8,7 +8,7 @@ import org.apache.spark.sql.SparkSession
   * round record still comes from graft.Bench.
   *
   * {{{
-  * Dev quick   <sfDir> <q...>                      min wall | cpu@min | all walls
+  * Dev quick   <sfDir> <q...>                      min wall | cpu@min | compiles@min | all walls
   * Dev stages  <sfDir> <q...>                      quick + one line per stage
   * Dev ab      <sfDir> <key> <valA> <valB> <q...>  quick per conf value
   * Dev explain <sfDir> <q...>                      formatted physical plan
@@ -49,8 +49,8 @@ object Dev {
   /** Passes × arms × queries, round-robin, so a host stall inflates one
     * pass of every arm instead of one whole arm. An arm sets one conf
     * value before its queries (ab); quick and stages run the one arm
-    * None. Per (query, arm): min wall, the process CPU of that run, and
-    * every wall. */
+    * None. Per (query, arm): min wall, the process CPU and Janino
+    * compiles of that run, and every wall. */
   private def time(spark: SparkSession, sfDir: String, qs: Seq[String],
                    arms: Seq[Option[(String, String)]]): Unit = {
     val nRuns = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
@@ -58,7 +58,7 @@ object Dev {
       .getOperatingSystemMXBean
       .asInstanceOf[com.sun.management.OperatingSystemMXBean]
     val runs = collection.mutable.Map[(String, Option[(String, String)]),
-      Vector[(Double, Double)]]().withDefaultValue(Vector.empty)
+      Vector[(Double, Double, Long)]]().withDefaultValue(Vector.empty)
     for (pass <- 1 to nRuns; arm <- arms) {
       arm.foreach { case (k, v) => spark.conf.set(k, v) }
       qs.foreach { q =>
@@ -66,19 +66,20 @@ object Dev {
         spark.sparkContext.setJobDescription(s"dev: $label pass $pass")
         val t0 = System.nanoTime()
         val c0 = cpuBean.getProcessCpuTime
+        val j0 = Bench.janinoCompiles
         SparkEntry.queries(q)(spark, sfDir)
           .write.format("noop").mode("overwrite").save()
         val w = (System.nanoTime() - t0) / 1e9
-        runs((q, arm)) = runs((q, arm)) :+
-          ((w, (cpuBean.getProcessCpuTime - c0) / 1e9))
-        System.err.println(f"[dev] pass $pass $label: $w%.2f s")
+        val compiles = Bench.janinoCompiles - j0
+        runs((q, arm)) = runs((q, arm)) :+ ((w, (cpuBean.getProcessCpuTime - c0) / 1e9, compiles))
+        System.err.println(f"[dev] pass $pass $label: $w%.2f s, $compiles compiles")
       }
     }
-    println(s"fixture=$sfDir runs=$nRuns (min wall | cpu@min | all walls)")
+    println(s"fixture=$sfDir runs=$nRuns (min wall | cpu@min | compiles@min | all walls)")
     for (q <- qs; arm <- arms) {
       val r = runs((q, arm))
-      val (w, c) = r.minBy(_._1)
-      println(f"$q%-26s ${arm.fold("")(_._2)}%10s $w%7.2f | $c%8.2f | " +
+      val (w, c, j) = r.minBy(_._1)
+      println(f"$q%-26s ${arm.fold("")(_._2)}%10s $w%7.2f | $c%8.2f | $j%5d | " +
         r.map(x => f"${x._1}%.2f").mkString(","))
     }
   }

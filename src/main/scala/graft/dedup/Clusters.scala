@@ -1,10 +1,7 @@
 package graft.dedup
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.catalyst.CatalystTypeConverters
-import org.apache.spark.sql.catalyst.util.TypeUtils
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
@@ -43,10 +40,12 @@ import graft.Checkpoints
   *
   * Scale notes:
   *  - the driver never collects more than `LocalFinishEdges` rows, and
-  *    the returned local DataFrame has one row per node. Worst case at
-  *    the bound (2^20 disjoint long-id edges, 2^21 nodes, 4 cores, 6 GB
-  *    driver heap): the finish took 12.9 s, the result held ~190 MB of
-  *    heap and the heap peaked at ~1.5 GB, uncollected garbage included;
+  *    the returned frame has one row per node (`DriverFinish.frame`: a
+  *    local relation up to 2^16 rows, packed UnsafeRow bytes above).
+  *    Worst case at the bound (2^20 disjoint long-id edges, 2^21 nodes,
+  *    4 cores, 6 GB driver heap): the finish took 3.6-7.6 s, a `count()`
+  *    of the result 0.3-1.3 s (13 s as a local relation), and the heap
+  *    peaked at 1.4-1.7 GB, uncollected garbage included;
   *  - above the bound each round is two groupBy-min + two joins over the
   *    EDGE table (bounded by the near-dup pair count, orders of magnitude
   *    smaller than the corpus), all declarative and nothing broadcast;
@@ -140,14 +139,15 @@ object Clusters {
     }
 
     if (fits(cur)) {
+      def collected(df: DataFrame) = df.queryExecution.executedPlan.executeCollect()
       val rows =
-        if (iter == 0) base.collect()
-        else e.collect() ++ (if (loose > 0) base.filter(!isEdge).collect() else Array.empty[Row])
+        if (iter == 0) collected(base)
+        else collected(e) ++ (if (loose > 0) collected(base.filter(!isEdge)) else Array.empty)
       Checkpoints.release(base)
       if (iter > 0) Checkpoints.release(e)
       val schema = StructType(Seq(StructField("id", idType, nullable),
         StructField("comp", idType, nullable)))
-      base.sparkSession.createDataFrame(localComponents(rows, idType).asJava, schema)
+      DriverFinish.frame(base.sparkSession, localComponents(rows, idType), schema)
     } else {
       if (cur != prev)
         System.err.println(s"[graft] connectedComponents: maxIter=$maxIter " +
@@ -196,29 +196,17 @@ object Clusters {
 
   /** Union-find over collected (u, v) rows: one (id, comp) row per
     * distinct non-null id, `comp` = component minimum, plus (null, null)
-    * when any end is null. Ids are sorted under Spark's ordering for
-    * `idType` (UTF-8 byte order for strings, not `String.compareTo`), so
-    * the smallest index in a component is its `min`, and ordering ties
-    * are the same node. Rows with equal ends add no edge. */
-  private def localComponents(rows: Array[Row], idType: DataType): Seq[Row] = {
-    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(idType)
-    val toScala = CatalystTypeConverters.createToScalaConverter(idType)
-    val ord = TypeUtils.getInterpretedOrdering(idType)
-    val cmp: java.util.Comparator[AnyRef] = (a, b) => ord.compare(a, b)
-    def end(r: Row, i: Int): AnyRef =
-      if (r.isNullAt(i)) null else toCatalyst(r.get(i)).asInstanceOf[AnyRef]
+    * when any end is null. Ids are ranked under Spark's ordering for
+    * `idType`, so the smallest rank in a component is its `min`, and
+    * ordering ties are the same node. Rows with equal ends add no edge. */
+  private def localComponents(rows: Array[InternalRow], idType: DataType): Seq[InternalRow] = {
+    def end(r: InternalRow, i: Int): AnyRef = if (r.isNullAt(i)) null else r.get(i, idType)
     val us = rows.map(end(_, 0))
     val vs = rows.map(end(_, 1))
-    val sorted = (us ++ vs).filter(_ != null)
-    java.util.Arrays.sort(sorted, cmp)
-    val ids = new Array[AnyRef](sorted.length)
-    var n = 0
-    sorted.foreach { x =>
-      if (n == 0 || cmp.compare(ids(n - 1), x) != 0) { ids(n) = x; n += 1 }
-    }
-    def index(x: AnyRef): Int = java.util.Arrays.binarySearch(ids, 0, n, x, cmp)
+    val ranks = new DriverFinish.IdRanks(us.iterator ++ vs.iterator, idType)
+    val ids = ranks.ids
 
-    val parent = Array.range(0, n)
+    val parent = Array.range(0, ids.length)
     def find(i0: Int): Int = {
       var i = i0
       while (parent(i) != i) { parent(i) = parent(parent(i)); i = parent(i) }
@@ -226,13 +214,13 @@ object Clusters {
     }
     us.indices.foreach { i =>
       if (us(i) != null && vs(i) != null) {
-        val a = find(index(us(i)))
-        val b = find(index(vs(i)))
+        val a = find(ranks.rank(us(i)))
+        val b = find(ranks.rank(vs(i)))
         if (a < b) parent(b) = a else if (b < a) parent(a) = b
       }
     }
-    val labeled = (0 until n).map(i => Row(toScala(ids(i)), toScala(ids(find(i)))))
-    if (us.contains(null) || vs.contains(null)) labeled :+ Row(null, null) else labeled
+    val labeled = ids.indices.map(i => InternalRow(ids(i), ids(find(i))))
+    if (us.contains(null) || vs.contains(null)) labeled :+ InternalRow(null, null) else labeled
   }
 
   /** (doc_id, cluster_id, cluster_size) for every doc in some near-dup

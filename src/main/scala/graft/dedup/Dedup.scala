@@ -1,7 +1,14 @@
 package graft.dedup
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, DoubleType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
+import graft.expressions.MinHashSignature
 import graft.text.TextFunctions
 import graft.vector.VectorFunctions
 import graft.similarity.Ann
@@ -59,8 +66,48 @@ object Dedup {
       (0 until numHashes).map(i => col("__ms").getItem(i).as(s"m$i")): _*)
   }
 
+  /** Largest corpus (input rows) whose pairs `minhashPairs` finds on
+    * the driver: where the two paths cross. Both timed on prefixes of
+    * the 30x scale-up of the sf0.1 documents (salted, ~124 words, the
+    * longest fixture documents; bench session, 4 cores, 7 GB heap):
+    * 2^12 docs 0.8-0.9 s on the driver vs 4.1-4.7 s distributed, 2^13
+    * 1.5-1.7 vs 5.1-5.8, 2^14 3.1-3.3 vs 7.2-8.5, 2^15 5.7-8.4 vs
+    * 15.4-16.1 (collect 2.6-3.3 s, signatures 0.8 s, heap peak 0.9 GB).
+    * At 2^16 the band collisions of that corpus (1.48M, growing with
+    * the square of its replica count) pass [[LocalPairMax]], so the
+    * driver attempt cost ~7 s before the distributed 29 s. */
+  val LocalPairDocs: Int = 1 << 15
+
+  /** Largest pair count the driver finish enumerates: band-bucket
+    * collisions, then candidate pairs (see [[minhashPairs]]). Worst case
+    * at the bound (1,448 copies of one 100-word document beside 2,000
+    * others, 1,047,628 pairs, same host): the call took 1.4-1.8 s and
+    * the heap peaked at 1.0-1.5 GB; the distributed plan took 64 s. */
+  val LocalPairMax: Long = 1L << 20
+
   /** Candidate duplicate pairs via MinHash-LSH, verified with exact
     * Jaccard over the shingle sets. Returns (doc_a, doc_b, jaccard).
+    *
+    * Two paths compute the same rows, schema and nullability:
+    *  - driver finish: when a limited count finds at most
+    *    `localPairDocs` input rows, one collect fetches (id, shingles) of
+    *    the documents with a non-empty shingle set, and the driver
+    *    computes the signatures with the same kernel, groups, bands,
+    *    expands and verifies as below, and returns a local frame
+    *    (`DriverFinish.frame`). It falls back to the distributed plan
+    *    when the rep pairs sharing a band bucket, or the candidate pairs
+    *    counted from the group sizes (Σ C(m, 2) + Σ |ga|·|gb|, each
+    *    member weighted by the rows its id has), exceed [[LocalPairMax]],
+    *    so a duplicate-heavy corpus never builds an unbounded list.
+    *    Worst cases at both bounds are measured at [[LocalPairDocs]] and
+    *    [[LocalPairMax]];
+    *  - distributed: the plan below, the only path above the bounds;
+    *    `localPairDocs` = 0 forces it.
+    * The driver finish exists because at a few thousand documents the
+    * distributed plan's ~15 jobs and ~50 generated classes, not the
+    * data, are the cost: with them a pipeline around this call
+    * generated more classes than Spark's 100-entry codegen cache holds,
+    * and compiled most of them again on every run.
     *
     * Skew hardening — duplicate-heavy corpora are the NORM for this
     * operator (that is why it exists), and every copy of a hot document
@@ -83,7 +130,153 @@ object Dedup {
     */
   def minhashPairs(docs: DataFrame, idCol: String, textCol: String,
                    shingleSize: Int = 3, numHashes: Int = 64,
-                   bands: Int = 16, threshold: Double = 0.9): DataFrame = {
+                   bands: Int = 16, threshold: Double = 0.9,
+                   localPairDocs: Int = LocalPairDocs): DataFrame = {
+    val slim = docs.select(col(idCol).as("id"), col(textCol).as("gtxt"))
+    // the size check takes up to localPairDocs + 1 column-less input
+    // rows: a corpus above the bound pays a limited scan, not a shingle
+    // collect, and the check adds one generated class, not a count's
+    // aggregate stages (a pipeline near the codegen cache's 100 classes
+    // recompiles when it grows)
+    def fits = slim.select().limit(localPairDocs + 1)
+      .queryExecution.executedPlan.executeCollect().length <= localPairDocs
+    val local =
+      if (localPairDocs <= 0 || !fits) None
+      else {
+        val rows = slim
+          .select(col("id"),
+            TextFunctions.shingles(col("gtxt"), shingleSize).as("sh"))
+          .filter(size(col("sh")) > 0)
+          .queryExecution.executedPlan.executeCollect()
+        localPairs(rows, slim.schema("id").dataType, numHashes, bands, threshold)
+      }
+    local match {
+      case Some(pairs) =>
+        val idField = slim.schema("id")
+        val schema = StructType(Seq(
+          StructField("doc_a", idField.dataType, idField.nullable),
+          StructField("doc_b", idField.dataType, idField.nullable),
+          StructField("jaccard", DoubleType)))
+        DriverFinish.frame(docs.sparkSession, pairs, schema)
+          .select(col("doc_a"), col("doc_b"), round(col("jaccard"), 3).as("jaccard"))
+      case None =>
+        distributedPairs(slim, shingleSize, numHashes, bands, threshold)
+    }
+  }
+
+  /** The driver finish of [[minhashPairs]] over collected (id, shingles)
+    * rows: (doc_a, doc_b, unrounded jaccard) rows in Catalyst form, or
+    * None when a count exceeds [[LocalPairMax]]. Each step computes what
+    * its relational counterpart in [[distributedPairs]] computes,
+    * duplicates included:
+    *  - `gk` folds XXH64 over the signature, as `xxhash64(m0..m63)`;
+    *  - a group's rep is its least non-null id, its signature the
+    *    element-wise min;
+    *  - band j's key is `XXH64.hashInt(j, 42)` folded with `hashLong`
+    *    over the band's slice, as `xxhash64(lit(j), ...)`;
+    *  - within-group pairs need a < b; a rep pair (ra < rb) expands to
+    *    (least, greatest) of every member id of ra by every member id
+    *    of rb, so a duplicate id in two groups can pair with itself, as
+    *    in the join; null ids pair with nothing;
+    *  - a candidate (a, b) is verified once per row of `a` by row of `b`
+    *    (the join back to the shingle table), counting the intersection
+    *    in distinct elements as `array_intersect` does.
+    * Ids are compared by rank under Spark's ordering for `idType`. */
+  private def localPairs(rows: Array[InternalRow], idType: DataType,
+                         numHashes: Int, bands: Int,
+                         threshold: Double): Option[Seq[InternalRow]] = {
+    val r = numHashes / bands
+    val ids = rows.map(row => if (row.isNullAt(0)) null else row.get(0, idType))
+    val ranks = new DriverFinish.IdRanks(ids.iterator, idType)
+    val rank = ids.map(ranks.rank)
+    val sh = rows.map(_.getArray(1))
+    val sigs = sh.map(MinHashSignature.compute(_, numHashes).toLongArray)
+
+    val idRows = {
+      val of = Array.fill(ranks.ids.length)(mutable.ArrayBuilder.make[Int])
+      rows.indices.foreach(k => if (rank(k) >= 0) of(rank(k)) += k)
+      of.map(_.result())
+    }
+    // rows a candidate end joins back to
+    def weight(k: Int): Long = if (rank(k) < 0) 0L else idRows(rank(k)).length.toLong
+
+    val byGk = mutable.HashMap.empty[Long, mutable.ArrayBuilder[Int]]
+    rows.indices.foreach { k =>
+      var h = 42L
+      sigs(k).foreach(m => h = XXH64.hashLong(m, h))
+      byGk.getOrElseUpdate(h, mutable.ArrayBuilder.make[Int]) += k
+    }
+    val groups = byGk.values.map(_.result()).toArray
+    val reps = groups.map(_.map(rank).filter(_ >= 0).minOption.getOrElse(-1))
+
+    val buckets = mutable.HashMap.empty[(Int, Long), mutable.ArrayBuilder[Int]]
+    groups.indices.filter(reps(_) >= 0).foreach { gi =>
+      val msig = sigs(groups(gi).head).clone()
+      groups(gi).foreach(k => msig.indices.foreach(i => msig(i) = math.min(msig(i), sigs(k)(i))))
+      (0 until bands).foreach { j =>
+        var h = XXH64.hashInt(j, 42L)
+        (j * r until (j + 1) * r).foreach(i => h = XXH64.hashLong(msig(i), h))
+        buckets.getOrElseUpdate((j, h), mutable.ArrayBuilder.make[Int]) += reps(gi)
+      }
+    }
+    val bucketReps = buckets.values.map(_.result())
+    if (bucketReps.map(b => b.length.toLong * (b.length - 1) / 2).sum > LocalPairMax) return None
+    val repPairs = mutable.HashSet.empty[(Int, Int)]
+    bucketReps.foreach(b => for (x <- b; y <- b if x < y) repPairs += ((x, y)))
+
+    // rows with an id under each rep, across the groups it represents
+    val membersOf = groups.indices.filter(reps(_) >= 0)
+      .flatMap(gi => groups(gi).filter(rank(_) >= 0).map(reps(gi) -> _))
+      .groupMap(_._1)(_._2).map { case (rep, ks) => rep -> ks.toArray }
+    // candidates weighted by the rows each end joins back to; within a
+    // group this also counts equal-id pairs, an upper bound
+    def w(ks: Array[Int]): Long = ks.map(weight).sum
+    val withinCount = groups.map(g => (w(g) * w(g) - g.map(k => weight(k) * weight(k)).sum) / 2).sum
+    val crossCount = repPairs.toSeq.map { case (ra, rb) => w(membersOf(ra)) * w(membersOf(rb)) }.sum
+    if (withinCount + crossCount > LocalPairMax) return None
+
+    // shingle sets as sorted distinct codes of one dictionary, built for
+    // the rows a candidate reaches
+    val codes = new java.util.HashMap[UTF8String, Integer]()
+    val sets = new Array[Array[Int]](rows.length)
+    def set(k: Int): Array[Int] = {
+      if (sets(k) == null) {
+        val a = sh(k)
+        sets(k) = Array.tabulate(a.numElements()) { e =>
+          val g = if (a.isNullAt(e)) null else a.getUTF8String(e)
+          val c = codes.get(g)
+          if (c != null) c.intValue else { val v = codes.size; codes.put(g, v); v }
+        }.sorted.distinct
+      }
+      sets(k)
+    }
+    val out = mutable.ArrayBuffer.empty[InternalRow]
+    def verify(a: Int, b: Int): Unit =
+      for (i <- idRows(a); j <- idRows(b)) {
+        val (x, y) = (set(i), set(j))
+        var inter, p, q = 0
+        while (p < x.length && q < y.length) {
+          if (x(p) < y(q)) p += 1
+          else if (x(p) > y(q)) q += 1
+          else { inter += 1; p += 1; q += 1 }
+        }
+        val jac = inter.toDouble / (sh(i).numElements() + sh(j).numElements() - inter).toDouble
+        if (jac >= threshold) out += InternalRow(ranks.ids(a), ranks.ids(b), jac)
+      }
+    groups.foreach { g =>
+      val rs = g.map(rank).filter(_ >= 0)
+      for (x <- rs; y <- rs if x < y) verify(x, y)
+    }
+    repPairs.foreach { case (ra, rb) =>
+      for (ia <- membersOf(ra); ib <- membersOf(rb))
+        verify(math.min(rank(ia), rank(ib)), math.max(rank(ia), rank(ib)))
+    }
+    Some(out.toSeq)
+  }
+
+  /** The distributed plan of [[minhashPairs]] over (id, gtxt). */
+  private def distributedPairs(slim: DataFrame, shingleSize: Int, numHashes: Int,
+                               bands: Int, threshold: Double): DataFrame = {
     val rows = numHashes / bands
     // Work-vs-bytes partitioning (r12): documents are tiny in BYTES but
     // every row fans out into shingle + 64-minhash compute, so a
@@ -100,8 +293,7 @@ object Dedup {
     // At real lake scale the scan is already wide and these
     // corpus-sized exchanges would be pure I/O waste — the condition
     // keeps the 100 TB plan exchange-free here.
-    val nPart = docs.sparkSession.sessionState.conf.numShufflePartitions
-    val slim = docs.select(col(idCol).as("id"), col(textCol).as("gtxt"))
+    val nPart = slim.sparkSession.sessionState.conf.numShufflePartitions
     val narrowScan = graft.Tables.scanIsNarrow(slim)
     val sh = {
       val base = if (narrowScan) slim.repartition(nPart, col("id")) else slim
@@ -144,7 +336,9 @@ object Dedup {
 
     // expand rep-level band collisions to member pairs (groups are
     // disjoint, so cross-group pairs never duplicate within-group ones)
-    val memRep = members
+    // a null id pairs with nothing (least/greatest would skip it and
+    // pair the other end with itself)
+    val memRep = members.filter(col("id").isNotNull)
       .join(groups.select(col("gk"), col("rep")), "gk")
       .select(col("id"), col("rep"))
     val cross = repPairs

@@ -35,6 +35,7 @@ class BenchArtifactWriterSpec extends SparkSuite {
         annRecall = (Some(0.9), None),
         sfDir = "/data/sf0.1",
         suiteCpu = Map("q1_agg" -> 1.2),
+        suiteCompiles = Map("q1_agg" -> 7L),
         budgetSec = 2100,
         streaming = Seq("sf0.1" ->
           """"dedup": {"rows": 10, "wall_sec": 1.000, "n_batches": 4}"""))
@@ -42,6 +43,8 @@ class BenchArtifactWriterSpec extends SparkSuite {
       assert(root.get("sf").asText == "sf0.1")
       assert(root.get("n_queries").asInt == 2)
       assert(root.get("queries").get("q1_agg").get("cpu_sec").asDouble == 1.2)
+      assert(root.get("queries").get("q1_agg").get("janino_compiles").asLong == 7L)
+      assert(!root.get("queries").get("q_sort_global").has("janino_compiles"))
       assert(root.get("streaming").get("sf0.1").get("dedup").get("rows").asInt == 10)
       val pts = root.get("scale_points").get("queries")
       assert(pts.size == 4)

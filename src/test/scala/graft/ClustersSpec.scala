@@ -197,6 +197,16 @@ class ClustersSpec extends SparkSuite {
     assert(rows == Map("😀" -> "｡", "｡" -> "｡", "a" -> "a", "b" -> "a"), rows.toString)
   }
 
+  test("a local result above 2^16 rows (packed UnsafeRow frame) equals the star loop's") {
+    // 40,000 disjoint string edges plus a null end: 80,002 rows, past
+    // the local-relation size, so the driver finish ships packed bytes
+    val edges = ((0 until 40000).map(i => (s"a$i", s"b$i")) :+ (("c", null: String)))
+      .toDF("a", "b")
+    val rows = bothPaths(edges)
+    assert(rows.length == 80002)
+    assert(rows.contains(Row("b7", "a7")) && rows.contains(Row(null, null)))
+  }
+
   /** Storage ids once the ContextCleaner has dropped the RDDs earlier
     * tests left unreferenced: otherwise a GC inside the measured call
     * can shrink the set and fail the comparison for a reason that is

@@ -1,11 +1,113 @@
 package graft
 
+import scala.util.Random
+
 import graft.dedup.Dedup
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 class DedupSpec extends SparkSuite {
 
   private lazy val docs = Tables.documents(spark, sfDir)
+
+  /** True when `minhashPairs`' result came from the driver finish: the
+    * distributed plan always joins (its shingle projection can fold into
+    * a local input relation). */
+  private def finishedLocally(pairs: DataFrame): Boolean =
+    !pairs.queryExecution.executedPlan.toString.contains("Join")
+
+  /** `minhashPairs` over `corpus` on the driver finish and on the
+    * distributed plan (`localPairDocs = 0`): the same rows as a
+    * multiset, the same schema and nullability. Returns the sorted rows
+    * and whether the default call finished on the driver. */
+  private def bothPaths(corpus: DataFrame, threshold: Double = 0.9): (Seq[Row], Boolean) = {
+    val local = Dedup.minhashPairs(corpus, "doc_id", "text", threshold = threshold)
+    val dist = Dedup.minhashPairs(corpus, "doc_id", "text", threshold = threshold,
+      localPairDocs = 0)
+    assert(!finishedLocally(dist))
+    assert(local.schema == dist.schema)
+    val rows = local.collect().toSeq.sortBy(_.toString)
+    assert(rows == dist.collect().toSeq.sortBy(_.toString))
+    (rows, finishedLocally(local))
+  }
+
+  test("minhash driver finish == distributed plan on the fixture") {
+    val (rows, local) = bothPaths(docs)
+    assert(local && rows.nonEmpty)
+  }
+
+  test("minhash driver finish == distributed plan on seeded near-dup corpora") {
+    import spark.implicits._
+    (1 to 4).foreach { seed =>
+      val corpus = DedupSpec.corpus(seed, 150 + 50 * seed).toDF("doc_id", "text")
+      val (rows, local) = bothPaths(corpus)
+      assert(local, s"seed $seed")
+      // every planted chain link and copy pairs with its predecessor
+      assert(rows.length >= 30, s"seed $seed: ${rows.length} pairs")
+      // at 0.45 the banding finds only part of the ~0.5 partial copies,
+      // so both paths must band the same signature slices
+      val (low, lowLocal) = bothPaths(corpus, threshold = 0.45)
+      assert(lowLocal && low.count(_.getDouble(2) < 0.9) >= 10, s"seed $seed: ${low.length} pairs")
+    }
+  }
+
+  test("minhash driver finish: null and empty text, null and duplicate ids") {
+    import spark.implicits._
+    val a = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu nu xi"
+    val b = "one two three four five six seven eight nine ten eleven twelve"
+    val corpus = Seq[(java.lang.Long, String)](
+      (1L, a), (null, a), (2L, a + " omicron"), (null, a + " omicron"),
+      (3L, null), (4L, ""), (5L, "too short"), (6L, b), (7L, b + " thirteen"),
+      // id 8 twice: once beside 1 (rep 1) and once beside 6 (rep 6), so
+      // the rep pairs (1, 2) and (6, 7) expand through both of its rows
+      (8L, a), (8L, b), (9L, b), (9L, b + " thirteen"), (null, "x y z w"))
+      .toDF("doc_id", "text")
+    val (rows, local) = bothPaths(corpus)
+    assert(local)
+    assert(rows.forall(r => !r.isNullAt(0) && !r.isNullAt(1)), rows.mkString(" "))
+    assert(rows.contains(Row(1L, 2L, 0.923)) && rows.contains(Row(6L, 7L, 0.909)),
+      rows.mkString(" "))
+  }
+
+  test("minhash driver finish: string ids in Spark's order (UTF-8 bytes)") {
+    import spark.implicits._
+    val a = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu nu xi"
+    // "｡" (U+FF61) sorts before "😀" in UTF-8 bytes, after it in UTF-16
+    val corpus = Seq(("｡", a), ("😀", a + " omicron"), ("b", a), ("B", a + " omicron"),
+      ("10", "p q r s t u v w"), ("9", "p q r s t u v w x")).toDF("doc_id", "text")
+    val (rows, local) = bothPaths(corpus)
+    assert(local)
+    assert(rows.map(r => (r.getString(0), r.getString(1))).contains(("｡", "😀")))
+    assert(rows.forall(r => r.getString(0).getBytes("UTF-8").toSeq.map(_ & 0xff)
+      .zipAll(r.getString(1).getBytes("UTF-8").toSeq.map(_ & 0xff), -1, -1)
+      .find { case (x, y) => x != y }.exists { case (x, y) => x < y }), rows.mkString(" "))
+  }
+
+  test("minhash driver finish: jaccard at the threshold and a rounding edge") {
+    import spark.implicits._
+    def words(from: Int, n: Int) = (from until from + n).map(i => s"t$i").mkString(" ")
+    // 9 vs 10 shingles: jaccard exactly the 0.9 threshold; 73 vs 80
+    // shingles: 0.9125, which Spark's round(_, 3) takes to 0.913
+    val corpus = Seq((1L, words(0, 11)), (2L, words(0, 12)),
+      (3L, words(100, 75)), (4L, words(100, 82))).toDF("doc_id", "text")
+    val (rows, local) = bothPaths(corpus)
+    assert(local)
+    assert(rows == Seq(Row(1L, 2L, 0.9), Row(3L, 4L, 0.913)), rows.mkString(" "))
+  }
+
+  test("minhash output guard: a duplicate group over LocalPairMax takes the distributed plan") {
+    import spark.implicits._
+    // C(1449, 2) = 1,048,876 candidate pairs > 2^20
+    val n = 1449
+    val corpus = ((0L until n).map(i => (i, "alpha beta gamma delta epsilon zeta")) :+
+      (n.toLong, "one two three four five six")).toDF("doc_id", "text")
+    assert(n.toLong * (n - 1) / 2 > Dedup.LocalPairMax)
+    val pairs = Dedup.minhashPairs(corpus, "doc_id", "text")
+    assert(!finishedLocally(pairs))
+    assert(pairs.schema ==
+      Dedup.minhashPairs(corpus, "doc_id", "text", localPairDocs = 0).schema)
+    assert(pairs.count() == n.toLong * (n - 1) / 2)
+  }
 
   test("minhash-LSH pairs == exact all-pairs Jaccard at threshold") {
     val lsh = Dedup.minhashPairs(docs, "doc_id", "text",
@@ -134,6 +236,8 @@ class DedupSpec extends SparkSuite {
     val docs = (dup ++ other).toDF("doc_id", "text")
     val pairs = Dedup.minhashPairs(docs, "doc_id", "text",
       shingleSize = 3, numHashes = 64, bands = 16, threshold = 0.9)
+    // 499,503 candidate pairs fit LocalPairMax: the driver finish
+    assert(finishedLocally(pairs))
     assert(pairs.count() == n.toLong * (n - 1) / 2 + 3)
     assert(pairs.filter(col("jaccard") < 1.0).count() == 0)
   }
@@ -209,5 +313,30 @@ class DedupSpec extends SparkSuite {
     assert(wall < 120.0,
       f"4096-seed literal took $wall%.1f s — literal handling has " +
         "regressed from data-cost to tree-cost")
+  }
+}
+
+object DedupSpec {
+  /** `n` seeded documents of 20-79 words over a 300-word vocabulary,
+    * plus planted near-duplicates: every 7th document heads a chain of
+    * 1-4 links, each appending one word to the last (so its far end can
+    * fall below the threshold), every 11th has an exact copy, and every
+    * 5th a partial copy (its first two thirds, then as many fresh
+    * words: jaccard about 0.5). */
+  def corpus(seed: Long, n: Int): Seq[(Long, String)] = {
+    val rnd = new Random(seed)
+    def word = s"w${rnd.nextInt(300)}"
+    val base = (0 until n).map(i => (i.toLong, Seq.fill(20 + rnd.nextInt(60))(word).mkString(" ")))
+    val chains = base.filter(_._1 % 7 == 0).flatMap { case (id, t) =>
+      (1 to 1 + rnd.nextInt(4)).scanLeft(t)((prev, _) => s"$prev $word").tail
+        .zipWithIndex.map { case (link, j) => ((j + 1L) * n + id, link) }
+    }
+    val copies = base.filter(_._1 % 11 == 0).map { case (id, t) => (100L * n + id, t) }
+    val partial = base.filter(_._1 % 5 == 0).map { case (id, t) =>
+      val ws = t.split(" ")
+      val kept = ws.take(2 * ws.length / 3)
+      (200L * n + id, (kept ++ Seq.fill(ws.length - kept.length)(word)).mkString(" "))
+    }
+    base ++ chains ++ copies ++ partial
   }
 }

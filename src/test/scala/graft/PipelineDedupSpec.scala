@@ -1,5 +1,10 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.functions.{col, length}
+
+import graft.dedup.Dedup
+
 /** The composed dedup pipeline (q_dedup_pipeline): one pair-table
   * materialization must feed clusters + keep list + split, and the
   * composition must agree row-for-row with the standalone queries it
@@ -29,13 +34,15 @@ class PipelineDedupSpec extends SparkSuite {
   }
 
   test("q_dedup_pipeline's final plan holds no pair machinery (ran once)") {
-    // positive control first: a query that does NOT checkpoint its pair
-    // table carries the native shingle expression in its executed plan,
-    // so the probe below can actually fail
-    val standalone = SparkEntry.queries("q_dedup_minhash")(spark, sfDir)
+    // positive control first: the distributed pair plan, which the
+    // pipeline would replay without its checkpoint, carries the native
+    // shingle expression in its executed plan, so the probe below can
+    // actually fail (q_dedup_minhash itself now finishes on the driver)
+    val standalone = Dedup.minhashPairs(Tables.documents(spark, sfDir),
+        "doc_id", "text", localPairDocs = 0)
       .queryExecution.executedPlan.toString.toLowerCase
     assert(standalone.contains("wordshingles"),
-      "probe broken: expected the shingle expression in q_dedup_minhash's plan")
+      "probe broken: expected the shingle expression in the distributed pair plan")
     val plan = SparkEntry.queries("q_dedup_pipeline")(spark, sfDir)
       .queryExecution.executedPlan.toString.toLowerCase
     assert(!plan.contains("wordshingles") && !plan.contains("minhash"),
@@ -89,5 +96,30 @@ class PipelineDedupSpec extends SparkSuite {
       s"pair generation must not replay downstream of the checkpoint:\n$plan")
     assert(plan.contains("existingrdd"),
       "downstream stages must read the checkpointed tables")
+  }
+
+  test("q_pipeline_full reruns without compiling generated code") {
+    import spark.implicits._
+    // Spark's codegen cache holds 100 classes: a plan that generates
+    // more evicts its own and compiles them again on every run (the
+    // distributed pair plan alone generated about 50)
+    val dir = java.nio.file.Files.createTempDirectory("graft-pipeline-rerun").toString
+    DedupSpec.corpus(5, 300).toDF("doc_id", "text")
+      .withColumn("n_chars", length(col("text")).cast("long"))
+      .write.parquet(s"$dir/documents.parquet")
+    val docs = Tables.documents(spark, dir)
+    val local = Dedup.minhashPairs(docs, "doc_id", "text")
+      .queryExecution.executedPlan.toString
+    assert(local.contains("LocalTableScan") && !local.toLowerCase.contains("wordshingles"),
+      s"below the bound the pairs are a local relation:\n$local")
+    val forced = Dedup.minhashPairs(docs, "doc_id", "text", localPairDocs = 0)
+      .queryExecution.executedPlan.toString.toLowerCase
+    assert(forced.contains("wordshingles"), s"bound 0 plans the shingles:\n$forced")
+    def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val first = SparkEntry.queries("q_pipeline_full")(spark, dir).collect()
+    val before = compiles
+    val second = SparkEntry.queries("q_pipeline_full")(spark, dir).collect()
+    assert(compiles - before == 0, s"second run compiled ${compiles - before} classes")
+    assert(second.toSeq.sortBy(_.toString) == first.toSeq.sortBy(_.toString))
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The engine must run unchanged on a swapped-in ShuffleManager (the
@@ -17,9 +17,16 @@ class ShuffleSeamSpec extends AnyFunSuite {
 
   private val sfDir = "/root/testdata/sf0.001"
 
-  // q_dup_clusters: the minhash pair pipeline plus connected components
-  // (on this fixture, the local finish over a checkpointed edge table)
-  private val queries = Seq("q1_agg", "q_join_smj", "q_wordcount", "q_dup_clusters")
+  // q_dup_clusters: minhash pairs plus connected components, both of
+  // which finish on the driver on this fixture; minhash_pairs_distributed
+  // forces the distributed pair plan (signature group, band and
+  // verification joins) through the seam
+  private val queries: Seq[(String, SparkSession => DataFrame)] =
+    Seq("q1_agg", "q_join_smj", "q_wordcount", "q_dup_clusters").map { q =>
+      q -> ((s: SparkSession) => SparkEntry.queries(q)(s, sfDir))
+    } :+ ("minhash_pairs_distributed" -> ((s: SparkSession) =>
+      graft.dedup.Dedup.minhashPairs(Tables.documents(s, sfDir), "doc_id", "text",
+        localPairDocs = 0)))
 
   private def runWith(shuffleManager: Option[String]): Map[String, Array[String]] = {
     SparkSession.getActiveSession.foreach(_.stop())
@@ -34,9 +41,8 @@ class ShuffleSeamSpec extends AnyFunSuite {
     shuffleManager.foreach(b.config("spark.shuffle.manager", _))
     val spark = b.getOrCreate()
     try {
-      queries.map { q =>
-        val rows = SparkEntry.queries(q)(spark, sfDir)
-          .collect().map(_.toString).sorted
+      queries.map { case (q, run) =>
+        val rows = run(spark).collect().map(_.toString).sorted
         q -> rows
       }.toMap
     } finally {
@@ -130,10 +136,9 @@ class ShuffleSeamSpec extends AnyFunSuite {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     try {
-      queries.foreach { q =>
+      queries.foreach { case (q, run) =>
         FaultInjection.arm(2)
-        val rows = SparkEntry.queries(q)(spark, sfDir)
-          .collect().map(_.toString).sorted
+        val rows = run(spark).collect().map(_.toString).sorted
         assert(FaultInjection.injected.get() >= 1,
           s"$q: fault never fired — test is vacuous " +
             "(did the plan lose its shuffle?)")
