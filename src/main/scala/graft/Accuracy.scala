@@ -99,20 +99,9 @@ object Accuracy {
         (Bench.boundedAnnRecallSf1(spark, d).getOrElse(-1.0), Some(d))
       else {
         val factor = math.max(2, math.ceil(20000.0 / math.max(1L, nVec)).toInt)
-        // dir is keyed by (base fixture, factor, base CONTENT signal):
-        // acc_emb markers from a different base dir, factor, or a
-        // regenerated-in-place base must never serve their stale corpus
-        // to this gate (review r13 + ADVICE r13 — path|factor alone
-        // could not see an in-place regeneration). The signal is the
-        // shared [[graft.sources.StandingIndex.contentSig]] primitive.
-        val contentSig =
-          graft.sources.StandingIndex.contentSig(s"$d/embeddings.parquet")
-        val tag = java.security.MessageDigest.getInstance("MD5")
-          .digest(s"$d|$factor|$contentSig".getBytes("UTF-8"))
-          .take(4).map("%02x".format(_)).mkString
-        val accEmbDir = sys.env.getOrElse("SPARK_GRAFT_REPO_DIR", "/root/repo") +
-          s"/target/scale/acc_emb_$tag"
-        val dir = ScaleFixture.ensureEmbeddings(spark, d, accEmbDir, factor)
+        // keyed by base dir, base content and factor: a fixture from a
+        // different or regenerated-in-place base is never served here
+        val dir = ScaleFixture.ensureEmbeddings(spark, d, factor)
         (Bench.boundedAnnRecallSf1(spark, dir).getOrElse(-1.0), Some(dir))
       }
     } catch { case scala.util.control.NonFatal(ex) =>

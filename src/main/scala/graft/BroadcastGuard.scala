@@ -98,7 +98,7 @@ object BroadcastGuard {
     * the bigram checkpoint), so the plan-keyed memo missed every run
     * and re-paid the sizing pass. Callers pass a key that names the
     * dim AND a CONTENT tag of its source
-    * ([[graft.sources.StandingIndex.tag]] — sizes+mtimes), so an
+    * ([[graft.sources.Committed.tag]] — sizes+mtimes), so an
     * in-place fixture regeneration mints a new key instead of serving
     * the stale pinned dim; the plan-keyed path keeps the weaker
     * immutable-path contract (its key embeds the path only). */

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.sources.Committed
 
 /** Deterministic `factor`× scale-up of the heavy-family inputs
   * (documents, embeddings, part) from a base fixture dir, for the
@@ -35,26 +36,49 @@ import org.apache.spark.sql.functions._
   */
 object ScaleFixture {
 
-  val Tables = Seq("documents", "embeddings", "part", "lineitem",
-    "orders", "customer", "nation", "region", "supplier", "events")
-
-  /** Generates the fixture into `outDir` unless the marker says it is
-    * already there; returns the dir. Generation is NOT part of any
-    * timed region. (Marker is versioned: v2 added lineitem/orders for
-    * the relational scale family; v3 repartitions their writes so the
-    * sf1 scan parallelism matches a real 10x lake; v4 shifts
-    * lineitem.l_partkey by the SAME per-replica span as the replicated
-    * part table — 10x the data means 10x the parts with the same
-    * degree distribution, so graph queries over the co-purchase
+  /** Generator version, part of every fixture root's key: v2 added
+    * lineitem/orders for the relational scale family; v3 repartitions
+    * their writes so the sf1 scan parallelism matches a real 10x lake;
+    * v4 shifts lineitem.l_partkey by the SAME per-replica span as the
+    * replicated part table — 10x the data means 10x the parts with the
+    * same degree distribution, so graph queries over the co-purchase
     * structure scale the way a real lake does instead of densifying a
     * fixed node set; v5 adds replicated customers + consistent
     * o_custkey shifts, verbatim nation/region/supplier dims, and
     * time-extended events so the star-join and event-family scale
-    * points have their tables.) */
-  def ensure(spark: SparkSession, baseDir: String, outDir: String,
-             factor: Int): String = {
-    val marker = new java.io.File(s"$outDir/_GRAFT_FIXTURE_v5_f$factor")
-    if (marker.exists()) return outDir
+    * points have their tables. Bump it with any change to the output. */
+  private val GeneratorVersion = 5
+
+  private[graft] def scaleRoot: String = s"${graft.sources.StandingIndex.repoRoot}/target/scale"
+
+  /** Fixture root of one `kind`, keyed by generator version, factor and
+    * the base dir's path and content signal: a fixture built from a
+    * different or regenerated base, or by an older generator, lives in
+    * another root and is never served in its place. */
+  private def root(kind: String, baseDir: String, factor: Int): String =
+    s"$scaleRoot/${kind}_f${factor}_" + Committed.digest(baseDir,
+      s"v$GeneratorVersion", factor.toString, Committed.contentSig(baseDir))
+
+  /** The `factor`× fixture of `baseDir`, generated on first use and
+    * committed through [[Committed.ensure]]; returns its dir.
+    * Generation is NOT part of any timed region. */
+  def ensure(spark: SparkSession, baseDir: String, factor: Int): String =
+    Committed.ensure(root("sf", baseDir, factor))(
+      write(spark, baseDir, _, factor))
+
+  /** Embeddings-only fixture: same replica/twin construction as
+    * [[ensure]] but generating nothing else — the capped-regime ANN
+    * accuracy gate (r13) needs a corpus big enough that the shipped
+    * per-bucket/per-query caps BIND (~16k+ vectors), and generating the
+    * full relational fixture for one recall number would waste most of
+    * the Verify budget. */
+  def ensureEmbeddings(spark: SparkSession, baseDir: String,
+                       factor: Int): String =
+    Committed.ensure(root("emb", baseDir, factor))(
+      writeEmbeddings(spark, baseDir, _, factor))
+
+  private def write(spark: SparkSession, baseDir: String, outDir: String,
+                    factor: Int): Unit = {
     val reps = broadcast(spark.range(factor).select(col("id").as("rep")))
 
     // ---- documents --------------------------------------------------
@@ -155,26 +179,6 @@ object ScaleFixture {
         (col("p_size") + col("rep") * sizeSpan).as("p_size"),
         col("p_retailprice"))
       .write.mode("overwrite").parquet(s"$outDir/part.parquet")
-
-    marker.getParentFile.mkdirs()
-    marker.createNewFile()
-    outDir
-  }
-
-  /** Embeddings-only fixture: same replica/twin construction as
-    * [[ensure]] but generating nothing else — the capped-regime ANN
-    * accuracy gate (r13) needs a corpus big enough that the shipped
-    * per-bucket/per-query caps BIND (~16k+ vectors), and generating the
-    * full relational fixture for one recall number would waste most of
-    * the Verify budget. Own marker, idempotent across rounds. */
-  def ensureEmbeddings(spark: SparkSession, baseDir: String, outDir: String,
-                       factor: Int): String = {
-    val marker = new java.io.File(s"$outDir/_GRAFT_EMB_v5_f$factor")
-    if (marker.exists()) return outDir
-    writeEmbeddings(spark, baseDir, outDir, factor)
-    marker.getParentFile.mkdirs()
-    marker.createNewFile()
-    outDir
   }
 
   /** Replica-scaled embeddings write shared by [[ensure]] and

@@ -21,8 +21,8 @@ object Sessions {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
-      // every exchange runs through the occupied transport seam
-      // (delegating manager), the reference's plug point
+      // every exchange runs through the occupied transport seam (a
+      // SortShuffleManager subclass), the reference's plug point
       .config("spark.shuffle.manager",
         "org.apache.spark.shuffle.graft.GraftShuffleManager")
       // measured default from the codec/block-size matrix

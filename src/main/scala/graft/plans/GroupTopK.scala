@@ -31,8 +31,8 @@ import org.apache.spark.util.collection.unsafe.sort.PrefixComparators
   * near-unique (a k=1 dedup on a fingerprint key has groups ≈ rows —
   * the reference bounds exactly this with its LPQ/RPQ budgeted merge,
   * src/Merger/MergeManager.cc:240-288). Both passes therefore cap the
-  * buffered-row count at `maxBufferedRows` (conf
-  * `spark.graft.topk.maxBufferedRows`, default 4M rows per task):
+  * buffered-row count at `maxBufferedRows` (a per-call argument of
+  * [[GroupTopK.topKPerGroup]], default 4M rows per task):
   *  - the PARTIAL pass flushes its heap map downstream and starts
   *    fresh. Correct because any row in its group's true partition-wide
   *    top-k always enters the live heap on arrival and can only be
@@ -228,7 +228,6 @@ object GroupTopKStrategy extends SparkStrategy {
 /** DataFrame-level API; registers the strategy on first use (the
   * session-build path is `graft.GraftSessionExtensions`). */
 object GroupTopK {
-  val MaxBufferedRowsKey = "spark.graft.topk.maxBufferedRows"
   /** Default heap budget per task: 4M rows. The r10 ann-sf3 profile
     * showed that MULTI-million-row final inputs per task keep ~8 GB of
     * copied small objects live across 32 tasks (GC wall 710 s vs 224 s
@@ -246,26 +245,23 @@ object GroupTopK {
     * budget (correct by the superset argument in the class scaladoc). */
   val DefaultMaxBufferedRows: Long = 4L * 1024 * 1024
 
-  /** `maxBufferedRows`: per-call override of the heap budget; when
-    * None, the session conf [[MaxBufferedRowsKey]] (default
-    * [[DefaultMaxBufferedRows]]) applies. Callers whose FINAL pass is
-    * known to buffer multi-million rows per task (ANN bounded caps)
-    * pass a small budget to get the spillable-sort path without
-    * mutating session state for everyone else. */
+  /** `maxBufferedRows`: the heap budget of this call's two passes.
+    * Callers whose FINAL pass is known to buffer multi-million rows per
+    * task (ANN bounded caps) pass a small budget to get the
+    * spillable-sort path; everyone else keeps the default. */
   def topKPerGroup(df: DataFrame, groupCols: Seq[Column],
                    order: Seq[Column], k: Int,
-                   maxBufferedRows: Option[Long] = None): DataFrame = {
+                   maxBufferedRows: Long = DefaultMaxBufferedRows): DataFrame = {
     require(k > 0, "k must be positive")
     val spark = df.sparkSession
     if (!spark.experimental.extraStrategies.contains(GroupTopKStrategy)) {
       spark.experimental.extraStrategies =
         spark.experimental.extraStrategies :+ GroupTopKStrategy
     }
-    val budget = maxBufferedRows.getOrElse(spark.conf
-      .get(MaxBufferedRowsKey, DefaultMaxBufferedRows.toString).toLong)
     val node = GroupTopKNode(
       groupCols.map(PlanBridge.expression),
-      order.map(PlanBridge.sortOrder), k, budget, PlanBridge.analyzed(df))
+      order.map(PlanBridge.sortOrder), k, maxBufferedRows,
+      PlanBridge.analyzed(df))
     PlanBridge.ofRows(spark, node)
   }
 }

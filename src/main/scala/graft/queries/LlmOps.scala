@@ -27,16 +27,15 @@ object LlmOps {
   private val CHUNK_SIZE = 32
   private val CHUNK_STRIDE = 24
 
-  /** The composed pipelines' shared prologue (q_pipeline_full /
-    * q_pipeline_report — review r13: the ~25-line stage lived in two
-    * verbatim copies, so a minhash/tiebreak/threshold tune could
-    * silently diverge the two published artifacts): minhash pair table
-    * checkpointed once → connected components → per-doc assignment
-    * (cluster, full-corpus size, longest-copy representative,
-    * md5-by-cluster leakage-safe split) checkpointed once. Returns
-    * (docs, assigned). q_dedup_pipeline deliberately keeps its own
-    * standalone copy — its per-query isolation (no shared checkpoints
-    * with the full pipeline) is the point of having both registered. */
+  /** The composed pipelines' shared prologue (q_dedup_pipeline,
+    * q_pipeline_full, q_pipeline_report — one copy, so a minhash/
+    * tiebreak/threshold tune cannot silently diverge the published
+    * artifacts): minhash pair table checkpointed once → connected
+    * components → per-doc assignment (cluster, full-corpus size,
+    * longest-copy representative, md5-by-cluster leakage-safe split).
+    * Returns (docs, assigned); `assigned` is not materialized — the
+    * pipelines that read it more than once checkpoint it themselves.
+    * Each call makes fresh checkpoints. */
   private def pipelineAssignment(s: SparkSession, d: String)
       : (DataFrame, DataFrame) = {
     val docs = Tables.documents(s, d)
@@ -64,7 +63,6 @@ object LlmOps {
         when(h < "cc", "train").when(h < "e6", "val").otherwise("test"))
       .select(col("doc_id"), col("cluster_id"), col("cluster_size"),
         col("keep"), col("split"))
-      .localCheckpoint()
     (docs, assigned)
   }
 
@@ -605,7 +603,7 @@ object LlmOps {
           // content-tagged key: in-place fixture regeneration must
           // invalidate the pinned dim, same contract as the plan key
           memoKey = Some(
-            s"bm25-idf|${graft.sources.StandingIndex.tag(d, "documents")}")),
+            s"bm25-idf|${graft.sources.Committed.tag(d, "documents")}")),
           "tok")
         .join(dl, "doc_id")
         .filter(col("doc_id") =!= col("qid"))
@@ -659,7 +657,7 @@ object LlmOps {
       bgs.join(BroadcastGuard.dim(uniCt,
           length(col("w1")) + lit(8), "surprisal unigrams",
           memoKey = Some(s"surprisal-uni|${
-            graft.sources.StandingIndex.tag(d, "documents")}")), "w1")
+            graft.sources.Committed.tag(d, "documents")}")), "w1")
         .join(bgCt, "bg")
         .withColumn("surp",
           length(expr("bin(uc)")) - length(expr("bin(bc)")))
@@ -1054,37 +1052,7 @@ object LlmOps {
     // duplicates always share a split. PipelineDedupSpec asserts the
     // executed plan carries no shingle/minhash machinery downstream of
     // the checkpoint — the pair stage ran exactly once.
-    "q_dedup_pipeline" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val pairs = Dedup.minhashPairs(docs, "doc_id", "text",
-        shingleSize = 3, numHashes = 64, bands = 16, threshold = 0.9)
-        .localCheckpoint()
-      val cc = graft.dedup.Clusters
-        .connectedComponents(pairs, "doc_a", "doc_b")
-      // (doc_id, n_chars, cluster_id) is shared by the size aggregate,
-      // the representative window and the split projection; checkpoint
-      // it once so those branches re-read a materialized slim table
-      // instead of re-running the label join per branch
-      val labeled = docs.select(col("doc_id"), col("n_chars"))
-        .join(cc.select(col("id").as("doc_id"), col("comp")),
-          Seq("doc_id"), "left")
-        .withColumn("cluster_id", coalesce(col("comp"), col("doc_id")))
-        .select(col("doc_id"), col("n_chars"), col("cluster_id"))
-        .localCheckpoint()
-      val sizes = labeled.groupBy(col("cluster_id"))
-        .agg(count(lit(1)).as("cluster_size"))
-      val w = Window.partitionBy(col("cluster_id"))
-        .orderBy(col("n_chars").desc, col("doc_id").asc)
-      val h = substring(
-        md5(concat(col("cluster_id").cast("string"), lit("split1"))), 1, 2)
-      labeled
-        .withColumn("keep", row_number().over(w) === 1)
-        .join(sizes, "cluster_id")
-        .withColumn("split",
-          when(h < "cc", "train").when(h < "e6", "val").otherwise("test"))
-        .select(col("doc_id"), col("cluster_id"), col("cluster_size"),
-          col("keep"), col("split"))
-    }),
+    "q_dedup_pipeline" -> ((s, d) => pipelineAssignment(s, d)._2),
 
     // ---- FULL ingest-to-ship pipeline (r11 VERDICT stretch item 6):
     // q_dedup_pipeline's shared-pair-table shape EXTENDED through the
@@ -1108,7 +1076,9 @@ object LlmOps {
     // cluster size, representative flag, split, contaminated flag
     // (always false for train docs: they ARE the reference set).
     "q_pipeline_full" -> ((s, d) => {
-      val (docs, assigned) = pipelineAssignment(s, d)
+      val (docs, assigned0) = pipelineAssignment(s, d)
+      // feeds both sides of the contamination gate and the projection
+      val assigned = assigned0.localCheckpoint()
       // ONE split-keyed gram table for both sides of the gate (r12
       // VERDICT note 3): the 5-gram explode runs once, crosses one
       // g-keyed exchange, and is MATERIALIZED there — per-consumer
@@ -1170,7 +1140,9 @@ object LlmOps {
     // q_pipeline_full's per-doc flags, and asserts the gram stage runs
     // once (a single WordShingles subtree feeding a reused exchange).
     "q_pipeline_report" -> ((s, d) => {
-      val (docs, assigned) = pipelineAssignment(s, d)
+      val (docs, assigned0) = pipelineAssignment(s, d)
+      // feeds the gram table and the ship/cluster statistics
+      val assigned = assigned0.localCheckpoint()
       // the one gram table: FULL corpus (the overlap census needs every
       // doc, dropped copies included), carrying the consumer keys
       // (split, keep, source) so each of the THREE gram consumers is a

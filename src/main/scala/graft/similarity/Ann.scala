@@ -34,7 +34,7 @@ object Ann {
     * final passes buffer multi-million rows per task at the 30× scale
     * point (~3M copied rows live in priority queues per task — the r10
     * GC-storm finding), where the spillable external-sort fallback is
-    * strictly faster. Passed per-call so the session default
+    * strictly faster. Passed per-call so the default
     * ([[graft.plans.GroupTopK.DefaultMaxBufferedRows]], 4M) stays
     * tuned for the mid-size finals every other GroupTopK user has. */
   val AnnTopKBudget: Long = 1L * 1024 * 1024
@@ -425,7 +425,7 @@ object Ann {
       groupCols = Seq(col("band"), col("key")),
       order = Seq(xxhash64(col("band"), col("key"), col("nid")).asc,
         col("nid").asc),
-      k = maxBucket, maxBufferedRows = Some(AnnTopKBudget))
+      k = maxBucket, maxBufferedRows = AnnTopKBudget)
   }
 
   /** The QUERY side of the bounded path: band the (qid, qv) query set,
@@ -501,7 +501,7 @@ object Ann {
     val capped = graft.plans.GroupTopK.topKPerGroup(cand,
       groupCols = Seq(col("qid")),
       order = Seq(col("nshared").desc, col("ham").asc, col("nid").asc),
-      k = capPerQuery, maxBufferedRows = Some(AnnTopKBudget))
+      k = capPerQuery, maxBufferedRows = AnnTopKBudget)
       .select(col("qid"), col("nid"))
     // RE-RANK (round-10 rework; r10 sf3 stage profile): the old shape —
     // shuffled cv attach, then a qid exchange of every capped pair WITH
@@ -548,7 +548,7 @@ object Ann {
     val top = graft.plans.GroupTopK.topKPerGroup(scored,
       groupCols = Seq(col("qid")),
       order = Seq(col("cos_sim").desc, col("nid").asc), k = k,
-      maxBufferedRows = Some(AnnTopKBudget))
+      maxBufferedRows = AnnTopKBudget)
     // rank numbers over the ≤ k survivors per query — q·k rows, not
     // q·capPerQuery
     val w = Window.partitionBy(col("qid"))

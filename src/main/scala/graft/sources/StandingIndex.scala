@@ -1,7 +1,7 @@
 package graft.sources
 
 import java.io.File
-import java.nio.file.{Files, StandardCopyOption, StandardOpenOption}
+import java.nio.file.{Files, StandardCopyOption}
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -9,6 +9,8 @@ import org.apache.spark.sql.types._
 import graft.Tables
 import graft.text.TextFunctions
 import graft.vector.VectorFunctions
+import Committed.{commitGen, crashHook, currentGen, deleteRecursive, genDir,
+  readMeta, tag, withProcessLock, writeMeta}
 
 /** Persisted standing indexes: build once, serve many (VERDICT r13
   * next-round item 1), maintained by APPEND and kept healthy by
@@ -73,24 +75,20 @@ import graft.vector.VectorFunctions
   *    corpus per invocation; the persisted serve signs only the query
   *    batch (VERDICT r14 item 3).
   *
-  * ATOMIC MAINTENANCE (VERDICT r14 item 1 — the one known wrong-answer
-  * path): r14's append did three sequential `insertInto` calls with a
-  * marker written after, so a crash mid-append left partial bucket
-  * files and a re-run duplicated member rows → duplicate output pairs.
-  * Maintained indexes now commit by GENERATION: an append stages the
-  * increment's tables into the NEXT generation directory, hard-links
-  * the current generation's immutable files in (work ∝ increment: no
-  * data is copied or rewritten), and then flips a single pointer file
-  * via temp-file + atomic rename. The pointer flip is the commit — the
-  * reference's own protocol, where the MOF+index pair becomes visible
-  * to the servlet only once the index record exists
-  * (src/MOFServer/IndexInfo.h:98-104). A crash anywhere before the
-  * flip leaves the current generation untouched and the re-run sweeps
-  * the partial staging dir; concurrent processes serialize on an OS
-  * file lock. Superseded generations become garbage for [[gc]];
-  * repeated appends accrete one file set per generation until
-  * [[compactNearDup]] rewrites the current generation into one file
-  * per bucket (VERDICT r14 item 4).
+  * ATOMIC BUILDS AND MAINTENANCE: every index, build-only or
+  * maintained, commits by GENERATION through [[Committed]] — stage the
+  * tables into the next generation directory, then flip a single
+  * pointer file under the root's process lock. A build is generation
+  * 0 ([[Committed.ensure]]); an append stages the increment's tables
+  * into the NEXT generation and hard-links the current generation's
+  * immutable files in (work ∝ increment: no data is copied or
+  * rewritten) before its flip. A crash anywhere before the flip leaves
+  * the committed generation (or nothing) visible, and the re-run
+  * sweeps the partial staging dir, so rows are neither lost nor
+  * duplicated. Superseded generations become garbage for
+  * [[Committed.gc]]; repeated appends accrete one file set per
+  * generation until [[ndCompact]] rewrites the current generation into
+  * one file per bucket.
   *
   * Index identity is content-keyed: the tag folds in the source
   * parquet's file sizes+mtimes, so a regenerated-in-place fixture
@@ -102,7 +100,7 @@ object StandingIndex {
 
   /** Build wall-seconds by index label ("neardup@<tag>" / "ivf@<tag>"),
     * for the bench artifact's amortization record. The seconds are also
-    * PERSISTED in each index's marker/meta file, so a session that
+    * PERSISTED in each index's generation meta, so a session that
     * finds the index already on disk still reports what the build
     * cost — the artifact's build-vs-serve record survives the build
     * happening in an earlier run (exactly the deployment shape the
@@ -114,100 +112,19 @@ object StandingIndex {
     * published in the bench artifact's standing_index section. */
   val statsLog = new scala.collection.concurrent.TrieMap[String, Double]()
 
-  private def writeMarker(marker: File, sec: Double): Unit = {
-    marker.getParentFile.mkdirs()
-    Files.write(marker.toPath, f"$sec%.3f".getBytes("UTF-8"))
-  }
-
-  private def loadMarker(marker: File, label: String): Unit =
-    try {
-      val s = new String(Files.readAllBytes(marker.toPath), "UTF-8").trim
-      if (s.nonEmpty) buildLog.putIfAbsent(label, s.toDouble)
-    } catch { case _: Throwable => () } // pre-r14 empty marker: no record
-
   private[graft] def repoRoot: String =
     sys.env.getOrElse("SPARK_GRAFT_REPO_DIR", "/root/repo")
 
   private[graft] def standingRoot: String = s"$repoRoot/target/standing"
 
-  /** Content signal of one fixture parquet (dir of part files or a
-    * single file): RELATIVE paths + sizes + mtimes, recursing into
-    * subdirectories (ADVICE r14: a hive-partitioned source keeps its
-    * leaf files below `col=value/` dirs — a flat listing would miss
-    * their churn; relative paths fold layout changes into the tag
-    * too). Shared staleness primitive — the capped-ANN accuracy
-    * fixture and the BroadcastGuard memo keys use the same signal, so
-    * all three staleness gates agree on what "same content" means
-    * (review r14). For a flat directory this reduces to the old
-    * name=size@mtime form, so existing index tags are unchanged. */
-  private[graft] def contentSig(path: String): String = {
-    val f = new File(path)
-    if (!f.isDirectory) return s"${f.length}@${f.lastModified}"
-    val base = f.toPath
-    val out = scala.collection.mutable.ArrayBuffer[String]()
-    def walk(d: File): Unit =
-      Option(d.listFiles()).getOrElse(Array.empty).foreach { x =>
-        if (x.isDirectory) walk(x)
-        else out += s"${base.relativize(x.toPath)}=${x.length}@${x.lastModified}"
-      }
-    walk(f)
-    out.sorted.mkString(",")
-  }
-
-  /** 8-hex content tag of `<d>/<table>.parquet` (dir + content signal). */
-  private[graft] def tag(d: String, table: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$d|${contentSig(s"$d/$table.parquet")}".getBytes("UTF-8"))
-      .take(4).map("%02x".format(_)).mkString
-
-  // ---- generation/commit protocol -----------------------------------
-
-  private val PointerName = "_GRAFT_CURRENT"
-  private val MetaName = "_GRAFT_META"
-  private val LastUsedName = "_GRAFT_LAST_USED"
-
-  /** Test-only crash injection for the append protocol's crash-safety
-    * spec: called with a named protocol point; StandingIndexSpec makes
-    * it throw to simulate a kill between steps. */
-  private[graft] var crashHook: String => Unit = _ => ()
-
-  /** Committed generation of a maintained index, or None if nothing
-    * was ever committed (a root without a pointer holds only garbage —
-    * by protocol, data becomes real on the pointer flip). */
-  private[graft] def currentGen(root: String): Option[Int] = {
-    val f = new File(root, PointerName)
-    if (!f.exists()) None
-    else try Some(new String(Files.readAllBytes(f.toPath), "UTF-8").trim.toInt)
-    catch { case _: Throwable => None }
-  }
-
-  /** THE commit point: write the generation number to a temp file and
-    * atomically rename it over the pointer. Readers see the old
-    * generation or the new one, never a partial state. */
-  private def commitGen(root: String, gen: Int): Unit = {
-    new File(root).mkdirs()
-    val tmp = new File(root, s"$PointerName.tmp")
-    Files.write(tmp.toPath, gen.toString.getBytes("UTF-8"))
-    Files.move(tmp.toPath, new File(root, PointerName).toPath,
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-  }
-
-  private def genDir(root: String, gen: Int): String = s"$root/g$gen"
-
-  private def writeMeta(dir: String, meta: Map[String, String]): Unit = {
-    new File(dir).mkdirs()
-    Files.write(new File(dir, MetaName).toPath,
-      meta.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }
-        .mkString("\n").getBytes("UTF-8"))
-  }
-
-  private def readMeta(dir: String): Map[String, String] = {
-    val f = new File(dir, MetaName)
-    if (!f.exists()) Map.empty
-    else new String(Files.readAllBytes(f.toPath), "UTF-8").linesIterator
-      .map(_.trim).filter(_.contains("="))
-      .map { l => val i = l.indexOf('='); l.substring(0, i) -> l.substring(i + 1) }
-      .toMap
+  /** [[Committed.ensure]] for a build-only index or a maintained
+    * index's generation 0, recording the build seconds persisted in the
+    * generation meta under `label` — also when the build happened in an
+    * earlier process. */
+  private def built(root: String, label: String)(write: String => Unit): String = {
+    val dir = Committed.ensure(root)(write)
+    readMeta(dir).get("base_sec").foreach(s => buildLog.put(label, s.toDouble))
+    dir
   }
 
   /** Load persisted per-generation seconds/stats into the session logs
@@ -223,20 +140,6 @@ object StandingIndex {
         statsLog.putIfAbsent(s"$tag-$s", v.toDouble)
       case _ => ()
     }
-  }
-
-  /** Touch the root's last-used stamp — [[gc]]'s eviction key. */
-  private def touchLastUsed(root: String): Unit =
-    try {
-      new File(root).mkdirs()
-      Files.write(new File(root, LastUsedName).toPath,
-        System.currentTimeMillis().toString.getBytes("UTF-8"))
-    } catch { case _: Throwable => () }
-
-  private def deleteRecursive(f: File): Unit = {
-    if (f.isDirectory)
-      Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursive)
-    f.delete()
   }
 
   /** Hard-link every data file under `from` into `to`, recursing into
@@ -259,37 +162,6 @@ object StandingIndex {
               StandardCopyOption.REPLACE_EXISTING) }
       }
     }
-  }
-
-  /** Serialize maintenance on `root` across PROCESSES (ADVICE r14: the
-    * per-JVM `synchronized` cannot stop a concurrent Verify and Bench
-    * from double-appending). The object-level synchronized wrapper
-    * already serializes threads within this JVM, so the OS lock never
-    * self-overlaps. */
-  private def withProcessLock[T](root: String)(body: => T): T = {
-    new File(root).mkdirs()
-    val ch = java.nio.channels.FileChannel.open(
-      new File(root, "_GRAFT_LOCK").toPath,
-      StandardOpenOption.CREATE, StandardOpenOption.WRITE)
-    try { val l = ch.lock(); try body finally l.release() }
-    finally ch.close()
-  }
-
-  /** Remove staging dirs a crashed run left behind: every `g<N>` that
-    * is not the committed generation is either a dead older generation
-    * (left for [[gc]]) or, when it is NUMERICALLY NEWER than the
-    * pointer, an uncommitted partial — deleted before a retry so the
-    * protocol is idempotent. No pointer at all ⇒ nothing was ever
-    * committed ⇒ the whole root is garbage (including any pre-r15
-    * insertInto-era layout, which kept its tables at the root). */
-  private def sweepUncommitted(root: String): Unit = currentGen(root) match {
-    case None =>
-      if (new File(root).exists()) deleteRecursive(new File(root))
-    case Some(g) =>
-      Option(new File(root).listFiles()).getOrElse(Array.empty)
-        .filter(f => f.isDirectory && f.getName.matches("g\\d+") &&
-          f.getName.drop(1).toInt > g)
-        .foreach(deleteRecursive)
   }
 
   // ---- near-dup (minhash) index -------------------------------------
@@ -390,17 +262,8 @@ object StandingIndex {
   private[graft] def ndEnsureBase(spark: SparkSession, root: String,
                                   prefix: String, corpus: => DataFrame,
                                   logTag: String): Unit =
-    if (currentGen(root).isEmpty) {
-      sweepUncommitted(root) // nothing committed ⇒ root holds only garbage
-      val t0 = System.nanoTime()
-      writeNearDupGen(spark, corpus, genDir(root, 0), ndNames(prefix, 0))
-      val sec = (System.nanoTime() - t0) / 1e9
-      writeMeta(genDir(root, 0),
-        Map("appends" -> "0", "base_sec" -> f"$sec%.3f"))
-      crashHook("before_commit")
-      commitGen(root, 0)
-      buildLog.put(s"$logTag-base", sec)
-    }
+    built(root, s"$logTag-base")(
+      writeNearDupGen(spark, corpus, _, ndNames(prefix, 0)))
 
   /** Index MAINTENANCE, atomically: stage the increment's collapsed
     * signature groups as the next generation's bucketed tables,
@@ -499,34 +362,15 @@ object StandingIndex {
 
   /** Ensure the near-dup index for the standing corpus of `d` exists
     * (building it on first use) and its three tables are registered in
-    * this session's catalog; returns the table names. Build-only (no
-    * appends), so it keeps the single-shot marker layout: the build is
-    * idempotent under `mode(overwrite)` and the marker-after-build is
-    * merely a cache key, never a visibility gate. */
+    * this session's catalog; returns the table names. */
   def ensureNearDup(spark: SparkSession, d: String): NearDupIndex = synchronized {
     val t = tag(d, "documents")
-    val root = s"$standingRoot/nd_$t"
     val idx = NearDupIndex(s"graft_nd_${t}_bands", s"graft_nd_${t}_members",
       s"graft_nd_${t}_shingles")
-    val marker = new File(s"$root/_GRAFT_NDIDX_v1")
-    if (!marker.exists()) {
-      val t0 = System.nanoTime()
-      val (bands, members, sh) = nearDupTables(
-        Tables.documents(spark, d).filter(col("doc_id") % 5 =!= 0))
-      Layout.writeBucketed(bands, idx.bands, s"$root/bands",
-        NdBuckets, "key", "key")
-      Layout.writeBucketed(members, idx.members, s"$root/members",
-        NdBuckets, "rep", "rep")
-      Layout.writeBucketed(sh, idx.shingles, s"$root/shingles",
-        NdBuckets, "id", "id")
-      val sec = (System.nanoTime() - t0) / 1e9
-      writeMarker(marker, sec)
-      buildLog.put(s"neardup@$t", sec)
-    } else {
-      loadMarker(marker, s"neardup@$t")
-      registerNearDup(spark, root, idx)
-    }
-    touchLastUsed(root)
+    val dir = built(s"$standingRoot/nd_$t", s"neardup@$t")(
+      writeNearDupGen(spark,
+        Tables.documents(spark, d).filter(col("doc_id") % 5 =!= 0), _, idx))
+    registerNearDup(spark, dir, idx)
     idx
   }
 
@@ -550,7 +394,6 @@ object StandingIndex {
       if (readMeta(genDir(root, g)).getOrElse("appends", "0").toInt == 0)
         ndAppend(spark, root, prefix,
           docs.filter((col("doc_id") % 5).isin(3, 4)), s"neardup@$t")
-      touchLastUsed(root)
       ndCurrent(spark, root, prefix)
     }
   }
@@ -679,20 +522,11 @@ object StandingIndex {
     * every serve against the same index is deterministic. */
   def ensureAnn(spark: SparkSession, d: String): AnnIndex = synchronized {
     val t = tag(d, "embeddings")
-    val root = s"$standingRoot/ivf_$t"
-    val idx = AnnIndex(s"$root/centroids", s"$root/assignments")
-    val marker = new File(s"$root/_GRAFT_IVFIDX_v1")
-    if (marker.exists()) {
-      loadMarker(marker, s"ivf@$t"); touchLastUsed(root); return idx
+    val dir = built(s"$standingRoot/ivf_$t", s"ivf@$t") { dir =>
+      val c = embCorpus(spark, d)
+      writeAnnGen(spark, c, refineCents(c), dir)
     }
-    val t0 = System.nanoTime()
-    val c = embCorpus(spark, d)
-    writeAnnGen(spark, c, refineCents(c), root)
-    val sec = (System.nanoTime() - t0) / 1e9
-    writeMarker(marker, sec)
-    buildLog.put(s"ivf@$t", sec)
-    touchLastUsed(root)
-    idx
+    AnnIndex(s"$dir/centroids", s"$dir/assignments")
   }
 
   /** IVF index MAINTENANCE (VERDICT r14 item 2): generation 0 clusters
@@ -712,19 +546,12 @@ object StandingIndex {
   def ensureAnnAppended(spark: SparkSession, d: String): AnnIndex = synchronized {
     val t = tag(d, "embeddings")
     val root = s"$standingRoot/iva_$t"
+    val logTag = s"ivf@$t"
     withProcessLock(root) {
-      val logTag = s"ivf@$t"
-      if (currentGen(root).isEmpty) {
-        sweepUncommitted(root)
-        val t0 = System.nanoTime()
+      built(root, s"$logTag-base") { dir =>
         val standing = embCorpus(spark, d).filter((col("nid") % 5).isin(1, 2))
         writeAnnGen(spark, standing,
-          refineCents(standing, KmeansItersAppended), genDir(root, 0))
-        val sec = (System.nanoTime() - t0) / 1e9
-        writeMeta(genDir(root, 0),
-          Map("appends" -> "0", "base_sec" -> f"$sec%.3f"))
-        commitGen(root, 0)
-        buildLog.put(s"$logTag-base", sec)
+          refineCents(standing, KmeansItersAppended), dir)
       }
       val g = currentGen(root).get
       loadMetaLogs(genDir(root, g), logTag)
@@ -733,7 +560,6 @@ object StandingIndex {
           embCorpus(spark, d).filter((col("nid") % 5).isin(3, 4)), logTag)
         buildLog.put(s"$logTag-append", sec)
       }
-      touchLastUsed(root)
       val cg = currentGen(root).get
       AnnIndex(s"${genDir(root, cg)}/centroids",
         s"${genDir(root, cg)}/assignments")
@@ -900,33 +726,24 @@ object StandingIndex {
     * never re-scanned or re-signed (plan-asserted). */
   def ensureLshBounded(spark: SparkSession, d: String): LshIndex = synchronized {
     val t = tag(d, "embeddings")
-    val root = s"$standingRoot/lshb_$t"
     val idx = LshIndex(s"graft_lshb_${t}_bands", s"graft_lshb_${t}_vecs")
-    val marker = new File(s"$root/_GRAFT_LSHIDX_v1")
-    if (!marker.exists()) {
-      val t0 = System.nanoTime()
+    val dir = built(s"$standingRoot/lshb_$t", s"lshb@$t") { dir =>
       val corpus = Tables.embeddings(spark, d)
         .filter(col("vec_id") % 5 =!= 0)
       val c = corpus.select(col("vec_id").as("nid"),
         VectorFunctions.asDouble(col("embedding")).as("cv"))
       val cb = graft.similarity.Ann.boundedBandTable(
         corpus, "vec_id", "embedding", dim = 64)
-      Layout.writeBucketed(cb, idx.bands, s"$root/bands",
+      Layout.writeBucketed(cb, idx.bands, s"$dir/bands",
         LshBuckets, "key")
-      Layout.writeBucketed(c, idx.vecs, s"$root/vecs",
+      Layout.writeBucketed(c, idx.vecs, s"$dir/vecs",
         LshBuckets, "nid")
-      val sec = (System.nanoTime() - t0) / 1e9
-      writeMarker(marker, sec)
-      buildLog.put(s"lshb@$t", sec)
-    } else {
-      loadMarker(marker, s"lshb@$t")
-      registerLsh(spark, root, idx)
     }
-    touchLastUsed(root)
+    registerLsh(spark, dir, idx)
     idx
   }
 
-  private def registerLsh(spark: SparkSession, root: String,
+  private def registerLsh(spark: SparkSession, dir: String,
                           idx: LshIndex): Unit = {
     val sigCols = (0 until graft.similarity.Ann.BoundedNumSigs)
       .map(s => s"sn$s BIGINT").mkString(", ")
@@ -934,12 +751,12 @@ object StandingIndex {
       spark.sql(s"""CREATE TABLE ${idx.bands}
         |(band INT, key BIGINT, nid BIGINT, $sigCols) USING parquet
         |CLUSTERED BY (key) INTO $LshBuckets BUCKETS
-        |LOCATION '$root/bands'""".stripMargin)
+        |LOCATION '$dir/bands'""".stripMargin)
     if (!spark.catalog.tableExists(idx.vecs))
       spark.sql(s"""CREATE TABLE ${idx.vecs}
         |(nid BIGINT, cv ARRAY<DOUBLE>) USING parquet
         |CLUSTERED BY (nid) INTO $LshBuckets BUCKETS
-        |LOCATION '$root/vecs'""".stripMargin)
+        |LOCATION '$dir/vecs'""".stripMargin)
   }
 
   /** q_ann_lsh_big served from the PERSISTED index: the probe batch
@@ -960,7 +777,7 @@ object StandingIndex {
       spark.table(idx.bands), spark.table(idx.vecs), k, dim = 64)
   }
 
-  // ---- compaction + GC ----------------------------------------------
+  // ---- compaction ---------------------------------------------------
 
   /** Compact the maintained near-dup index of `d` (the fixture-wired
     * [[ensureNearDupAppended]] root) — see [[ndCompact]]. No-op (returns
@@ -982,52 +799,4 @@ object StandingIndex {
         } else ndCompact(spark, root, s"graft_nda_$t", s"neardup@$t")
       }
     }
-
-  /** Standing-index GARBAGE COLLECTION (VERDICT r14 item 5 of "what's
-    * wrong"): content-tag churn (every fixture regeneration mints a new
-    * tag) orphans whole index roots, and each append/compaction leaves
-    * its superseded generation dir behind. Sweeps `<standingRoot>`:
-    *
-    *  - inside every root with a committed pointer, delete generation
-    *    dirs OTHER than the current one whose files are older than
-    *    `maxAgeMs` (the age gate keeps a generation a concurrent
-    *    reader might still hold open);
-    *  - delete whole roots whose last USE (the `_GRAFT_LAST_USED`
-    *    stamp every ensure touches; fallback: newest marker/pointer
-    *    mtime) is older than `maxAgeMs` — current-content indexes are
-    *    re-touched every serve, so age-since-use is exactly
-    *    orphanhood.
-    *
-    * Returns (stale generation dirs removed, orphaned roots removed).
-    * Idempotent and crash-safe: it only ever deletes what the pointer
-    * protocol already defines as garbage. */
-  def gc(maxAgeMs: Long, root: String = standingRoot,
-         now: Long = System.currentTimeMillis()): (Int, Int) = synchronized {
-    val cutoff = now - maxAgeMs
-    var gens = 0
-    var roots = 0
-    for (r <- Option(new File(root).listFiles()).getOrElse(Array.empty)
-         if r.isDirectory) {
-      def newestStamp: Long = {
-        val lu = new File(r, LastUsedName)
-        if (lu.exists())
-          try new String(Files.readAllBytes(lu.toPath), "UTF-8").trim.toLong
-          catch { case _: Throwable => lu.lastModified }
-        else Option(r.listFiles()).getOrElse(Array.empty)
-          .filter(f => f.isFile && f.getName.startsWith("_GRAFT"))
-          .map(_.lastModified) match {
-            case a if a.nonEmpty => a.max
-            case _ => r.lastModified
-          }
-      }
-      if (newestStamp < cutoff) { deleteRecursive(r); roots += 1 }
-      else currentGen(r.getPath).foreach { g =>
-        Option(r.listFiles()).getOrElse(Array.empty)
-          .filter(f => f.isDirectory && f.getName.matches("g\\d+") &&
-            f.getName.drop(1).toInt != g && f.lastModified < cutoff)
-          .foreach { f => deleteRecursive(f); gens += 1 }
-      }
-    }
-    (gens, roots)
-  }
 }

@@ -46,22 +46,17 @@ class GroupTopKSpec extends SparkSuite {
     assert(global == expect)
   }
 
-  /** Runs `body` with the buffered-row budget forced down to `rows`,
-    * so both the partial-pass flush path and the final-pass external
-    * sort fallback execute even on the small fixture. */
-  private def withBudget[T](rows: Long)(body: => T): T = {
-    spark.conf.set(GroupTopK.MaxBufferedRowsKey, rows.toString)
-    try body finally spark.conf.unset(GroupTopK.MaxBufferedRowsKey)
-  }
+  // Tiny buffered-row budgets below force both the partial-pass flush
+  // path and the final-pass external sort fallback to execute even on
+  // the small fixture.
 
   test("tiny budget (partial flush + final sort fallback) matches window") {
-    val custom = withBudget(7) {
-      GroupTopK.topKPerGroup(orders,
-          Seq(orders("o_custkey")),
-          Seq(orders("o_totalprice").desc, orders("o_orderkey").asc), k = 3)
-        .select("o_custkey", "o_orderkey")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    }
+    val custom = GroupTopK.topKPerGroup(orders,
+        Seq(orders("o_custkey")),
+        Seq(orders("o_totalprice").desc, orders("o_orderkey").asc), k = 3,
+        maxBufferedRows = 7)
+      .select("o_custkey", "o_orderkey")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val w = Window.partitionBy(col("o_custkey"))
       .orderBy(col("o_totalprice").desc, col("o_orderkey"))
     val window = orders.withColumn("rk", row_number().over(w))
@@ -74,23 +69,20 @@ class GroupTopKSpec extends SparkSuite {
   test("k=1 on a near-unique key under a tiny budget (the dedup shape)") {
     // groups ≈ rows: the exact shape that OOMs an unbounded heap map —
     // every final-pass task must take the external-sort fallback
-    val deduped = withBudget(16) {
-      GroupTopK.topKPerGroup(orders,
-          Seq(orders("o_orderkey")),
-          Seq(orders("o_totalprice").asc), k = 1)
-        .select("o_orderkey").collect().map(_.getLong(0))
-    }
+    val deduped = GroupTopK.topKPerGroup(orders,
+        Seq(orders("o_orderkey")),
+        Seq(orders("o_totalprice").asc), k = 1, maxBufferedRows = 16)
+      .select("o_orderkey").collect().map(_.getLong(0))
     assert(deduped.length == deduped.distinct.length)
     assert(deduped.toSet ==
       orders.select("o_orderkey").collect().map(_.getLong(0)).toSet)
   }
 
   test("global top-k under a tiny budget matches limit") {
-    val global = withBudget(4) {
-      GroupTopK.topKPerGroup(orders, Seq.empty,
-          Seq(orders("o_totalprice").desc, orders("o_orderkey").asc), k = 10)
-        .select("o_orderkey").collect().map(_.getLong(0)).toSet
-    }
+    val global = GroupTopK.topKPerGroup(orders, Seq.empty,
+        Seq(orders("o_totalprice").desc, orders("o_orderkey").asc), k = 10,
+        maxBufferedRows = 4)
+      .select("o_orderkey").collect().map(_.getLong(0)).toSet
     val expect = orders.orderBy(col("o_totalprice").desc, col("o_orderkey"))
       .limit(10).select("o_orderkey")
       .collect().map(_.getLong(0)).toSet
@@ -118,10 +110,8 @@ class GroupTopKSpec extends SparkSuite {
       val src = spark.range(n).select(
         (col("id") / 2).cast("long").as("key"),        // ~1e5 groups of 2
         (pmod(col("id") * 2654435761L, lit(1000003L))).as("v"))
-      val df = withBudget(1000) {
-        GroupTopK.topKPerGroup(src, Seq(src("key")),
-          Seq(src("v").asc, src("key").asc), k = 1)
-      }
+      val df = GroupTopK.topKPerGroup(src, Seq(src("key")),
+        Seq(src("v").asc, src("key").asc), k = 1, maxBufferedRows = 1000)
       // collect df ITSELF: a .select would spawn a fresh queryExecution
       // and the metrics below would read an un-executed plan
       val got = df.collect()

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 /** Promotes the bench's direct-count linearity adjudication
   * ([[ScaleCounts]], r11-r12) from a manual re-run into
   * a test: the ScaleFixture is disjoint-replica by construction —
@@ -19,10 +17,7 @@ class ScaleLinearitySpec extends SparkSuite {
 
   private val factor = 3
 
-  private lazy val scaledDir: String = {
-    val dir = Files.createTempDirectory("graft-scale-lin").toString
-    ScaleFixture.ensure(spark, sfDir, dir, factor)
-  }
+  private lazy val scaledDir: String = ScaleFixture.ensure(spark, sfDir, factor)
 
   test("graph workload counts scale exactly with the replica factor") {
     val base = ScaleCounts.graph(spark, sfDir)

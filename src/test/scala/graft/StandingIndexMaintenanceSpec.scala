@@ -4,7 +4,7 @@ import java.io.File
 import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
-import graft.sources.StandingIndex
+import graft.sources.{Committed, StandingIndex}
 
 /** Pins the MAINTENANCE contract of the standing indexes (VERDICT r14
   * items 1-4): appends commit atomically via the stage + hard-link +
@@ -64,29 +64,29 @@ class StandingIndexMaintenanceSpec extends SparkSuite {
     try {
       // base-build crash BEFORE the pointer flip: nothing was ever
       // committed, the root is garbage by protocol
-      StandingIndex.crashHook =
+      Committed.crashHook =
         p => if (p == "before_commit") throw new RuntimeException("boom")
       intercept[RuntimeException] {
         StandingIndex.ndEnsureBase(spark, root, prefix, slice(1, 2), "t")
       }
-      assert(StandingIndex.currentGen(root).isEmpty,
+      assert(Committed.currentGen(root).isEmpty,
         "a crash before the flip must leave nothing committed")
-      StandingIndex.crashHook = _ => ()
+      Committed.crashHook = _ => ()
       StandingIndex.ndEnsureBase(spark, root, prefix, slice(1, 2), "t")
-      assert(StandingIndex.currentGen(root).contains(0))
+      assert(Committed.currentGen(root).contains(0))
       val baseAnswer = pairs(serve(root, prefix))
 
       // crash the APPEND at every protocol point: the pointer must not
       // move and generation 0 must keep serving its exact answer
       for (point <- Seq("staged_bands", "staged_members",
           "staged_increment", "before_commit")) {
-        StandingIndex.crashHook =
+        Committed.crashHook =
           p => if (p == point) throw new RuntimeException(s"boom@$point")
         intercept[RuntimeException] {
           StandingIndex.ndAppend(spark, root, prefix, slice(3, 4), "t")
         }
-        StandingIndex.crashHook = _ => ()
-        assert(StandingIndex.currentGen(root).contains(0),
+        Committed.crashHook = _ => ()
+        assert(Committed.currentGen(root).contains(0),
           s"crash at $point must not move the pointer")
         assert(pairs(serve(root, prefix)) == baseAnswer,
           s"crash at $point changed the committed generation's answer")
@@ -95,7 +95,7 @@ class StandingIndexMaintenanceSpec extends SparkSuite {
       // the clean retry commits; the maintained index answers exactly
       // like the monolithic one — nothing lost, nothing duplicated
       StandingIndex.ndAppend(spark, root, prefix, slice(3, 4), "t")
-      assert(StandingIndex.currentGen(root).contains(1))
+      assert(Committed.currentGen(root).contains(1))
       val served = serve(root, prefix).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       assert(served.length == served.distinct.length,
@@ -110,7 +110,7 @@ class StandingIndexMaintenanceSpec extends SparkSuite {
       assert(spark.table(idx.members).groupBy("id").count()
         .filter(col("count") > 1).count() == 0,
         "a doc appears twice in members after crashed retries")
-    } finally StandingIndex.crashHook = _ => ()
+    } finally Committed.crashHook = _ => ()
   }
 
   test("k appends then compaction: same answer, one file set per " +
@@ -127,12 +127,12 @@ class StandingIndexMaintenanceSpec extends SparkSuite {
       preCompact.queryExecution.executedPlan.toString, "Exchange")
     // accretion evidence: 4 generation writes have piled up multiple
     // file sets per bucket (8 buckets per table)
-    val g = StandingIndex.currentGen(root).get
+    val g = Committed.currentGen(root).get
     val bandsBefore = parquetFiles(new File(s"$root/g$g/bands"))
     assert(bandsBefore > 8,
       s"expected accreted file sets before compaction, saw $bandsBefore")
     StandingIndex.ndCompact(spark, root, prefix, "t")
-    val gc = StandingIndex.currentGen(root).get
+    val gc = Committed.currentGen(root).get
     assert(gc == g + 1, "compaction must commit a fresh generation")
     for (t <- Seq("bands", "members", "shingles")) {
       val n = parquetFiles(new File(s"$root/g$gc/$t"))
@@ -165,7 +165,8 @@ class StandingIndexMaintenanceSpec extends SparkSuite {
     orphan.mkdirs()
     Files.write(new File(orphan, "_GRAFT_LAST_USED").toPath,
       old.toString.getBytes("UTF-8"))
-    val (gens, roots) = StandingIndex.gc(7L * 24 * 3600 * 1000)
+    val (gens, roots) =
+      Committed.gc(7L * 24 * 3600 * 1000, StandingIndex.standingRoot)
     assert(gens >= 1, "the aged superseded generation must be collected")
     assert(roots >= 1, "the orphaned root must be collected")
     assert(!new File(root, "g0").exists(), "superseded g0 survived gc")
@@ -177,20 +178,20 @@ class StandingIndexMaintenanceSpec extends SparkSuite {
 
   test("ivf append: crash-safe; appended vectors replicated into top-2 " +
       "cells, standing cells untouched, drift recorded") {
-    val t = StandingIndex.tag(sfDir, "embeddings")
+    val t = Committed.tag(sfDir, "embeddings")
     val root = StandingIndex.standingRoot + "/iva_" + t
     deleteRec(new File(root))
     try {
-      StandingIndex.crashHook = p =>
+      Committed.crashHook = p =>
         if (p == "staged_increment") throw new RuntimeException("boom")
       intercept[RuntimeException] {
         SparkEntry.queries("q_ann_index_append")(spark, sfDir).collect()
       }
-      StandingIndex.crashHook = _ => ()
-      assert(StandingIndex.currentGen(root).contains(0),
+      Committed.crashHook = _ => ()
+      assert(Committed.currentGen(root).contains(0),
         "crash during the staged append must leave generation 0 committed")
       val rows = SparkEntry.queries("q_ann_index_append")(spark, sfDir).collect()
-      assert(StandingIndex.currentGen(root).contains(1))
+      assert(Committed.currentGen(root).contains(1))
       assert(rows.nonEmpty, "appended index must serve on the fixture")
       // no duplicate (qid, nid) in the ranked output (a replicated
       // vector meeting a query in two probed cells must collapse)
@@ -218,7 +219,7 @@ class StandingIndexMaintenanceSpec extends SparkSuite {
       // the append-induced centroid drift is recorded for the artifact
       assert(StandingIndex.statsLog.keys.exists(_.endsWith("drift_max")),
         "append must record centroid drift")
-    } finally StandingIndex.crashHook = _ => ()
+    } finally Committed.crashHook = _ => ()
   }
 
   test("persisted LSH serve: zero corpus re-scan, output equals the " +
@@ -245,5 +246,45 @@ class StandingIndexMaintenanceSpec extends SparkSuite {
       d.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(asSet(df) == asSet(transient),
       "persisted serve diverged from the transient bounded path")
+  }
+
+  test("build-only index: a crash before the commit leaves nothing " +
+      "servable; the re-run serves the monolithic answer") {
+    val t = Committed.tag(sfDir, "documents")
+    val root = s"${StandingIndex.standingRoot}/nd_$t"
+    val expected = pairs(SparkEntry.queries("q_dedup_incremental_near")(spark, sfDir))
+    freshRoot(s"nd_$t", s"graft_nd_$t")
+    try {
+      for (point <- Seq("staged_bands", "staged_members", "before_commit")) {
+        Committed.crashHook =
+          p => if (p == point) throw new RuntimeException(s"boom@$point")
+        intercept[RuntimeException] {
+          SparkEntry.queries("q_dedup_incremental_near")(spark, sfDir).collect()
+        }
+        assert(Committed.currentGen(root).isEmpty,
+          s"a crash at $point must leave nothing committed")
+      }
+    } finally Committed.crashHook = _ => ()
+    assert(pairs(SparkEntry.queries("q_dedup_incremental_near")(spark, sfDir))
+      == expected, "the re-run after crashed builds diverges from the monolithic answer")
+    assert(Committed.currentGen(root).contains(0))
+  }
+
+  test("a legacy marker-layout root is swept and rebuilt") {
+    val t = Committed.tag(sfDir, "documents")
+    val root = s"${StandingIndex.standingRoot}/nd_$t"
+    val expected = pairs(SparkEntry.queries("q_dedup_incremental_near")(spark, sfDir))
+    freshRoot(s"nd_$t", s"graft_nd_$t")
+    // the pre-pointer layout: tables at the root behind a marker that
+    // claims a finished build — here over a torn bands table
+    val torn = new File(root, "bands/part-00000-torn.c000.snappy.parquet")
+    torn.getParentFile.mkdirs()
+    Files.write(torn.toPath, "torn".getBytes("UTF-8"))
+    Files.write(new File(root, "_GRAFT_NDIDX_v1").toPath, "1.000".getBytes("UTF-8"))
+    assert(pairs(SparkEntry.queries("q_dedup_incremental_near")(spark, sfDir))
+      == expected, "the legacy root was served instead of rebuilt")
+    assert(!new File(root, "_GRAFT_NDIDX_v1").exists() &&
+      !new File(root, "bands").exists(), "the legacy layout survived the rebuild")
+    assert(Committed.currentGen(root).contains(0))
   }
 }
