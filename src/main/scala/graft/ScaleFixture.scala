@@ -77,8 +77,11 @@ object ScaleFixture {
     Committed.ensure(root("emb", baseDir, factor))(
       writeEmbeddings(spark, baseDir, _, factor))
 
-  private def write(spark: SparkSession, baseDir: String, outDir: String,
-                    factor: Int): Unit = {
+  /** Writes the `factor`× fixture of `baseDir` into `outDir`, with no
+    * commit step: [[ensure]] commits it, and ScaleLinearitySpec calls it
+    * into a fresh temp dir so every run checks the generator itself. */
+  private[graft] def write(spark: SparkSession, baseDir: String, outDir: String,
+                           factor: Int): Unit = {
     val reps = broadcast(spark.range(factor).select(col("id").as("rep")))
 
     // ---- documents --------------------------------------------------

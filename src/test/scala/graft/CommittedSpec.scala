@@ -36,6 +36,7 @@ class CommittedSpec extends SparkSuite {
     val made = scala.collection.mutable.Buffer[String]()
     try {
       val a = ScaleFixture.ensureEmbeddings(spark, sfDir, 2)
+      made += a
       val b = ScaleFixture.ensureEmbeddings(spark, base.toString, 2)
       made += b
       assert(a != b, "a fixture built from another base was served")

@@ -1,5 +1,12 @@
 package graft
 
+import java.io.File
+import java.nio.file.Files
+
+import org.scalatest.BeforeAndAfterAll
+
+import graft.sources.Committed
+
 /** Promotes the bench's direct-count linearity adjudication
   * ([[ScaleCounts]], r11-r12) from a manual re-run into
   * a test: the ScaleFixture is disjoint-replica by construction —
@@ -12,16 +19,29 @@ package graft
   * unexplained super-linear bench exponent.
   *
   * Runs on the sf0.001 fixture at factor 3 — the same generator and
-  * counters the bench uses at sf0.1 → sf1/sf3, ~20 s total. */
-class ScaleLinearitySpec extends SparkSuite {
+  * counters the bench uses at sf0.1 → sf1/sf3, ~20 s total. The
+  * fixture is written fresh into a temp dir on every run, never taken
+  * from the committed cache under `target/scale`: that cache is keyed
+  * by the generator VERSION, not its code, so a cached fixture would
+  * hide an edit to the generator. */
+class ScaleLinearitySpec extends SparkSuite with BeforeAndAfterAll {
 
   private val factor = 3
 
-  private lazy val scaledDir: String = ScaleFixture.ensure(spark, sfDir, factor)
+  private val scaledDir: String =
+    Files.createTempDirectory("graft-scale-lin").toString
+
+  private lazy val generated: String = {
+    ScaleFixture.write(spark, sfDir, scaledDir, factor)
+    scaledDir
+  }
+
+  override def afterAll(): Unit =
+    try Committed.deleteRecursive(new File(scaledDir)) finally super.afterAll()
 
   test("graph workload counts scale exactly with the replica factor") {
     val base = ScaleCounts.graph(spark, sfDir)
-    val big = ScaleCounts.graph(spark, scaledDir)
+    val big = ScaleCounts.graph(spark, generated)
     assert(big.nodes == factor * base.nodes, "nodes")
     assert(big.edges == factor * base.edges,
       s"edges ${big.edges} != $factor x ${base.edges} - replica graphs " +
@@ -37,7 +57,7 @@ class ScaleLinearitySpec extends SparkSuite {
 
   test("fuzzy-join candidate pairs scale exactly with the replica factor") {
     val base = ScaleCounts.fuzzy(spark, sfDir)
-    val big = ScaleCounts.fuzzy(spark, scaledDir)
+    val big = ScaleCounts.fuzzy(spark, generated)
     assert(big.parts == factor * base.parts, "parts")
     assert(big.blocks == factor * base.blocks,
       "block count must grow with the corpus (p_size replica shift) - " +

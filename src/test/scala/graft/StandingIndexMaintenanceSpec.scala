@@ -252,7 +252,7 @@ class StandingIndexMaintenanceSpec extends SparkSuite {
       "servable; the re-run serves the monolithic answer") {
     val t = Committed.tag(sfDir, "documents")
     val root = s"${StandingIndex.standingRoot}/nd_$t"
-    val expected = pairs(SparkEntry.queries("q_dedup_incremental_near")(spark, sfDir))
+    val expected = expectedPairs // forced before the root is cleared
     freshRoot(s"nd_$t", s"graft_nd_$t")
     try {
       for (point <- Seq("staged_bands", "staged_members", "before_commit")) {
@@ -273,7 +273,7 @@ class StandingIndexMaintenanceSpec extends SparkSuite {
   test("a legacy marker-layout root is swept and rebuilt") {
     val t = Committed.tag(sfDir, "documents")
     val root = s"${StandingIndex.standingRoot}/nd_$t"
-    val expected = pairs(SparkEntry.queries("q_dedup_incremental_near")(spark, sfDir))
+    val expected = expectedPairs // forced before the root is cleared
     freshRoot(s"nd_$t", s"graft_nd_$t")
     // the pre-pointer layout: tables at the root behind a marker that
     // claims a finished build — here over a torn bands table
