@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.dedup.Dedup
 import graft.similarity.Ann
@@ -20,28 +20,20 @@ object Accuracy {
     // q_ann_lsh: recall of SRP-LSH top-k vs exact brute-force top-k
     val e = Tables.embeddings(spark, d)
     val q = e.filter(col("vec_id") < 10)
-    val brute = Ann.bruteForceTopK(q, e, "vec_id", "embedding", 5)
-      .select("qid", "nid").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val lsh = Ann.lshTopK(q, e, "vec_id", "embedding", 5, dim = 64)
-      .select("qid", "nid").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val recall = (brute & lsh).size.toDouble / brute.size
+    val brute = pairs(Ann.bruteForceTopK(q, e, "vec_id", "embedding", 5))
+    val recall = recallOf(brute,
+      pairs(Ann.lshTopK(q, e, "vec_id", "embedding", 5, dim = 64)))
 
     // q_ann_ivf: recall of IVF nProbe-cell search vs brute force
-    val ivf = Ann.ivfTopK(q, e, "vec_id", "embedding", 5, dim = 64)
-      .select("qid", "nid").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val ivfRecall = (brute & ivf).size.toDouble / brute.size
+    val ivfRecall = recallOf(brute,
+      pairs(Ann.ivfTopK(q, e, "vec_id", "embedding", 5, dim = 64)))
 
     // q_ann_persisted: the SAME IVF geometry served from the persisted
     // standing index (r13 VERDICT item 1) — recall vs brute gates that
     // the build-once/serve-many path retrieves what the transient path
     // retrieves (the serve plan itself is pinned by StandingIndexSpec)
-    val pers = SparkEntry.queries("q_ann_persisted")(spark, d)
-      .select("qid", "nid").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val persRecall = (brute & pers).size.toDouble / brute.size
+    val persRecall = recallOf(brute,
+      pairs(SparkEntry.queries("q_ann_persisted")(spark, d)))
 
     // q_ann_index_append: the APPEND-MAINTAINED IVF index (standing
     // vec_id%5∈{1,2} clustered, %5∈{3,4} assigned to the frozen
@@ -50,27 +42,19 @@ object Accuracy {
     // holds (%5 ≠ 0). This is the number that catches a bad append
     // (lost/duplicated cells) AND excessive centroid drift.
     val corpusNo0 = e.filter(col("vec_id") % 5 =!= 0)
-    val bruteApp = Ann.bruteForceTopK(q, corpusNo0, "vec_id", "embedding", 5)
-      .select("qid", "nid").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val appServed = SparkEntry.queries("q_ann_index_append")(spark, d)
-      .select("qid", "nid").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val appRecall = (bruteApp & appServed).size.toDouble / bruteApp.size
+    val appRecall = recallOf(
+      pairs(Ann.bruteForceTopK(q, corpusNo0, "vec_id", "embedding", 5)),
+      pairs(SparkEntry.queries("q_ann_index_append")(spark, d)))
 
-    // q_ann_lsh_big: the BOUNDED all-shuffled (no-broadcast) LSH path on
-    // a LARGE query set — what the registry runs; same banding as
-    // lshTopK plus the per-bucket/per-query caps (which do not bind at
-    // this sf), so recall vs brute force is the gate; the plan shape
-    // (no BroadcastExchange) is asserted in AnnSpec
+    // q_ann_lsh_big: the BOUNDED LSH path on a LARGE query set — what
+    // the registry runs; same banding as lshTopK plus the
+    // per-bucket/per-query caps (which do not bind at this sf), so
+    // recall vs brute force is the gate; the plan shape (the corpus side
+    // never broadcasts) is asserted in AnnSpec
     val qBig = e.filter(col("vec_id") % 5 === 0)
-    val bruteBig = Ann.bruteForceTopK(qBig, e, "vec_id", "embedding", 5)
-      .select("qid", "nid").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val lshBig = Ann.lshTopKBounded(qBig, e, "vec_id", "embedding", 5, dim = 64)
-      .select("qid", "nid").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val recallBig = (bruteBig & lshBig).size.toDouble / bruteBig.size
+    val recallBig = recallOf(
+      pairs(Ann.bruteForceTopK(qBig, e, "vec_id", "embedding", 5)),
+      pairs(Ann.lshTopKBounded(qBig, e, "vec_id", "embedding", 5, dim = 64)))
 
     // q_ann_lsh_big CAPPED REGIME (r12 VERDICT item 5): at this fixture
     // scale every band bucket sits far under the registry maxBucket=64,
@@ -236,17 +220,21 @@ object Accuracy {
       .filter(pmod(xxhash64(col("vec_id")), lit(sampleMod)) === 0)
     val qids = qs.select("vec_id").collect().map(_.getLong(0)).toSet
     if (qids.isEmpty) return None
-    val brute = Ann.bruteForceTopK(qs, e.filter(col("vec_id") % 5 =!= 0),
-        "vec_id", "embedding", 5)
-      .select("qid", "nid").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    val brute = pairs(Ann.bruteForceTopK(qs,
+      e.filter(col("vec_id") % 5 =!= 0), "vec_id", "embedding", 5))
     if (brute.isEmpty) return None
-    val served = graft.sources.StandingIndex.lshBigServe(spark, dir)
-      .filter(col("qid").isin(qids.toSeq.map(Long.box): _*))
-      .select("qid", "nid").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    Some((brute & served).size.toDouble / brute.size)
+    Some(recallOf(brute, pairs(graft.sources.StandingIndex.lshBigServe(spark, dir)
+      .filter(col("qid").isin(qids.toSeq.map(Long.box): _*)))))
   }
+
+  /** The (qid, nid) pairs of a top-k result. */
+  private def pairs(topK: DataFrame): Set[(Long, Long)] =
+    topK.select("qid", "nid").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+
+  /** Share of the `truth` pairs that `got` retrieved. */
+  private def recallOf(truth: Set[(Long, Long)], got: Set[(Long, Long)]): Double =
+    (truth & got).size.toDouble / truth.size
 
   def toJson(cs: Seq[Check]): String =
     cs.map { c =>

@@ -102,8 +102,7 @@ object Bench {
     import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.streaming.Trigger
-    val root = sys.env.getOrElse("SPARK_GRAFT_REPO_DIR", "/root/repo") +
-      s"/target/streambench/$tag"
+    val root = s"${graft.sources.StandingIndex.repoRoot}/target/streambench/$tag"
     val inDir = s"$root/input"
     Tables.events(spark, dir)
       .select(col("event_id"), col("ts"), col("user_id"),
@@ -963,8 +962,7 @@ object Bench {
     // replace the round's full-budget record (r10's re-anchor was 20/24
     // budget-truncated and overwrote the full one); the truncated run
     // is kept as bench_quick_r<N>.json instead.
-    val repoDir = java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_REPO_DIR", "/root/repo"))
+    val repoDir = java.nio.file.Paths.get(graft.sources.StandingIndex.repoRoot)
     val artifactPath =
       repoDir.resolve(f"bench_full_r${roundNumber(repoDir)}%02d.json")
     val prevSnapshot =

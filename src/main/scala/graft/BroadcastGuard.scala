@@ -20,7 +20,9 @@ import org.apache.spark.sql.functions._
   * vanilla fetches when the accelerated path cannot be satisfied
   * (`plugins/shared/UdaShuffleConsumerPluginShared.java:205-232`).
   *
-  * Policy (the ANN re-rank precedent, `Ann.scala:458-480`, generalized):
+  * Policy ([[admit]] is the one place a measured broadcast is
+  * decided — the vocabulary dims here and the ANN re-rank's query side,
+  * both against the one ceiling [[MaxBytesKey]]):
   *
   *  1. pin the dim table once (`localCheckpoint`) — the sizing pass and
   *     the join consumer read one materialization, so the guard never
@@ -38,19 +40,14 @@ import org.apache.spark.sql.functions._
   *     exchange on the token key, and the plan survives any vocabulary
   *     size — the 100 TB shape, merely paying one more exchange.
   *
-  * A ceiling of `Long.MaxValue/2` or above means the caller opted out
-  * of the guard; the sizing job (which would execute the dim plan) is
-  * skipped entirely and the hint is unconditional, matching the ANN
-  * guard's opt-out contract. `BroadcastGuardSpec` pins both sides:
-  * under the default ceiling the three vocabulary queries broadcast;
-  * under a tiny ceiling they fall back to `shuffle_hash` AND produce
-  * hash-identical results.
+  * `BroadcastGuardSpec` pins both sides: under the default ceiling the
+  * three vocabulary queries broadcast; under a tiny ceiling they fall
+  * back to `shuffle_hash` AND produce hash-identical results.
   */
 object BroadcastGuard {
 
-  /** Ceiling on guarded dim-table broadcasts (bytes). One knob for the
-    * whole vocabulary family; the ANN re-rank keeps its own key because
-    * its estimate models a different payload (query vectors). */
+  /** Ceiling on every guarded broadcast (bytes): the vocabulary dims
+    * and the ANN re-rank's query side. */
   val MaxBytesKey = "spark.graft.dim.broadcastMaxBytes"
   val DefaultMaxBytes: Long = 1L << 30
 
@@ -82,14 +79,13 @@ object BroadcastGuard {
   private[graft] def memoSize: Int = sized.size
 
   /** The dim table ready to stand as the build side of an equi-join:
-    * `broadcast(...)` when its measured payload fits under half the
-    * ceiling, `hint("shuffle_hash")` otherwise.
+    * one pinned materialization, its payload measured once per session
+    * and passed through [[admit]].
     *
     * EAGER by contract (ADVICE r13): on a cache miss this executes the
     * dim plan at DataFrame-CONSTRUCTION time (one localCheckpoint + one
     * sizing aggregate) — callers that only want to inspect the plan
-    * still pay that once per session; the opt-out ceiling
-    * (≥ Long.MaxValue/2) skips all execution.
+    * still pay that once per session.
     *
     * `memoKey`: stable identity for the memo when the dim plan cannot
     * canonicalize stably across invocations — a dim derived from a
@@ -105,10 +101,6 @@ object BroadcastGuard {
   def dim(table: DataFrame, payloadBytesPerRow: Column,
           label: String, memoKey: Option[String] = None): DataFrame = {
     val spark = table.sparkSession
-    val ceiling = spark.conf
-      .get(MaxBytesKey, DefaultMaxBytes.toString).toLong
-    val effMax = ceiling / 2
-    if (effMax >= Long.MaxValue / 4) return broadcast(table)
     val analyzed = table.queryExecution.analyzed
     val key =
       if (memoKey.isEmpty && analyzed.exists(_.isInstanceOf[LogicalRDD])) None
@@ -131,13 +123,22 @@ object BroadcastGuard {
       val prev = key.map(sized.putIfAbsent(_, v)).orNull
       if (prev != null) { Checkpoints.release(p); prev } else v
     }
-    if (bytes <= effMax) broadcast(pinned)
+    admit(pinned, bytes, s"$label dim")
+  }
+
+  /** `broadcast(table)` when `measuredBytes` (a payload-only estimate)
+    * fits under half the [[MaxBytesKey]] ceiling, `hint("shuffle_hash")`
+    * otherwise. The ceiling is read on every call. */
+  def admit(table: DataFrame, measuredBytes: Long, label: String): DataFrame = {
+    val effMax = table.sparkSession.conf
+      .get(MaxBytesKey, DefaultMaxBytes.toString).toLong / 2
+    if (measuredBytes <= effMax) broadcast(table)
     else {
-      System.err.println(f"[guard] $label dim ~${bytes / 1e9}%.2f GB " +
+      System.err.println(f"[guard] $label ~${measuredBytes / 1e9}%.2f GB " +
         f"payload > ceiling/2 ${effMax / 1e9}%.2f GB (payload-only " +
         "estimate vs halved ceiling; relation overhead runs 2-4x) - " +
-        "falling back to shuffle_hash join (the vocabulary-scaled shape)")
-      pinned.hint("shuffle_hash")
+        "falling back to shuffle_hash join")
+      table.hint("shuffle_hash")
     }
   }
 }

@@ -35,7 +35,7 @@ object Verify {
       // persist per round next to CORRECTNESS_r<N>.json so the no-oracle
       // greens are part of the committed round record, not just /tmp
       try {
-        val repo = Paths.get(sys.env.getOrElse("SPARK_GRAFT_REPO_DIR", "/root/repo"))
+        val repo = Paths.get(graft.sources.StandingIndex.repoRoot)
         val round = RoundStamp.round(repo)
         Files.writeString(repo.resolve(f"ACCURACY_r$round%02d.json"),
           graft.Accuracy.toJson(acc))

@@ -27,6 +27,10 @@ import graft.vector.VectorFunctions
   * pairs are deduplicated to bare id pairs; at 64-dim×8 B a vector is
   * ~0.5 KB, so shuffling it once per duplicate band hit would multiply
   * exchange volume by orders of magnitude for zero information.
+  *
+  * The one measured broadcast here — [[lshTopKBounded]]'s re-rank query
+  * side — is admitted by [[graft.BroadcastGuard.admit]] against the
+  * engine's one ceiling, like the vocabulary dims.
   */
 object Ann {
 
@@ -38,23 +42,6 @@ object Ann {
     * ([[graft.plans.GroupTopK.DefaultMaxBufferedRows]], 4M) stays
     * tuned for the mid-size finals every other GroupTopK user has. */
   val AnnTopKBudget: Long = 1L * 1024 * 1024
-
-  /** Ceiling on the query-vector broadcast in [[lshTopKBounded]]'s
-    * re-rank (conf `spark.graft.ann.broadcastMaxBytes`, default 1 GiB —
-    * conservative vs Spark's 8 GB broadcast hard limit and typical
-    * driver headroom). The guard's size estimate is PAYLOAD-ONLY
-    * (rows·dim·8 B — it does not model the qid key, JVM object headers,
-    * or the BroadcastHashedRelation's hash array, which together run
-    * 2–4× the payload), so the estimate is compared against HALF this
-    * ceiling; size the conf for raw vector bytes and the safety factor
-    * absorbs the relation overhead. The re-rank contract is "shard the
-    * queries so the active query-vector table broadcasts"; when a
-    * caller exceeds the ceiling anyway, the join falls back to the
-    * shuffled-hash shape — slower (query vectors cross a qid exchange)
-    * but it degrades instead of dying on the broadcast/driver-memory
-    * cliff. */
-  val BroadcastMaxBytesKey = "spark.graft.ann.broadcastMaxBytes"
-  val DefaultBroadcastMaxBytes: Long = 1L << 30
 
   /** 64-bit SRP signature of a vector column — a single native
     * expression (see [[graft.expressions.SrpSignature]] for why it must
@@ -107,6 +94,16 @@ object Ann {
     explodeBands(withSignatures(df, vecCol, dim, bits, numSigs, baseSeed),
       numSigs, bits, bands)
 
+  /** The top `k` of scored (qid, nid, cos_sim) rows per query, numbered
+    * by cosine descending with id tie-break (fully deterministic). */
+  private[graft] def rankTopK(scored: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy(col("qid"))
+      .orderBy(col("cos_sim").desc, col("nid"))
+    scored.withColumn("rk", row_number().over(w))
+      .filter(col("rk") <= k)
+      .select(col("qid"), col("nid"), col("cos_sim"), col("rk"))
+  }
+
   /** Exact top-k neighbors for each query row, ranked by cosine rounded
     * to 3 decimals with id tie-break (fully deterministic). */
   def bruteForceTopK(queries: DataFrame, candidates: DataFrame,
@@ -115,32 +112,12 @@ object Ann {
       VectorFunctions.asDouble(col(vecCol)).as("qv"))
     val c = candidates.select(col(idCol).as("nid"),
       VectorFunctions.asDouble(col(vecCol)).as("cv"))
-    val scored = broadcast(q).crossJoin(c)
+    rankTopK(broadcast(q).crossJoin(c)
       .filter(col("qid") =!= col("nid"))
-      .withColumn("cos_sim", VectorFunctions.cosineRounded(col("qv"), col("cv"), 3))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cos_sim").desc, col("nid"))
-    scored.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("qid"), col("nid"), col("cos_sim"), col("rk"))
+      .withColumn("cos_sim", VectorFunctions.cosineRounded(col("qv"), col("cv"), 3)),
+      k)
   }
 
-  /** IVF (inverted-file) approximate top-k: the corpus is partitioned
-    * into `nCells` Voronoi cells around centroid vectors; each query
-    * probes only its `nProbe` nearest cells, so the scored candidate set
-    * is ~(nProbe/nCells) of the corpus instead of all of it.
-    *
-    * Centroids here are a deterministic exemplar (the lowest `nCells`
-    * candidate ids); production would k-means them — centroid quality
-    * affects recall only, the index/search machinery is identical. The
-    * centroid table is the ONE deliberate driver round-trip (nCells×dim
-    * doubles — a small dim table broadcast inside a native expression,
-    * [[graft.expressions.TopCentroids]]), which makes cell assignment a
-    * map-side projection: the corpus is never shuffled to be indexed.
-    * Candidate generation then follows the same shuffle hygiene as
-    * [[lshTopK]]: (qid, nid, cell) ids through every exchange, vectors
-    * re-attached by broadcast joins afterward.
-    */
   /** Lloyd (k-means) refinement of IVF centroids, fully declarative:
     * assign each corpus vector to its nearest centroid map-side
     * ([[graft.expressions.TopCentroids]] — no shuffle to index), then
@@ -182,6 +159,32 @@ object Ann {
     cents
   }
 
+  /** IVF centroids of a (nid, cv) corpus: the lowest `nCells` ids seed
+    * [[refineCentroids]]; an empty corpus has no centroids. */
+  private[graft] def ivfCentroids(c: DataFrame, nCells: Int,
+                                  iterations: Int): Seq[Seq[Double]] = {
+    val seeds: Seq[Seq[Double]] = c.orderBy(col("nid")).limit(nCells)
+      .select(col("cv")).collect().map(_.getSeq[Double](0).toSeq).toSeq
+    if (seeds.isEmpty) Seq.empty
+    else refineCentroids(c.select(col("cv")), "cv", seeds, iterations)
+  }
+
+  /** IVF (inverted-file) approximate top-k: the corpus is partitioned
+    * into `nCells` Voronoi cells around centroid vectors; each query
+    * probes only its `nProbe` nearest cells, so the scored candidate set
+    * is ~(nProbe/nCells) of the corpus instead of all of it.
+    *
+    * Centroids are [[ivfCentroids]]: the lowest `nCells` candidate ids,
+    * Lloyd-refined — centroid quality affects recall only, the
+    * index/search machinery is identical. The
+    * centroid table is the ONE deliberate driver round-trip (nCells×dim
+    * doubles — a small dim table broadcast inside a native expression,
+    * [[graft.expressions.TopCentroids]]), which makes cell assignment a
+    * map-side projection: the corpus is never shuffled to be indexed.
+    * Candidate generation then follows the same shuffle hygiene as
+    * [[lshTopK]]: (qid, nid, cell) ids through every exchange, vectors
+    * re-attached by broadcast joins afterward.
+    */
   def ivfTopK(queries: DataFrame, candidates: DataFrame,
               idCol: String, vecCol: String, k: Int, dim: Int,
               nCells: Int = 16, nProbe: Int = 4,
@@ -191,9 +194,7 @@ object Ann {
       VectorFunctions.asDouble(col(vecCol)).as("qv"))
     val c = candidates.select(col(idCol).as("nid"),
       VectorFunctions.asDouble(col(vecCol)).as("cv"))
-    val seeds: Seq[Seq[Double]] = c.orderBy(col("nid")).limit(nCells)
-      .select(col("cv")).collect().map(_.getSeq[Double](0).toSeq).toSeq
-    val cents = refineCentroids(c.select(col("cv")), "cv", seeds, kmeansIters)
+    val cents = ivfCentroids(c, nCells, kmeansIters)
     val cellsC = c.select(col("nid"),
       element_at(topCentroids(col("cv"), cents, 1), 1).as("cell"))
     val probes = q.select(col("qid"),
@@ -202,15 +203,10 @@ object Ann {
       .filter(col("qid") =!= col("nid"))
       .select(col("qid"), col("nid"))
       .distinct()
-    val scored = c.join(broadcast(cand), "nid")
+    rankTopK(c.join(broadcast(cand), "nid")
       .join(broadcast(q), "qid")
       .withColumn("cos_sim", VectorFunctions.cosineRounded(col("qv"), col("cv"), 3))
-      .select(col("qid"), col("nid"), col("cos_sim"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cos_sim").desc, col("nid"))
-    scored.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("qid"), col("nid"), col("cos_sim"), col("rk"))
+      .select(col("qid"), col("nid"), col("cos_sim")), k)
   }
 
   /** Approximate top-k via SRP-LSH bucketing: same output shape as
@@ -226,80 +222,8 @@ object Ann {
     */
   def lshTopK(queries: DataFrame, candidates: DataFrame,
               idCol: String, vecCol: String, k: Int, dim: Int,
-              bits: Int = 64, bands: Int = 16): DataFrame = {
-    val q = queries.select(col(idCol).as("qid"),
-      VectorFunctions.asDouble(col(vecCol)).as("qv"))
-    val c = candidates.select(col(idCol).as("nid"),
-      VectorFunctions.asDouble(col(vecCol)).as("cv"))
-    val qb = withBandKeys(q, "qv", dim, bits, bands).select(col("qid"), col("bk"))
-    val cb = withBandKeys(c, "cv", dim, bits, bands).select(col("nid"), col("bk"))
-    val cand = qb.join(cb, "bk")
-      .filter(col("qid") =!= col("nid"))
-      .select(col("qid"), col("nid"))
-      .distinct()
-    val scored = c.join(broadcast(cand), "nid")
-      .join(broadcast(q), "qid")
-      .withColumn("cos_sim", VectorFunctions.cosineRounded(col("qv"), col("cv"), 3))
-      .select(col("qid"), col("nid"), col("cos_sim"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cos_sim").desc, col("nid"))
-    scored.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("qid"), col("nid"), col("cos_sim"), col("rk"))
-  }
-
-  /** IVF top-k for LARGE query sets — the cell-probe analog of
-    * [[lshTopKShuffled]]: cell assignment stays a map-side projection
-    * (the centroid table is tiny and lives inside the expression), but
-    * candidate generation and vector re-attachment are SHUFFLED hash
-    * joins keyed on (cell) and (qid/nid) — no broadcast of the
-    * candidate-pair table or the query side. */
-  def ivfTopKShuffled(queries: DataFrame, candidates: DataFrame,
-                      idCol: String, vecCol: String, k: Int, dim: Int,
-                      nCells: Int = 16, nProbe: Int = 4,
-                      kmeansIters: Int = 2): DataFrame = {
-    import graft.expressions.TopCentroidsExpression.topCentroids
-    val q = queries.select(col(idCol).as("qid"),
-      VectorFunctions.asDouble(col(vecCol)).as("qv"))
-    val c = candidates.select(col(idCol).as("nid"),
-      VectorFunctions.asDouble(col(vecCol)).as("cv"))
-    val seeds: Seq[Seq[Double]] = c.orderBy(col("nid")).limit(nCells)
-      .select(col("cv")).collect().map(_.getSeq[Double](0).toSeq).toSeq
-    val cents = refineCentroids(c.select(col("cv")), "cv", seeds, kmeansIters)
-    val cellsC = c.select(col("nid"),
-      element_at(topCentroids(col("cv"), cents, 1), 1).as("cell"))
-    val probes = q.select(col("qid"),
-      explode(topCentroids(col("qv"), cents, nProbe)).as("cell"))
-    val cand = probes.join(cellsC.hint("shuffle_hash"), "cell")
-      .filter(col("qid") =!= col("nid"))
-      .select(col("qid"), col("nid"))
-      .distinct()
-    val scored = cand.join(c.hint("shuffle_hash"), "nid")
-      .join(q.hint("shuffle_hash"), "qid")
-      .withColumn("cos_sim", VectorFunctions.cosineRounded(col("qv"), col("cv"), 3))
-      .select(col("qid"), col("nid"), col("cos_sim"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cos_sim").desc, col("nid"))
-    scored.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("qid"), col("nid"), col("cos_sim"), col("rk"))
-  }
-
-  /** SRP-LSH top-k for LARGE query sets (corpus-vs-corpus retrieval):
-    * identical banding and scoring to [[lshTopK]], but every join is a
-    * SHUFFLED hash join — when both sides are 100 TB-shaped, neither the
-    * query set nor the candidate-pair table fits in a broadcast. The
-    * band join co-partitions both sides on the band key; vectors then
-    * re-attach through hash joins keyed on the bare ids, so exchanges
-    * still carry (id, band) / (qid, nid) rows only and each side's
-    * vector payload moves at most once. The `shuffle_hash` hints pin the
-    * strategy so a small test fixture exercises the same plan the big
-    * run would get (and the plan spec can assert no BroadcastExchange).
-    */
-  def lshTopKShuffled(queries: DataFrame, candidates: DataFrame,
-                      idCol: String, vecCol: String, k: Int, dim: Int,
-                      bits: Int = 64, bands: Int = 16,
-                      numSigs: Int = 1): DataFrame = {
+              bits: Int = 64, bands: Int = 16,
+              numSigs: Int = 1): DataFrame = {
     val q = queries.select(col(idCol).as("qid"),
       VectorFunctions.asDouble(col(vecCol)).as("qv"))
     val c = candidates.select(col(idCol).as("nid"),
@@ -308,22 +232,18 @@ object Ann {
       .select(col("qid"), col("bk"))
     val cb = withBandKeys(c, "cv", dim, bits, bands, numSigs)
       .select(col("nid"), col("bk"))
-    val cand = qb.join(cb.hint("shuffle_hash"), "bk")
+    val cand = qb.join(cb, "bk")
       .filter(col("qid") =!= col("nid"))
       .select(col("qid"), col("nid"))
       .distinct()
-    val scored = cand.join(c.hint("shuffle_hash"), "nid")
-      .join(q.hint("shuffle_hash"), "qid")
+    rankTopK(c.join(broadcast(cand), "nid")
+      .join(broadcast(q), "qid")
       .withColumn("cos_sim", VectorFunctions.cosineRounded(col("qv"), col("cv"), 3))
-      .select(col("qid"), col("nid"), col("cos_sim"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cos_sim").desc, col("nid"))
-    scored.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("qid"), col("nid"), col("cos_sim"), col("rk"))
+      .select(col("qid"), col("nid"), col("cos_sim")), k)
   }
 
-  /** BOUNDED corpus-vs-corpus SRP-LSH top-k — [[lshTopKShuffled]] with
+  /** BOUNDED corpus-vs-corpus SRP-LSH top-k — the large-query-set path:
+    * [[lshTopK]]'s banding with shuffled band and corpus joins and
     * two deterministic caps that turn its Ω(q·n·γ) candidate space
     * (γ = band collision rate; the measured exponent-2.28 scale killer)
     * into O(q · numSigs·bands · maxBucket) work:
@@ -472,26 +392,17 @@ object Ann {
     // (explicit numPartitions ⇒ AQE does not coalesce it away); same
     // bytes through the exchange, no concurrent-map cliff.
     // r16: the fan-out is SIZED from the measured query count (the
-    // same count() the re-rank broadcast guard below already pays, so
-    // the sizing job is shared) instead of a pinned 256 — at sf0.1
+    // same count() the re-rank broadcast admission below uses, so the
+    // sizing job is shared) instead of a pinned 256 — at sf0.1
     // the constant spread 10 CPU-s of aggregation across 256 tasks
     // whose scheduling + GC cost 45 task-seconds (RunStages stage 18),
     // while at 30× it under-provisioned nothing. Target ~256k map
     // entries per final task (the collision bound is nQ·bands·
     // maxBucket rows), floored at the session's shuffle width and
-    // capped at 4096; the guard's opt-out path (no count available)
-    // keeps the old constant.
-    val spark = q.sparkSession
-    val bcastMax = spark.conf
-      .get(BroadcastMaxBytesKey, DefaultBroadcastMaxBytes.toString).toLong
-    val effMax = bcastMax / 2
-    val nQ = if (effMax >= Long.MaxValue / 4) -1L
-      else q.select(col("qid")).count()
-    val shuffleParts = spark.sessionState.conf.numShufflePartitions
-    val aggParts = if (nQ < 0) math.max(256, shuffleParts)
-      else math.max(shuffleParts,
-        math.min(4096L,
-          nQ * numSigs * bands * maxBucket / 262144L + 1L).toInt)
+    // capped at 4096.
+    val nQ = q.select(col("qid")).count()
+    val aggParts = math.max(q.sparkSession.sessionState.conf.numShufflePartitions,
+      math.min(4096L, nQ * numSigs * bands * maxBucket / 262144L + 1L).toInt)
     val cand = qb.join(cb.hint("shuffle_hash"), Seq("band", "key"))
       .filter(col("qid") =!= col("nid"))
       .select(col("qid"), col("nid"), ham.as("ham"))
@@ -518,29 +429,14 @@ object Ann {
     // the only post-score exchange carries ≤ 5 scalar rows per (qid,
     // partition) instead of all capped pairs.
     // broadcast() bypasses autoBroadcastJoinThreshold, so the contract
-    // needs its own guard: measure the query side (one column-pruned
-    // count job — negligible next to the band stages) and only
-    // broadcast when q·dim·8 B fits under HALF the configured ceiling
-    // (the estimate is payload-only; the halving absorbs the qid key +
-    // 2–4× BroadcastHashedRelation/JVM overhead it does not model, so a
-    // ceiling raised toward Spark's 8 GB hard limit still cannot be
-    // walked off the exact cliff the guard exists to prevent). Past it,
-    // the query attach degrades to the shuffled-hash shape — the
-    // pre-r10 plan: correct, vectors cross one qid exchange — instead
-    // of failing on the 8 GB broadcast / driver-memory cliff. When the
-    // ceiling is effectively unbounded (caller opted out of the guard),
-    // the sizing count() — which re-executes the unmaterialized query
-    // plan — is skipped entirely.
-    val qBytes = if (nQ < 0) 0L else nQ * dim * 8L
-    val qAttach = if (qBytes <= effMax) broadcast(q)
-      else {
-        System.err.println(f"[ann] re-rank query side ~${qBytes / 1e9}%.2f GB " +
-          f"payload > ceiling/2 ${effMax / 1e9}%.2f GB (payload-only " +
-          "estimate vs halved ceiling; relation overhead runs 2-4x) - " +
-          "falling back to shuffled query attach (shard the query set " +
-          "to restore the broadcast re-rank)")
-        q.hint("shuffle_hash")
-      }
+    // needs the guard: BroadcastGuard.admit broadcasts only when the
+    // measured q·dim·8 B payload fits under half the one ceiling. Past
+    // it, the query attach degrades to the shuffled-hash shape — the
+    // pre-r10 plan: correct, vectors cross one qid exchange (shard the
+    // query set to restore the broadcast re-rank) — instead of failing
+    // on the 8 GB broadcast / driver-memory cliff.
+    val qAttach = graft.BroadcastGuard.admit(q, nQ * dim * 8L,
+      "ann re-rank query side")
     val scored = capped.join(cVecs.hint("shuffle_hash"), "nid")
       .join(qAttach, "qid")
       .withColumn("cos_sim", VectorFunctions.cosineRounded(col("qv"), col("cv"), 3))

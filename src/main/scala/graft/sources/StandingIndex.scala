@@ -112,6 +112,9 @@ object StandingIndex {
     * published in the bench artifact's standing_index section. */
   val statsLog = new scala.collection.concurrent.TrieMap[String, Double]()
 
+  /** Where build state and run records are written: standing indexes,
+    * scale fixtures, stream benches, round artifacts. Specs read the
+    * checkout's own files from their working dir instead. */
   private[graft] def repoRoot: String =
     sys.env.getOrElse("SPARK_GRAFT_REPO_DIR", "/root/repo")
 
@@ -483,17 +486,6 @@ object StandingIndex {
     StructField("cv", ArrayType(DoubleType)),
     StructField("cell", IntegerType)))
 
-  /** Lloyd-refined centroids of `c` (nid, cv) — the same bounded driver
-    * round-trip the transient IVF path makes; empty corpus → empty. */
-  private def refineCents(c: DataFrame,
-                          iters: Int = KmeansIters): Seq[Seq[Double]] = {
-    val seeds: Seq[Seq[Double]] = c.orderBy(col("nid")).limit(NCells)
-      .select(col("cv")).collect().map(_.getSeq[Double](0).toSeq).toSeq
-    if (seeds.isEmpty) Seq.empty
-    else graft.similarity.Ann.refineCentroids(
-      c.select(col("cv")), "cv", seeds, iters)
-  }
-
   private def embCorpus(spark: SparkSession, d: String): DataFrame =
     Tables.embeddings(spark, d).select(col("vec_id").as("nid"),
       VectorFunctions.asDouble(col("embedding")).as("cv"))
@@ -524,7 +516,8 @@ object StandingIndex {
     val t = tag(d, "embeddings")
     val dir = built(s"$standingRoot/ivf_$t", s"ivf@$t") { dir =>
       val c = embCorpus(spark, d)
-      writeAnnGen(spark, c, refineCents(c), dir)
+      writeAnnGen(spark, c,
+        graft.similarity.Ann.ivfCentroids(c, NCells, KmeansIters), dir)
     }
     AnnIndex(s"$dir/centroids", s"$dir/assignments")
   }
@@ -551,7 +544,8 @@ object StandingIndex {
       built(root, s"$logTag-base") { dir =>
         val standing = embCorpus(spark, d).filter((col("nid") % 5).isin(1, 2))
         writeAnnGen(spark, standing,
-          refineCents(standing, KmeansItersAppended), dir)
+          graft.similarity.Ann.ivfCentroids(standing, NCells,
+            KmeansItersAppended), dir)
       }
       val g = currentGen(root).get
       loadMetaLogs(genDir(root, g), logTag)
@@ -666,7 +660,6 @@ object StandingIndex {
   private def annServeFrom(spark: SparkSession, idx: AnnIndex, d: String,
                            k: Int, nProbe: Int,
                            dedupPairs: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val q = Tables.embeddings(spark, d).filter(col("vec_id") < 10)
       .select(col("vec_id").as("qid"),
         VectorFunctions.asDouble(col("embedding")).as("qv"))
@@ -687,7 +680,7 @@ object StandingIndex {
       .collect().map(r => Integer.valueOf(r.getInt(0))).toSeq
     val hits = Layout.readPartitioned(spark, idx.assignments, assignSchema)
       .filter(col("cell").isin(cells: _*))
-    val scored0 = probes.join(hits, "cell")
+    val scored = probes.join(hits, "cell")
       .filter(col("qid") =!= col("nid"))
       .withColumn("cos_sim",
         VectorFunctions.cosineRounded(col("qv"), col("cv"), 3))
@@ -696,12 +689,8 @@ object StandingIndex {
     // probed cells — collapse the pair before ranking or the duplicate
     // steals a top-k slot; the distinct rides the qid exchange the
     // window needs anyway
-    val scored = if (dedupPairs) scored0.distinct() else scored0
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cos_sim").desc, col("nid"))
-    scored.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("qid"), col("nid"), col("cos_sim"), col("rk"))
+    graft.similarity.Ann.rankTopK(
+      if (dedupPairs) scored.distinct() else scored, k)
   }
 
   // ---- bounded SRP-LSH index (the q_ann_lsh_big corpus side) --------

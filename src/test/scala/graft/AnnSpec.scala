@@ -44,8 +44,7 @@ class AnnSpec extends SparkSuite {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.types.ArrayType
     // AQE off so EnsureRequirements-planned exchanges are inspectable
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    withConf("spark.sql.adaptive.enabled", "false") {
       val df = Ann.lshTopK(queries, emb, "vec_id", "embedding", 5, dim = 64)
       val exchanges = df.queryExecution.executedPlan.collect {
         case e: ShuffleExchangeExec => e
@@ -56,49 +55,7 @@ class AnnSpec extends SparkSuite {
         assert(arrays.isEmpty,
           s"shuffle carries array payloads: ${arrays.map(_.name).mkString(",")}")
       }
-    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
-  }
-
-  test("shuffled LSH (large query set): recall holds and NOTHING broadcasts") {
-    val qBig = emb.filter(col("vec_id") % 5 === 0)
-    val brute = Ann.bruteForceTopK(qBig, emb, "vec_id", "embedding", 5)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val df = Ann.lshTopKShuffled(qBig, emb, "vec_id", "embedding", 5, dim = 64)
-    val got = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val recall = (brute & got).size.toDouble / brute.size
-    assert(recall >= 0.7, s"recall $recall too low")
-    // the whole point of the variant: corpus-vs-corpus retrieval where
-    // neither side fits in a broadcast — the plan must be pure hash
-    // joins even though this fixture is tiny enough to auto-broadcast
-    val plan = df.queryExecution.executedPlan.toString
-    assert(!plan.contains("BroadcastExchange") &&
-           !plan.contains("BroadcastHashJoin"),
-      s"shuffled ANN variant must not broadcast either side:\n$plan")
-  }
-
-  test("shuffled LSH is row-identical to broadcast LSH (same banding)") {
-    // the two variants differ ONLY in physical join strategy; same
-    // signatures → same candidates → same scores → identical output
-    val qBig = emb.filter(col("vec_id") % 5 === 0)
-    val a = Ann.lshTopK(qBig, emb, "vec_id", "embedding", 5, dim = 64)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
-    val b = Ann.lshTopKShuffled(qBig, emb, "vec_id", "embedding", 5, dim = 64)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
-    assert(a == b, s"variants diverge: only-bcast=${a -- b} only-shuffled=${b -- a}")
-  }
-
-  test("shuffled IVF (large query set): recall holds and NOTHING broadcasts") {
-    val qBig = emb.filter(col("vec_id") % 5 === 0)
-    val brute = Ann.bruteForceTopK(qBig, emb, "vec_id", "embedding", 5)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val df = Ann.ivfTopKShuffled(qBig, emb, "vec_id", "embedding", 5, dim = 64)
-    val got = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val recall = (brute & got).size.toDouble / brute.size
-    assert(recall >= 0.5, s"recall $recall too low") // 16 cells, 4 probes
-    val plan = df.queryExecution.executedPlan.toString
-    assert(!plan.contains("BroadcastExchange") &&
-           !plan.contains("BroadcastHashJoin"),
-      s"shuffled IVF variant must not broadcast either side:\n$plan")
+    }
   }
 
   test("bounded LSH: caps above data size = identical to uncapped shuffled") {
@@ -106,7 +63,7 @@ class AnnSpec extends SparkSuite {
     // 16 sigs × 8 × 8-bit bands) so the only difference is the caps —
     // which must be no-ops when they exceed the data size
     val qBig = emb.filter(col("vec_id") % 5 === 0)
-    val a = Ann.lshTopKShuffled(qBig, emb, "vec_id", "embedding", 5,
+    val a = Ann.lshTopK(qBig, emb, "vec_id", "embedding", 5,
         dim = 64, bands = 8, numSigs = 16)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
     val b = Ann.lshTopKBounded(qBig, emb, "vec_id", "embedding", 5,
@@ -148,8 +105,7 @@ class AnnSpec extends SparkSuite {
     import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
     import org.apache.spark.sql.types.ArrayType
     val qBig = emb.filter(col("vec_id") % 5 === 0)
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    withConf("spark.sql.adaptive.enabled", "false") {
       val exec = Ann.lshTopKBounded(qBig, emb, "vec_id", "embedding",
         5, dim = 64).queryExecution.executedPlan
       // The REFINED shuffle contract (r10 re-rank rework): the only
@@ -179,7 +135,7 @@ class AnnSpec extends SparkSuite {
       assert(vectorCarrying.forall(_.output.size <= 2),
         "a vector may cross a shuffle only on a bare (id, vector) row:\n" +
           vectorCarrying.filter(_.output.size > 2).mkString("\n"))
-    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    }
   }
 
   test("bounded LSH: over-ceiling query side degrades to shuffled attach, " +
@@ -193,21 +149,18 @@ class AnnSpec extends SparkSuite {
     val qBig = emb.filter(col("vec_id") % 5 === 0)
     val bcast = Ann.lshTopKBounded(qBig, emb, "vec_id", "embedding", 5, dim = 64)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
-    spark.conf.set(Ann.BroadcastMaxBytesKey, "1")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      val df = Ann.lshTopKBounded(qBig, emb, "vec_id", "embedding", 5, dim = 64)
-      val bhj = df.queryExecution.executedPlan.collect {
-        case b: BroadcastHashJoinExec => b }
-      assert(bhj.isEmpty,
-        s"over-ceiling query side must not broadcast:\n${bhj.mkString("\n")}")
-      val got = df.collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
-      assert(got == bcast, s"fallback diverges: only-bcast=${bcast -- got} " +
-        s"only-shuffled=${got -- bcast}")
-    } finally {
-      spark.conf.unset(Ann.BroadcastMaxBytesKey)
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
+    withConf(BroadcastGuard.MaxBytesKey, "1") {
+      withConf("spark.sql.adaptive.enabled", "false") {
+        val df = Ann.lshTopKBounded(qBig, emb, "vec_id", "embedding", 5, dim = 64)
+        val bhj = df.queryExecution.executedPlan.collect {
+          case b: BroadcastHashJoinExec => b }
+        assert(bhj.isEmpty,
+          s"over-ceiling query side must not broadcast:\n${bhj.mkString("\n")}")
+        val got = df.collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
+        assert(got == bcast, s"fallback diverges: only-bcast=${bcast -- got} " +
+          s"only-shuffled=${got -- bcast}")
+      }
     }
   }
 

@@ -97,8 +97,7 @@ class BenchArtifactSpec extends AnyFunSuite {
   // the quarantine (which fails open). Skipped only if no round
   // artifact exists yet (fresh clone before any bench run).
   test("stats extraction reads a real round artifact") {
-    val repo = java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_REPO_DIR", "/root/repo"))
+    val repo = java.nio.file.Paths.get("").toAbsolutePath // the checkout
     val arts = Files.list(repo).iterator().asInstanceOf[java.util.Iterator[Path]]
     val real = {
       val buf = scala.collection.mutable.ArrayBuffer.empty[Path]

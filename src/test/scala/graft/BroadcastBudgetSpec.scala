@@ -18,12 +18,12 @@ class BroadcastBudgetSpec extends AnyFunSuite {
   /** Non-comment `broadcast(` call sites per file — the audited
     * inventory behind README's budget table. */
   private val Budget = Map(
-    "BroadcastGuard.scala" -> 2, // the guard's own two admission arms
+    "BroadcastGuard.scala" -> 1, // admit: the one measured admission
     "ScaleFixture.scala" -> 2, // factor-row replica index (bench tooling)
     "EventsStreaming.scala" -> 1, // stream-static dim enrichment
     "Prefix.scala" -> 3, // one row per bucket carries
     "Upsert.scala" -> 1, // batch key table (upsertSmallSource contract)
-    "Ann.scala" -> 6, // query/candidate tables + the guarded re-rank arm
+    "Ann.scala" -> 5, // few-query query/candidate tables
     "Analytics.scala" -> 6, // star dim, per-source/enum stats, frontier
     "LlmOps.scala" -> 7, // enum/global stats + kmeans centroids
     "Relational.scala" -> 6, // TPC-H dims (star-join contract)
@@ -89,8 +89,7 @@ class BroadcastBudgetSpec extends AnyFunSuite {
   }
 
   test("every forced-broadcast call site is budgeted in README's table") {
-    val repo = java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_REPO_DIR", "/root/repo"))
+    val repo = java.nio.file.Paths.get("").toAbsolutePath // the checkout
     val readme = new String(
       java.nio.file.Files.readAllBytes(repo.resolve("README.md")), "UTF-8")
     val header = "### Forced-broadcast budget"

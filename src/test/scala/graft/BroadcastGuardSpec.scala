@@ -12,16 +12,6 @@ import org.apache.spark.sql.functions._
   * as a driver OOM at scale. */
 class BroadcastGuardSpec extends SparkSuite {
 
-  private def withCeiling[T](bytes: Long)(f: => T): T = {
-    val prev = spark.conf.getOption(BroadcastGuard.MaxBytesKey)
-    spark.conf.set(BroadcastGuard.MaxBytesKey, bytes.toString)
-    try f
-    finally prev match {
-      case Some(v) => spark.conf.set(BroadcastGuard.MaxBytesKey, v)
-      case None => spark.conf.unset(BroadcastGuard.MaxBytesKey)
-    }
-  }
-
   private def fixture = {
     val fact = spark.range(1000)
       .select((col("id") % 50).cast("string").as("tok"), col("id").as("v"))
@@ -44,7 +34,7 @@ class BroadcastGuardSpec extends SparkSuite {
     val (fact, dim) = fixture
     val expected = fact.join(broadcast(dim), "tok")
       .collect().map(_.toString).sorted
-    withCeiling(16L) {
+    withConf(BroadcastGuard.MaxBytesKey, "16") {
       val guarded = fact.join(
         BroadcastGuard.dim(dim, length(col("tok")) + lit(8), "spec-dim"),
         "tok")
@@ -55,19 +45,6 @@ class BroadcastGuardSpec extends SparkSuite {
         s"oversized dim must NOT broadcast:\n$p")
       assert(guarded.collect().map(_.toString).sorted.sameElements(expected),
         "fallback join must be result-identical to the broadcast join")
-    }
-  }
-
-  test("opt-out ceiling skips the sizing pass (no checkpoint in the plan)") {
-    val (_, dim) = fixture
-    withCeiling(Long.MaxValue) {
-      val out = BroadcastGuard.dim(dim, length(col("tok")) + lit(8), "spec-dim")
-      // an unbounded ceiling must not execute the dim plan to size it:
-      // the returned plan is the original relation (no LogicalRDD from
-      // localCheckpoint), wrapped in the broadcast hint
-      val lp = out.queryExecution.analyzed.toString
-      assert(!lp.contains("LogicalRDD"),
-        s"opt-out must not checkpoint (= not execute) the dim plan:\n$lp")
     }
   }
 
@@ -115,7 +92,7 @@ class BroadcastGuardSpec extends SparkSuite {
     for (q <- Seq("q_bm25", "q_lm_surprisal", "q_tfidf")) {
       val base = SparkEntry.queries(q)(spark, sfDir)
         .collect().map(_.toString).sorted
-      val fallback = withCeiling(16L) {
+      val fallback = withConf(BroadcastGuard.MaxBytesKey, "16") {
         SparkEntry.queries(q)(spark, sfDir)
           .collect().map(_.toString).sorted
       }

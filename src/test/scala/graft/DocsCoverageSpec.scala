@@ -10,8 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class DocsCoverageSpec extends AnyFunSuite {
 
   test("every registered query is documented in README.md") {
-    val repo = java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_REPO_DIR", "/root/repo"))
+    val repo = java.nio.file.Paths.get("").toAbsolutePath // the checkout
     val readme = new String(
       java.nio.file.Files.readAllBytes(repo.resolve("README.md")), "UTF-8")
     val missing = SparkEntry.queries.keys.toSeq.sorted

@@ -18,16 +18,6 @@ import org.apache.spark.sql.functions._
   */
 class GraphFamilySpec extends SparkSuite {
 
-  private def withCeiling[T](bytes: Long)(f: => T): T = {
-    val prev = spark.conf.getOption(BroadcastGuard.MaxBytesKey)
-    spark.conf.set(BroadcastGuard.MaxBytesKey, bytes.toString)
-    try f
-    finally prev match {
-      case Some(v) => spark.conf.set(BroadcastGuard.MaxBytesKey, v)
-      case None => spark.conf.unset(BroadcastGuard.MaxBytesKey)
-    }
-  }
-
   test("edge set without pre-join dedup equals the old distinct->join->distinct") {
     val li = Tables.lineitem(spark, sfDir)
       .select(col("l_orderkey").as("ok"), col("l_partkey").cast("int").as("pk"))
@@ -80,7 +70,7 @@ class GraphFamilySpec extends SparkSuite {
     for (q <- Seq("q_triangles", "q_label_prop")) {
       val broadcastPath = SparkEntry.queries(q)(spark, sfDir)
         .collect().map(_.toString).sorted
-      val fallbackPath = withCeiling(16L) {
+      val fallbackPath = withConf(BroadcastGuard.MaxBytesKey, "16") {
         SparkEntry.queries(q)(spark, sfDir).collect().map(_.toString).sorted
       }
       assert(broadcastPath.sameElements(fallbackPath),

@@ -78,19 +78,9 @@ class MinHashSignatureSpec extends SparkSuite {
     def run() = Dedup.minhashSignatures(sh, K).collect()
       .map(r => r.getLong(0) -> (1 to K).map(r.getLong).toVector).toMap
     val key = "spark.sql.codegen.factoryMode"
-    val prev = spark.conf.getOption(key)
-    try {
-      spark.conf.set(key, "CODEGEN_ONLY")
-      val gen = run()
-      spark.conf.set(key, "NO_CODEGEN")
-      val interp = run()
-      assert(gen == interp)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
+    val gen = withConf(key, "CODEGEN_ONLY")(run())
+    val interp = withConf(key, "NO_CODEGEN")(run())
+    assert(gen == interp)
   }
 
   test("empty shingle array yields no signature row (explode semantics)") {

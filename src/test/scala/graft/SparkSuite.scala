@@ -15,4 +15,16 @@ trait SparkSuite extends AnyFunSuite {
     .getOrCreate()
 
   val sfDir = "/root/testdata/sf0.001"
+
+  /** `body` with session conf `key` set to `value`; afterwards the
+    * previous value is restored, or the key unset if it had none. */
+  def withConf[T](key: String, value: String)(body: => T): T = {
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body
+    finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
 }

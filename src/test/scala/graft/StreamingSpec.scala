@@ -478,8 +478,7 @@ class StreamingSpec extends SparkSuite {
       "batch serve") {
     import graft.streaming.{DocEvent, NearDupStream}
     implicit val sq = spark.sqlContext
-    val root = sys.env.getOrElse("SPARK_GRAFT_REPO_DIR", "/root/repo") +
-      "/target/streamtest/neardup"
+    val root = s"${graft.sources.StandingIndex.repoRoot}/target/streamtest/neardup"
     org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(root))
     // ground truth: the batch-mode serve of the SAME probe docs against
     // the same standing index
